@@ -1,20 +1,17 @@
-"""Benchmark harness (driver contract + scaling evidence).
+"""Benchmark harness: the headline query suite.
 
-Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
+Run the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
    "sf": ..., "rows": {...}}
 
---scaling: run the same workload in two subprocesses at local[8] and
-local[32] (the sandbox stand-in for N vs 4N executor clusters) and print
-throughput at both plus scaling efficiency; results belong in BASELINE.md.
+Conflation scaling across core counts is scripts/scaling_bench.py.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -116,98 +113,7 @@ def run_once(sf_dir: str, cpus: str) -> dict:
     }
 
 
-SCALING_N = int(os.environ.get("SPARK_GRAFT_SCALING_N", "2000000"))
-
-
-def run_scaling_job(cpus: str, n_images: int) -> dict:
-    """One compute-bound conflation run: n_images synthetic images × same-
-    size layer, full ladder (cell join → haversine refine → fuzzy hits →
-    windows), counting matched+new. No disk IO — measures the engine, not
-    the page cache. This is the north-rule job run at two cluster sizes."""
-    from pyspark.sql import functions as F
-
-    from osm_merge_spark.data.synth import synth_images, synth_layer
-    from osm_merge_spark.operators.conflate import ConflateParams, conflate
-    from osm_merge_spark.session import get_spark
-
-    spark = get_spark(
-        "osm-merge-spark-scaling", master=f"local[{cpus}]",
-        extra_conf={
-            "spark.sql.shuffle.partitions": str(int(cpus) * 4),
-            # heap sized to the thread count — a fixed 8g heap serializes
-            # 32 executor threads on GC, which reads as poor scaling
-            "spark.driver.memory": f"{max(8, int(cpus) * 2)}g",
-            # shuffle on tmpfs: the sandbox's single virtual disk is a
-            # shared-bandwidth resource identical at 8 and 32 threads —
-            # it measures the disk, not the engine. A real cluster has
-            # per-executor NVMe; tmpfs models that.
-            "spark.local.dir": "/dev/shm/spark-graft-shuffle",
-        },
-    )
-    images = synth_images(spark, n_images)
-    layer = synth_layer(spark, n_images)
-    # steady-state protocol: one warmup action (JIT + code cache), then
-    # min of N timed runs. Each rep builds a FRESH plan — re-counting the
-    # same DataFrame would silently reuse materialized shuffle outputs and
-    # measure only the post-shuffle suffix (verified in the event log).
-    n_matched = conflate(images, layer)[0].count()
-    walls = []
-    for _ in range(int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))):
-        matched, _new = conflate(images, layer)
-        t0 = time.perf_counter()
-        matched.count()
-        walls.append(time.perf_counter() - t0)
-    wall = min(walls)
-    return {
-        "cpus": cpus,
-        "n_images": n_images,
-        "matched": n_matched,
-        "wall_sec": round(wall, 3),
-        "all_walls": [round(w, 2) for w in walls],
-        "throughput_rows_per_sec": round(n_images / wall, 1),
-    }
-
-
-def run_scaling(sf_dir: str, levels: tuple[str, str] = ("8", "32")) -> dict:
-    """The SAME conflation job at two parallelism levels, each in a fresh
-    subprocess/JVM. Efficiency = (thr_hi / thr_lo) / (cores_hi / cores_lo).
-    sf_dir is unused: the job is the in-memory synthetic conflation (IO-free
-    so the ratio reflects compute scaling, the cluster-relevant quantity)."""
-    results = {}
-    for cpus in levels:
-        env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
-        cmd = [sys.executable, os.path.abspath(__file__), "--scaling-worker"]
-        if os.path.exists("/usr/bin/taskset"):
-            # pin the whole process tree (JVM GC threads, python workers,
-            # shuffle IO) to the advertised core budget — otherwise the
-            # "8-core cluster" silently borrows the other 24 physical
-            # cores for GC/driver work and the baseline is inflated
-            cmd = ["/usr/bin/taskset", "-c", f"0-{int(cpus) - 1}"] + cmd
-        out = subprocess.run(cmd, env=env, capture_output=True, text=True,
-                             check=True)
-        results[cpus] = json.loads(out.stdout.strip().splitlines()[-1])
-    lo, hi = levels
-    thr_lo = results[lo]["throughput_rows_per_sec"]
-    thr_hi = results[hi]["throughput_rows_per_sec"]
-    speedup = thr_hi / thr_lo
-    eff = speedup / (int(hi) / int(lo))
-    return {
-        "metric": "conflation throughput scaling local[%s] -> local[%s]" % (lo, hi),
-        "n_images": results[lo]["n_images"],
-        "runs": results,
-        "speedup": round(speedup, 3),
-        "cores_ratio": int(hi) / int(lo),
-        "scaling_efficiency": round(eff, 3),
-    }
-
-
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if "--scaling-worker" in sys.argv:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        print(json.dumps(run_scaling_job(cpus, SCALING_N)))
-    elif "--scaling" in sys.argv:
-        print(json.dumps(run_scaling(sf_dir)))
-    else:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        print(json.dumps(run_once(sf_dir, cpus)))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    print(json.dumps(run_once(sf_dir, cpus)))

@@ -194,23 +194,10 @@ def candidate_pairs_fused(
     s_key: str = "feature_id",
     s_xs: str = "xs",
     s_ys: str = "ys",
-    project_mercator: bool = False,
 ) -> DataFrame:
     """Shuffle-first candidate generation with ring-1 on the SECONDARY and
     BOTH geometry kinds in ONE join — the 100 TB formulation (no broadcast,
     no serial driver-side hash build; round-3 scaling fix).
-
-    project_mercator=True switches the build-row layout to the refine-
-    ready form: raw geometry arrays are REPLACED by (a) four bbox scalars
-    (bxmin/bxmax/bymin/bymax in degrees — for a point all four collapse to
-    its coordinate, so the caller's planar prefilter is one branch-free
-    range test for both kinds) and (b) __mxs/__mys, EPSG:3857-projected
-    line arrays (NULL for points), computed ONCE per feature BEFORE the
-    explode+shuffle — the exchange is a barrier CollapseProject cannot
-    cross, so the per-pair refine reads materialized arrays instead of
-    re-projecting per segment (the n=8M r2 incident) and line candidate
-    rows carry ONE array pair instead of two (measured: raw+merc arrays
-    riding the join stream was the fused path's dominant cost).
 
     Layout inversion vs candidate_pairs: the probe keeps its single raw
     cell (the big image stream is never exploded 9×), while the layer side
@@ -241,45 +228,21 @@ def candidate_pairs_fused(
             lambda c: grid.ring1(c),
         )))
     ).alias("__jcell")
-    if project_mercator:
-        from ..functions import geo
-
-        sec_pts = secondary.filter(F.size(s_xs) == 1).select(
-            F.col(s_key),
-            F.element_at(s_xs, 1).alias("bxmin"),
-            F.element_at(s_xs, 1).alias("bxmax"),
-            F.element_at(s_ys, 1).alias("bymin"),
-            F.element_at(s_ys, 1).alias("bymax"),
-            null_arr.alias("__mxs"),
-            null_arr.alias("__mys"),
-            pts_cell,
-        )
-        sec_lines = secondary.filter(F.size(s_xs) > 1).select(
-            F.col(s_key),
-            F.array_min(s_xs).alias("bxmin"),
-            F.array_max(s_xs).alias("bxmax"),
-            F.array_min(s_ys).alias("bymin"),
-            F.array_max(s_ys).alias("bymax"),
-            F.transform(F.col(s_xs), lambda x: geo.mercator_x(x)).alias("__mxs"),
-            F.transform(F.col(s_ys), lambda y: geo.mercator_y(y)).alias("__mys"),
-            lines_cell,
-        )
-    else:
-        sec_pts = secondary.filter(F.size(s_xs) == 1).select(
-            F.col(s_key),
-            F.element_at(s_xs, 1).alias("s_lon"),
-            F.element_at(s_ys, 1).alias("s_lat"),
-            null_arr.alias(s_xs),
-            null_arr.alias(s_ys),
-            pts_cell,
-        )
-        sec_lines = secondary.filter(F.size(s_xs) > 1).select(
-            F.col(s_key),
-            F.lit(None).cast("double").alias("s_lon"),
-            F.lit(None).cast("double").alias("s_lat"),
-            F.col(s_xs), F.col(s_ys),
-            lines_cell,
-        )
+    sec_pts = secondary.filter(F.size(s_xs) == 1).select(
+        F.col(s_key),
+        F.element_at(s_xs, 1).alias("s_lon"),
+        F.element_at(s_ys, 1).alias("s_lat"),
+        null_arr.alias(s_xs),
+        null_arr.alias(s_ys),
+        pts_cell,
+    )
+    sec_lines = secondary.filter(F.size(s_xs) > 1).select(
+        F.col(s_key),
+        F.lit(None).cast("double").alias("s_lon"),
+        F.lit(None).cast("double").alias("s_lat"),
+        F.col(s_xs), F.col(s_ys),
+        lines_cell,
+    )
     s = sec_pts.unionByName(sec_lines)
     # hint on the probe: it is the smaller, fixed-width side — its per-
     # partition hash map stays small while the exploded layer streams

@@ -8,9 +8,10 @@ version; primaries with no candidate become "new" features
 (conflator.py:318-325).
 
 Spark-first plan (one lazy DataFrame graph, no driver loops):
-    scan → cell encode → ring-1 explode → [broadcast | salted-shuffle] join
-    → exact distance refine (haversine / point→polyline) → fuzzy+ref gates
-    → window rank → matched/new split.
+    scan → cell encode → ring-1 explode → cell join (AQE picks broadcast
+    or shuffle; points and lines split by geometry) → exact distance refine
+    (haversine / point→polyline) → fuzzy+ref gates → top-5 cap (hash
+    aggregation) → one winner per image → matched/new split.
 
 Intentional, documented divergences from the reference implementation:
   - deterministic top-5 by distance instead of scan-order early exit
@@ -42,7 +43,6 @@ class ConflateParams:
     candidate_cap: int = 5        # conflator.py:262-267
     n_salt: int = cell_join.DEFAULT_SALT
     hot_threshold: int = cell_join.DEFAULT_HOT_THRESHOLD
-    use_indel_ratio: bool = True  # exact fuzz.ratio kernel vs native lev approx
 
 
 def point_polyline_dist_native(px, py, xs, ys) -> F.Column:
@@ -116,7 +116,7 @@ def score_hits(pairs: DataFrame, params: ConflateParams,
          + exact-geometry (dist == 0, conflator.py:229-234).
     """
     a, b = F.col(p_caption), F.col(s_caption)
-    ratio = (fuzzy.ratio_indel(a, b) if params.use_indel_ratio else fuzzy.ratio_lev(a, b))
+    ratio = fuzzy.ratio_indel(a, b)
     name_hit = (
         (F.col("ratio") > F.lit(params.fuzz_min))
         & (F.abs(F.length(a) - F.length(b)) <= F.lit(params.len_diff_max))
@@ -196,7 +196,6 @@ def suppress_identical(matched: DataFrame) -> DataFrame:
 
 def conflate(images: DataFrame, layer: DataFrame,
              params: ConflateParams = ConflateParams(),
-             broadcast_layer: bool | None = None,
              layer_is_points: bool = False,
              explode_multipart: bool = False) -> tuple[DataFrame, DataFrame]:
     """Run the full ladder. Returns (matched, new).
@@ -276,7 +275,6 @@ def conflate(images: DataFrame, layer: DataFrame,
         )
         pp = cell_join.candidate_pairs_points(
             p_slim, s_pts, grid,
-            broadcast_secondary=broadcast_layer,
             n_salt=params.n_salt, hot_threshold=params.hot_threshold,
         )
         pp = pp.filter(
@@ -297,7 +295,6 @@ def conflate(images: DataFrame, layer: DataFrame,
     def lines_refined(s_part: DataFrame) -> DataFrame:
         lp = cell_join.candidate_pairs(
             p_slim, s_part, grid,
-            broadcast_secondary=broadcast_layer,
             n_salt=params.n_salt, hot_threshold=params.hot_threshold,
             secondary_points=False,
         )
@@ -313,43 +310,7 @@ def conflate(images: DataFrame, layer: DataFrame,
             .select(*slim_cols)
         )
 
-    def fused_refined(s_part: DataFrame) -> DataFrame:
-        # shuffle-first (broadcast_layer=False): ring-1 on the LAYER side,
-        # both geometry kinds through ONE shuffle-hash join — no broadcast
-        # build (the serial driver floor both simulated cluster sizes paid
-        # identically, BASELINE.md §4.4), no pair-dedup aggregation (each
-        # pair meets in exactly one cell), probe scanned once.
-        pairs = cell_join.candidate_pairs_fused(
-            p_slim, s_part, grid, project_mercator=True
-        )
-        # branch-free bbox prefilter: for a point feature all four bbox
-        # scalars collapse to its coordinate, so one range test covers
-        # both geometry kinds (no when(), no array_min per pair)
-        pairs = pairs.filter(
-            (F.col("lat") >= F.col("bymin") - F.lit(deg))
-            & (F.col("lat") <= F.col("bymax") + F.lit(deg))
-            & (F.col("lon") >= F.col("bxmin") - deg_lon)
-            & (F.col("lon") <= F.col("bxmax") + deg_lon)
-        )
-        is_pt = F.col("__mxs").isNull()
-        point_d = geo.haversine_m(
-            F.col("lon"), F.col("lat"), F.col("bxmin"), F.col("bymin")
-        )
-        # __mxs/__mys were projected per FEATURE before the shuffle (the
-        # exchange is the CSE barrier), so the per-pair refine only reads
-        line_d = point_polyline_dist_native(
-            geo.mercator_x(F.col("lon")), geo.mercator_y(F.col("lat")),
-            F.col("__mxs"), F.col("__mys"),
-        ) * F.cos(F.radians(F.col("lat")))
-        return (
-            pairs.withColumn("dist_m", F.when(is_pt, point_d).otherwise(line_d))
-            .filter(F.col("dist_m") <= F.lit(params.threshold_m))
-            .select(*slim_cols)
-        )
-
-    if broadcast_layer is False:
-        refined = fused_refined(s_slim)
-    elif layer_is_points:
+    if layer_is_points:
         refined = points_refined(s_slim)
     else:
         # mixed layers split by geometry: point features (the vast
@@ -367,27 +328,12 @@ def conflate(images: DataFrame, layer: DataFrame,
             *[F.first(c).alias(c) for c in slim_cols
               if c not in ("image_id", "feature_id", "dist_m")],
         )
-    # top-5 cap: two formulations, both exact, relative cost re-measured
-    # each round (SPARK_GRAFT_CAP toggles; see BASELINE.md §4.5):
-    #   agg    — collect_list/array_sort/slice hash aggregation (r2 winner)
-    #   window — row_number over one exchange + per-partition sort.
-    #            An ISOLATED r3 micro-bench had window ahead, but in the
-    #            full ladder agg wins again at both 8 and 32 cores
-    #            (n=2M: 6.03 vs 6.66 s) — measure in context, not in
-    #            isolation (BASELINE.md §4.5)
-    import os as _os
-
-    cap_strategy = _os.environ.get("SPARK_GRAFT_CAP", "agg")
-    if cap_strategy == "window":
-        capped = knn.top_k(
-            refined, "image_id",
-            [F.asc("dist_m"), F.asc("feature_id")], params.candidate_cap,
-        )
-    else:
-        capped = knn.top_k_agg(
-            refined, "image_id", "dist_m", "feature_id", params.candidate_cap,
-            const_cols=["lon", "lat"] if p_has_tags else ["lon", "lat", "caption"],
-        )
+    # top-5 cap: collect_list/array_sort/slice hash aggregation — no
+    # window sort (BASELINE.md §4.5)
+    capped = knn.top_k_agg(
+        refined, "image_id", "dist_m", "feature_id", params.candidate_cap,
+        const_cols=["lon", "lat"] if p_has_tags else ["lon", "lat", "caption"],
+    )
     enriched = capped
     if p_has_tags:
         enriched = enriched.join(
@@ -398,12 +344,10 @@ def conflate(images: DataFrame, layer: DataFrame,
             "p_tags",
             F.map_from_arrays(F.array(F.lit("name")), F.array(F.col("caption"))),
         ).withColumn("p_ref", F.lit(None).cast("string"))
-    enrich_src = s.select("feature_id", "s_caption", "s_tags", "s_ref", "version")
-    if broadcast_layer is False:
-        # shuffle-first mode: the payload side shuffles in parallel instead
-        # of a driver-side broadcast hash build of every tag map
-        enrich_src = enrich_src.hint("SHUFFLE_HASH")
-    enriched = enriched.join(enrich_src, "feature_id")
+    enriched = enriched.join(
+        s.select("feature_id", "s_caption", "s_tags", "s_ref", "version"),
+        "feature_id",
+    )
     scored = score_hits(enriched, params)
     best = knn.best_candidate(scored, "image_id")
 

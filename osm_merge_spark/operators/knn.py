@@ -2,31 +2,16 @@
 
 The reference caps candidate lists at 5 (scan order — nondeterministic,
 conflator.py:262-267) then picks best by max hits / min distance
-(conflator.py:285-298). Spark-first: ranking windows with explicit
-deterministic tie-breaks (id ascending) — a documented semantic fix over
-the reference's scan-order dependence.
+(conflator.py:285-298). Spark-first: one aggregation per step with
+explicit deterministic tie-breaks (id ascending) — a documented semantic
+fix over the reference's scan-order dependence. top_k_agg caps,
+best_candidate picks the winner.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def top_k(pairs: DataFrame, partition_key: str, order_by: list[Column], k: int,
-          rank_col: str = "__rk") -> DataFrame:
-    """Keep the k best rows per partition_key (deterministic superset of the
-    reference's early-exit-at-5, T1).
-
-    Window/row_number formulation: one shuffle + a FULL sort of every pair
-    row. Kept for arbitrary order_by expressions; the hot conflation path
-    uses top_k_agg below (hash aggregation, no global sort)."""
-    w = Window.partitionBy(partition_key).orderBy(*order_by)
-    return (
-        pairs.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-        .drop(rank_col)
-    )
 
 
 def top_k_agg(pairs: DataFrame, partition_key: str, dist_col: str,
@@ -36,7 +21,7 @@ def top_k_agg(pairs: DataFrame, partition_key: str, dist_col: str,
     """Aggregation-based top-k: keep the k (dist, tie)-smallest rows per
     partition_key WITHOUT the row_number window's global sort.
 
-    The window formulation shuffles every pair row then SORTS entire
+    A row_number window shuffles every pair row then SORTS entire
     partitions just to keep k rows per key — measured as the worst-scaling
     stage of the conflation ladder (0.34 efficiency at 4× cores, BASELINE.md
     §4.3). This formulation instead hash-aggregates:
@@ -47,8 +32,8 @@ def top_k_agg(pairs: DataFrame, partition_key: str, dist_col: str,
     pre-collects per-key lists, so the shuffle carries one row per distinct
     key per map partition), per-group array_sort over the handful of
     candidates (avg ≈3 in the conflation workload), no SortExec anywhere.
-    Rows are identical to the window version because (dist, tie) is a total
-    order (tie = unique id) and struct comparison is lexicographic.
+    Rows are exactly the k (dist, tie)-smallest because (dist, tie) is a
+    total order (tie = unique id) and struct comparison is lexicographic.
 
     const_cols are columns functionally determined by partition_key (the
     probe point's lon/lat/caption) — carried via first() instead of bloating
@@ -96,71 +81,29 @@ def top_k_agg(pairs: DataFrame, partition_key: str, dist_col: str,
 
 
 def best_candidate(pairs: DataFrame, partition_key: str, hits_col: str = "hits",
-                   dist_col: str = "dist_m", tie_col: str = "feature_id",
-                   strategy: str | None = None) -> DataFrame:
+                   dist_col: str = "dist_m", tie_col: str = "feature_id") -> DataFrame:
     """Pick one winner per primary: max hits, then min distance, then id
     (J3; sort keys mirror hitsSort/distSort at conflator.py:72-84).
 
-    Two aggregation strategies, both shuffle-once, both exact (the ordering
-    struct (-hits, dist, tie) is a total order since tie is a unique id;
-    payload fields after the keys never affect comparison):
-
-      - "agg":   array_min(collect_list(struct(...))) — collect_list is a
-                 TypedImperativeAggregate → ObjectHashAggregate with
-                 map-side partials; never sorts.
-      - "minby": min_by(payload_struct, ordering_struct) — declarative,
-                 but a struct aggregation buffer disqualifies
-                 HashAggregate, so the plan is SortAggregate (sorts each
-                 shuffle partition by the group key).
-
-    The default is benchmark-picked via SPARK_GRAFT_BEST (fallback
-    "minby"); both are kept because their relative cost flips with row
-    width — measure before changing. All non-key columns must be orderable
-    (no maps) — re-join map-typed payloads onto the winners afterwards
-    (N rows, not k·N)."""
-    import os
-
-    strategy = strategy or os.environ.get("SPARK_GRAFT_BEST", "minby")
+    min_by(payload_struct, ordering_struct) over one shuffle — exact,
+    because the ordering (-hits, dist, tie) is a total order (tie is a
+    unique id). The struct aggregation buffer disqualifies HashAggregate,
+    so the plan is SortAggregate (sorts each shuffle partition by the
+    group key). All non-key columns must be orderable (no maps) — re-join
+    map-typed payloads onto the winners afterwards (N rows, not k·N)."""
     out_cols = [c for c in pairs.columns if c != partition_key]
-    if strategy == "minby":
-        ordering = F.struct(
-            (-F.col(hits_col)).alias("__nh"),
-            F.col(dist_col).alias("__d"),
-            F.col(tie_col).alias("__t"),
-        )
-        return (
-            pairs.groupBy(partition_key)
-            .agg(F.min_by(F.struct(*[F.col(c) for c in out_cols]),
-                          ordering).alias("__b"))
-            .select(partition_key,
-                    *[F.col(f"__b.{c}").alias(c) for c in out_cols])
-        )
-    payload = [c for c in pairs.columns
-               if c not in (partition_key, hits_col, dist_col, tie_col)]
-    sort_struct = F.struct(
+    ordering = F.struct(
         (-F.col(hits_col)).alias("__nh"),
-        F.col(dist_col),
-        F.col(tie_col),
-        *[F.col(c) for c in payload],
+        F.col(dist_col).alias("__d"),
+        F.col(tie_col).alias("__t"),
     )
-
-    def restore(c: str) -> Column:
-        if c == hits_col:
-            return (-F.col("__b.__nh")).alias(hits_col)
-        return F.col(f"__b.{c}").alias(c)
-
     return (
         pairs.groupBy(partition_key)
-        .agg(F.array_min(F.collect_list(sort_struct)).alias("__b"))
-        .select(partition_key, *[restore(c) for c in out_cols])
+        .agg(F.min_by(F.struct(*[F.col(c) for c in out_cols]),
+                      ordering).alias("__b"))
+        .select(partition_key,
+                *[F.col(f"__b.{c}").alias(c) for c in out_cols])
     )
-
-
-def knn(pairs: DataFrame, partition_key: str, dist_col: str, k: int,
-        tie_col: str = "feature_id") -> DataFrame:
-    """Plain k-nearest-neighbors per primary over refined distances
-    (the POI path's ORDER BY ST_Distance, conflatePOI.py:318)."""
-    return top_k(pairs, partition_key, [F.asc(dist_col), F.asc(tie_col)], k)
 
 
 def knn_unbounded(primary: DataFrame, secondary: DataFrame, k: int,

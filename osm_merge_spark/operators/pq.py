@@ -10,9 +10,9 @@ Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor Search"
 the topology instead of 256 float bytes.
 
 Spark-first shape:
-  - ENCODE is a pure projection: the per-subspace argmin over K centroids
-    compiles to an `aggregate` fold over a struct array — one codegen'd
-    expression per row, no shuffle, no Python.
+  - ENCODE is a pure projection: an Arrow-batched numpy UDF takes the
+    per-subspace argmin over K centroids — no shuffle, vectorized over
+    rows and centroids.
   - ADC SCORING broadcasts the (tiny) query side; each query row carries
     its precomputed M×K lookup table as a nested array expression, and the
     per-pair score is M array lookups + adds. The corpus codes are scanned
@@ -67,17 +67,16 @@ def codebook(m: int = M_SUB, k: int = K_CODES, dsub: int = D_SUB,
 
 
 def pq_train(emb: DataFrame, vec_col: str = "embedding",
-             sample: int = 4096, iters: int = 8,
-             seedbook: list[list[list[float]]] | None = None):
+             sample: int = 4096, iters: int = 8):
     """Offline codebook training, the way FAISS does it: k-means per
     subspace on a driver-side SAMPLE (only `sample`×64 floats ever leave
     the executors — at 10^12 vectors the sample is still tiny). Returns a
-    plain nested list ready to pass as literals to pq_encode/pq_adc_topk."""
+    plain nested list ready to pass as literals to pq_encode_udf/pq_adc_topk."""
     import numpy as np
 
     rows = emb.select(vec_col).limit(sample).collect()
     x = np.array([r[0] for r in rows], dtype=np.float64)
-    cb = np.array(seedbook if seedbook is not None else codebook())
+    cb = np.array(codebook())
     for mi in range(M_SUB):
         sub = x[:, mi * D_SUB:(mi + 1) * D_SUB]
         cents = cb[mi]
@@ -93,27 +92,18 @@ def pq_train(emb: DataFrame, vec_col: str = "embedding",
 
 
 # --- encode ------------------------------------------------------------------
-# Two implementations, bit-identical by construction:
-#   pq_encode      — Catalyst expression (fold-of-structs argmin). This is
-#                    the oracle-shaped reference; Spark evaluates
-#                    higher-order array functions INTERPRETED, measured
-#                    ~1.5 ms/row·core — fine for correctness runs, wrong
-#                    for the scale path. (A flat +/least/CASE rewrite was
-#                    measured 4-6× WORSE: the CASE ladder re-evaluates
-#                    every distance and the >64 KB method bails out of
-#                    codegen — both variants recorded in BASELINE.md.)
-#   pq_encode_udf  — Arrow-batched numpy, the production path (what FAISS
-#                    does with BLAS): vectorized over rows and centroids,
-#                    SEQUENTIAL over the 8 dims with `+=` so the float
-#                    accumulation is exactly the 0.0-seeded left fold of
-#                    the Catalyst/SQL forms (numpy's own .sum() does
-#                    pairwise summation — different rounding, so it is NOT
-#                    used); np.argmin takes the first minimum, matching
-#                    the fold's strict-< rule. tests/test_pq.py pins
-#                    UDF == Catalyst == numpy reference equality.
+# pq_encode_udf is Arrow-batched numpy (what FAISS does with BLAS):
+# vectorized over rows and centroids, SEQUENTIAL over the 8 dims with `+=`
+# so the float accumulation is exactly the 0.0-seeded left fold of the SQL
+# mirror (numpy's own .sum() does pairwise summation — different rounding,
+# so it is NOT used); np.argmin takes the first minimum, matching the SQL
+# fold's strict-< rule. An interpreted Catalyst fold of the same argmin
+# measured 18.5 s against 0.94 s for this encoder. tests/test_pq.py pins
+# UDF == numpy reference equality; the DuckDB oracle checks the codes.
 def _sub_dist(vec: Column, mi: int, cent: list[float]) -> Column:
     """||vec_sub(mi) - cent||²: 0.0-seeded left fold over the 8 dims (the
-    exact order the SQL mirror and the UDF reproduce)."""
+    exact order the SQL mirror and the UDF reproduce) — builds the ADC
+    lookup table."""
     carr = F.array(*[F.lit(c) for c in cent])
 
     def term(d: Column) -> Column:
@@ -137,26 +127,6 @@ def _sub_dist_sql(vec: str, mi: int, cent: list[float]) -> str:
         f" list_transform(range(1, {D_SUB} + 1), d -> {v} * {v})),"
         " (acc, t) -> acc + t)"
     )
-
-
-def pq_encode(vec: Column, cb: list[list[list[float]]]) -> Column:
-    """array<int> of M_SUB 0-based codes: per-subspace argmin centroid.
-    Strict `<` in the fold keeps the FIRST minimal index on exact ties —
-    deterministic and engine-identical (both sides fold left-to-right)."""
-    codes = []
-    for mi in range(M_SUB):
-        structs = F.array(*[
-            F.struct(_sub_dist(vec, mi, cent).alias("d"),
-                     F.lit(c).alias("i"))
-            for c, cent in enumerate(cb[mi])
-        ])
-        best = F.aggregate(
-            structs,
-            F.struct(F.lit(float("inf")).alias("d"), F.lit(-1).alias("i")),
-            lambda acc, x: F.when(x["d"] < acc["d"], x).otherwise(acc),
-        )
-        codes.append(best["i"])
-    return F.array(*codes)
 
 
 def np_encode_block(x, cb):
@@ -224,19 +194,16 @@ def _adc_lut(qvec: Column, cb: list[list[list[float]]]) -> Column:
 def pq_adc_topk(emb: DataFrame, queries: DataFrame,
                 cb: list[list[list[float]]], k: int = 5,
                 id_col: str = "vec_id", vec_col: str = "embedding",
-                qid_col: str = "qid", qvec_col: str = "qvec",
-                use_udf: bool = True) -> DataFrame:
+                qid_col: str = "qid", qvec_col: str = "qvec") -> DataFrame:
     """Top-k by ADC distance (ascending, nid-asc ties). queries:
     (qid, qvec), broadcast. The corpus ships only (id, M codes) into the
-    join — the full vectors never leave their scan. use_udf selects the
-    vectorized Arrow encoder (default, the scale path) vs the pure
-    Catalyst expression; both produce identical codes."""
+    join — the full vectors never leave their scan; codes come from the
+    vectorized Arrow encoder."""
     from ..functions.barrier import eval_once
 
-    enc = (pq_encode_udf(cb)(F.col(vec_col)) if use_udf
-           else pq_encode(F.col(vec_col), cb))
     coded = eval_once(
-        emb.select(F.col(id_col).alias("nid"), enc.alias("code")),
+        emb.select(F.col(id_col).alias("nid"),
+                   pq_encode_udf(cb)(F.col(vec_col)).alias("code")),
         ["code"],
     )
     q = eval_once(

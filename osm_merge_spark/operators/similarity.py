@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geo import dlit
@@ -76,29 +76,20 @@ def cosine_sql(a: str, b: str, dim: int) -> str:
 # brute-force top-k
 # ---------------------------------------------------------------------------
 def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                strategy: str | None = None) -> DataFrame:
+                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     queries: (qid, qvec). Broadcast the (small) query side — every executor
     scans its local embedding partitions once; only the per-qid top-k
-    selection shuffles. Two selection strategies, identical rows (the
-    ordering (-cos, nid) is a total order since nid is unique):
-
-      - "agg" (default): groupBy(qid).agg(slice(array_sort(collect_list(
-        struct(-cos, nid))), 1, k)) → ObjectHashAggregate; no SortExec, no
-        window machinery — the formulation the conflation ladder's top-5
-        proved out (knn.top_k_agg; r3 verdict item #2). The shuffle carries
-        16-byte (negcos, nid) structs only.
-      - "window": row_number over (qid | cos DESC, nid) — relies on
-        WindowGroupLimit's map-side partial limit to cut the shuffle to
-        k·partitions rows per qid. Kept measurable via SPARK_GRAFT_TOPK.
+    selection shuffles. Selection is groupBy(qid).agg(slice(array_sort(
+    collect_list(struct(-cos, nid))), 1, k)) → ObjectHashAggregate; no
+    SortExec, no window machinery — the formulation the conflation
+    ladder's top-5 proved out (knn.top_k_agg). The shuffle carries 16-byte
+    (negcos, nid) structs only, and (-cos, nid) is a total order since nid
+    is unique.
     """
-    import os
-
     from ..functions.barrier import eval_once
 
-    strategy = strategy or os.environ.get("SPARK_GRAFT_TOPK", "agg")
     # precompute each side's norm ONCE (N + Q evaluations) instead of
     # folding both norms again for every one of the N·Q pairs
     n_side = eval_once(
@@ -114,25 +105,14 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     scored = pairs.withColumn(
         "cos", _dot(F.col("qvec"), F.col("nvec")) / (F.col("qn") * F.col("nn"))
     )
-    return _topk_by_cos(scored, k, strategy)
+    return _topk_by_cos(scored, k)
 
 
-def _topk_by_cos(scored: DataFrame, k: int, strategy: str) -> DataFrame:
-    """Per-qid (cos DESC, nid ASC) top-k over (qid, nid, cos) rows — rows
-    identical across strategies because (-cos, nid) is a total order."""
-    if strategy == "window":
-        w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "qid", "nid", F.col("rank").cast("int").alias("rank"),
-                F.round("cos", 6).alias("cos"),
-            )
-        )
-    # agg: ascending struct (-cos, nid) == (cos DESC, nid ASC); the double
-    # negation is a sign-bit flip, bit-exact, so round(-nc, 6) matches the
-    # window path's round(cos, 6)
+def _topk_by_cos(scored: DataFrame, k: int) -> DataFrame:
+    """Per-qid (cos DESC, nid ASC) top-k over (qid, nid, cos) rows."""
+    # ascending struct (-cos, nid) == (cos DESC, nid ASC); the double
+    # negation is a sign-bit flip, bit-exact, so round(-nc, 6) equals the
+    # oracle's round(cos, 6)
     agg = (
         scored.select(
             "qid", F.struct((-F.col("cos")).alias("nc"), F.col("nid")).alias("c")
@@ -173,22 +153,6 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
         d = _dot(vec, arr)
         sig = sig + F.when(d >= F.lit(0.0), F.lit(1 << b)).otherwise(F.lit(0))
     return sig
-
-
-def lsh_signature_sql(vec: str, planes: list[list[float]]) -> str:
-    parts = []
-    for b, row in enumerate(planes):
-        arr = "[" + ", ".join(dlit(x) for x in row) + "]"
-        d = (
-            "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-            f" list_transform(range(1, {len(row) + 1}),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * ({arr})[i])), (x, y) -> x + y)"
-        )
-        parts.append(
-            f"(CASE WHEN {d} >= {dlit(0.0)} THEN CAST({1 << b} AS BIGINT)"
-            " ELSE 0 END)"
-        )
-    return "(" + " + ".join(parts) + ")"
 
 
 # ---------------------------------------------------------------------------
@@ -276,10 +240,10 @@ def ivf_search(assigned: DataFrame, centroids, queries: DataFrame,
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"), "cluster"
     ).join(F.broadcast(probes), "cluster").filter(F.col("qid") != F.col("nid"))
     scored = cand.withColumn("cos", cosine(F.col("qvec"), F.col("nvec")))
-    # same hash-agg top-k as cosine_topk's default: no WindowExec/SortExec
+    # same hash-agg top-k as cosine_topk: no WindowExec/SortExec
     # in the post-probe selection, the shuffle carries (negcos, nid)
     # structs only (r4 verdict item #2: share the agg path)
-    return _topk_by_cos(scored, k, "agg")
+    return _topk_by_cos(scored, k)
 
 
 def lsh_bits(vec: Column, planes: list[list[float]]) -> Column:
@@ -492,29 +456,14 @@ def _doti_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def cosine_q8(qa: Column, qb: Column) -> Column:
-    """Cosine of the QUANTIZED vectors (per-vector scales cancel out of the
-    normalized form, so they are not needed at score time — only the int8
-    arrays travel through the join)."""
-    return _doti(qa, qb).cast("double") / (
-        F.sqrt(_doti(qa, qa).cast("double"))
-        * F.sqrt(_doti(qb, qb).cast("double"))
-    )
-
-
 def q8_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            strategy: str | None = None) -> DataFrame:
+            id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k under the SQ8 scorer: quantize both sides, broadcast the
-    (small) query side, integer dots per pair, per-qid top-k (same two
-    selection strategies as cosine_topk; default agg — no window sort). The
-    corpus side carries ONLY (id, int8 array, norm) through the join — the
-    float vectors never leave their scan."""
-    import os
-
+    (small) query side, integer dots per pair, per-qid top-k (the same
+    hash-aggregate selection as cosine_topk — no window sort). The corpus
+    side carries ONLY (id, int8 array, norm) through the join — the float
+    vectors never leave their scan."""
     from ..functions.barrier import eval_once
-
-    strategy = strategy or os.environ.get("SPARK_GRAFT_TOPK", "agg")
 
     def _q(df: DataFrame, idc: str, vecc: str, pre: str) -> DataFrame:
         qv, _ = quantize8(F.col(vecc))
@@ -535,4 +484,4 @@ def q8_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
         _doti(F.col("qq"), F.col("nq")).cast("double")
         / (F.col("qn") * F.col("nn")),
     )
-    return _topk_by_cos(scored, k, strategy)
+    return _topk_by_cos(scored, k)

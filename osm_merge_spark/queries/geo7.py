@@ -300,14 +300,18 @@ def hull_of_cells(cells: DataFrame) -> DataFrame:
     p = pts.select(F.col("tx").alias("px"), F.col("ty").alias("py"))
     q = pts.select(F.col("tx").alias("qx"), F.col("ty").alias("qy"))
     r = pts.select(F.col("tx").alias("rx"), F.col("ty").alias("ry"))
-    pairs = p.crossJoin(q).where(
+    # q and r hold <= 2*|y-lattice| rows: broadcast them, so the plan is a
+    # BroadcastNestedLoopJoin whatever size Spark estimates for the cached
+    # image table (without the hint it plans a CartesianProduct until that
+    # table has been materialized)
+    pairs = p.crossJoin(F.broadcast(q)).where(
         (F.col("px") != F.col("qx")) | (F.col("py") != F.col("qy"))
     )
     cross = (F.col("qx") - F.col("px")) * (F.col("ry") - F.col("py")) - (
         F.col("qy") - F.col("py")
     ) * (F.col("rx") - F.col("px"))
     hull = (
-        pairs.crossJoin(r)
+        pairs.crossJoin(F.broadcast(r))
         .groupBy("px", "py", "qx", "qy")
         .agg(F.min(cross).alias("mn"))
         .where(F.col("mn") >= 0)
@@ -966,8 +970,8 @@ QUERIES["dbscan_label"] = (q_dbscan_label, _sql_dbscan_label())
 # Scale shape: the corpus collapses to ≤|raster| rows in ONE map-side-
 # combined hash agg (the only corpus-scale stage); the rank window then
 # runs on a RASTER-BOUNDED table — bound pinned by
-# tests/test_dbscan.py::test_coverage_gini_raster_bound, the same
-# bounded-window waiver discipline as hull_cells — and the final Gini is
+# tests/test_dbscan.py::test_coverage_gini_raster_bound_and_range, the same
+# lattice-bound discipline as hull_cells — and the final Gini is
 # a 1-row agg. Nothing corpus-scale sorts, joins, or broadcasts.
 # ---------------------------------------------------------------------------
 GINI_TILE_M = 2000.0

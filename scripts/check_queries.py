@@ -1,6 +1,7 @@
 """Spot-check named queries()/oracle_sql() entries against DuckDB at a given
-sf dir — the same canonicalization as tests/test_oracle_parity.py, runnable
-for a subset without the whole pytest session.
+sf dir — the DuckDB views and canonicalization of
+tests/test_oracle_parity.py, runnable for a subset without the whole
+pytest session.
 
 Usage: python scripts/check_queries.py [--sf /root/testdata/sf0.01] q1 q2 ...
 """
@@ -10,26 +11,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract  # noqa: E402
 from osm_merge_spark.session import get_spark  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), ignore_index=True)
+from tests.test_oracle_parity import canon, duck_views  # noqa: E402
 
 
 def main() -> int:
@@ -42,11 +28,7 @@ def main() -> int:
     qs, os_ = contract.queries(), contract.oracle_sql()
     names = args or sorted(qs)
     spark = get_spark("check-queries")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = duck_views(sf_dir)
     failed = []
     for name in names:
         try:

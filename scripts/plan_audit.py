@@ -6,6 +6,9 @@ keys), CartesianProduct, and count Exchanges / Sorts / broadcast joins.
 This is the tool that caught the banded-join SMJ (fixed with shuffle_hash
 hints — BASELINE.md §5.9); run it after adding any join.
 
+Exits non-zero on any unwaived flag and on any WAIVED entry whose flag no
+longer fires for an audited query.
+
 Usage: python scripts/plan_audit.py [--sf /root/testdata/sf0.01] [names...]
 """
 
@@ -23,12 +26,9 @@ from osm_merge_spark.session import get_spark  # noqa: E402
 # Named waivers: queries whose flagged construct is PROVEN bounded by a
 # data-independent quantity (each must cite the pinning test). A waiver is
 # not an exemption from review — the audit still prints the flag, it just
-# doesn't count it against the run.
+# doesn't count it against the run. A waiver whose flag no longer fires is
+# dead and fails the run until it is removed here.
 WAIVED = {
-    # lattice-bounded cartesian over row-extreme candidates: ≤ 2·|y-lattice|
-    # rows (NOT corpus rows) feed the all-triples test — bound pinned by
-    # tests/test_hull_cells.py::test_candidate_bound_is_lattice_not_corpus
-    "hull_cells": "CARTESIAN",
     # rank window over the per-tile count table: input is raster-bounded
     # (≤ box-area/tile² cells, NOT corpus rows) — bound pinned by
     # tests/test_dbscan.py::test_coverage_gini_raster_bound_and_range
@@ -47,6 +47,7 @@ def main() -> int:
     qs = contract.queries()
     names = args or sorted(qs)
     flagged = 0
+    dead = []
     for name in names:
         try:
             plan = (
@@ -73,12 +74,16 @@ def main() -> int:
         waived = flags.strip() and WAIVED.get(name) == flags.strip()
         if (smj or cart or nopart) and not waived:
             flagged += 1
+        if name in WAIVED and not waived:
+            dead.append(name)
         if waived:
             flags += "(waived: bounded, see WAIVED)"
         print(f"{name:24s} exchanges={n_ex} sorts={n_sort}"
               f" bcast={n_bc} {flags}")
     print(f"\n{flagged} flagged / {len(names)} audited")
-    return 1 if flagged else 0
+    if dead:
+        print(f"dead waivers (flag no longer fires): {', '.join(dead)}")
+    return 1 if flagged or dead else 0
 
 
 if __name__ == "__main__":

@@ -65,24 +65,7 @@ def _worker(args) -> None:
 
     def run() -> tuple[float, int]:
         t0 = time.time()
-        # Default SPARK_GRAFT_BCAST=true → explicit layer broadcast (the
-        # bench layer fits executor memory at every bench n — the same
-        # decision a real deployment makes from its table stats; static
-        # estimates overshoot and AQE can only convert after the probe
-        # shuffle is paid). The r3 A/B on identical input (n=8M, same
-        # day, BASELINE.md §4.5) measured broadcast 69.8/27.9 s (8/32
-        # cores) vs fused-shuffle 65.7/39.7 s: the fused path's extra
-        # shuffled bytes hit the ONE shared memory bus hardest exactly at
-        # 32 threads, so removing the ~3 s serial broadcast floor LOWERED
-        # end-to-end efficiency (0.62 → 0.41). Fused remains the only
-        # formulation at 10^12-row layer scale (broadcast can't exist) —
-        # "false" keeps it measurable; it already wins the
-        # bandwidth-unsaturated 8-core leg.
-        bcast = {"true": True, "false": False, "auto": None}[
-            os.environ.get("SPARK_GRAFT_BCAST", "true")
-        ]
-        matched, _ = conflate(images, layer, ConflateParams(),
-                              broadcast_layer=bcast)
+        matched, _ = conflate(images, layer, ConflateParams())
         n_out = matched.count()
         return time.time() - t0, n_out
 

@@ -85,20 +85,21 @@ def data(spark):
     return ([r.asDict() for r in images], [r.asDict() for r in layer])
 
 
-def _run_engine(spark, broadcast):
+def _run_engine(spark):
     images = synth.synth_images(spark, N_IMAGES)
     layer = synth.synth_layer(spark, N_IMAGES)
-    matched, new = conflate(images, layer, PARAMS, broadcast_layer=broadcast)
+    matched, new = conflate(images, layer, PARAMS)
     got_m = {r["image_id"]: (r["feature_id"], r["hits"]) for r in matched.collect()}
     got_new = {r["image_id"] for r in new.collect()}
     return got_m, got_new
 
 
-@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "salted-shuffle"])
-def test_conflate_matches_bruteforce_oracle(spark, data, broadcast):
+def test_conflate_matches_bruteforce_oracle(spark, data):
+    """The production path (AQE picks the join, points and lines split by
+    geometry) against the brute-force oracle."""
     images, layer = data
     want_m, want_new = _oracle(images, layer, PARAMS)
-    got_m, got_new = _run_engine(spark, broadcast)
+    got_m, got_new = _run_engine(spark)
     assert got_new == want_new
     assert set(got_m) == set(want_m)
     for iid, (fid, hits) in want_m.items():
@@ -122,7 +123,7 @@ def test_planted_classes_behave(spark, data):
 def test_match_and_version_semantics(spark):
     images = synth.synth_images(spark, 100)
     layer = synth.synth_layer(spark, 100)
-    matched, new = conflate(images, layer, PARAMS, broadcast_layer=True)
+    matched, new = conflate(images, layer, PARAMS)
     m = matched.collect()
     assert all(r["version"] >= 2 for r in m)  # bump (conflator.py:945-947)
     tag_keys = {k for r in m for k in r["tags"]}

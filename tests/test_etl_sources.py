@@ -1,7 +1,8 @@
-"""Per-source ETL mappers (F8) — hand-computed conversions plus the
-reference repo's own shipped fixtures (tests/data/mvum-test.geojson,
-osm.osm) driven end-to-end through the engine's readers, cell join, and
-refine, checked against an independent brute-force oracle."""
+"""Per-source ETL mappers (F8) — hand-computed conversions plus an
+MVUM-vocabulary FeatureCollection and an OSM XML way/node file, written by
+the engine's own sinks, driven end-to-end through the engine's readers,
+way deref, cell join, and refine, checked against an independent
+brute-force oracle over the raw files."""
 
 from __future__ import annotations
 
@@ -18,9 +19,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_merge_spark.operators import etl_sources as es
-
-REF_DATA = "/root/reference/tests/data"
-
 
 # ---------------------------------------------------------------------------
 # hand-computed MVUM conversions (mvum.py:90-224 semantics)
@@ -104,22 +102,128 @@ def test_roadcore_smoothness_space_variant(spark):
 
 
 # ---------------------------------------------------------------------------
-# reference fixture: converted-output vocabulary parity
+# MVUM × OSM fixture files, written by the engine's sinks into tmp
 # ---------------------------------------------------------------------------
-def test_mvum_fixture_matches_mapper_vocabulary(spark):
-    """The shipped mvum-test.geojson IS the output of the reference's
-    converter chain. Every property key and every enum value in it must be
-    producible by our mappers (proves the mapper's output space covers the
+BASE_LON, BASE_LAT = -105.52, 40.01
+M_PER_DEG_LAT = 111_195.0
+
+# Converted-output properties in the shape of the reference converter's
+# mvum-test.geojson: (properties, OSM way name, perpendicular offset of
+# that way in meters). "FR 503" repeats — two segments of one road.
+MVUM_ROADS = [
+    ({"highway": "unclassified", "name": "Otter Campground Road",
+      "ref:usfs": "FR 88", "smoothness": "very bad", "surface": "compacted",
+      "operator": "US Forest Service"}, "Otter Campground Road", 0.0),
+    ({"highway": "unclassified", "name": "Bear Creek Road",
+      "ref:usfs": "FR 502.1A", "smoothness": "good", "surface": "dirt",
+      "operator": "Forest Service"}, "Bear Creek Rd", 12.0),
+    ({"highway": "unclassified", "name": "Elk Lake Road",
+      "ref:usfs": "FR 77", "operator": "US Forest Service"}, None, 35.0),
+    ({"highway": "unclassified", "name": "Pine Mountain Road",
+      "ref:usfs": "FR 522", "smoothness": "bad", "surface": "gravel",
+      "operator": "US Forest Service"}, "Pine Mountain Road", 80.0),
+    ({"highway": "unclassified", "name": "Aspen Ridge Road",
+      "ref:usfs": "FR 503", "access": "no", "surface": "paved",
+      "operator": "US Forest Service"}, "Aspen Ridge Road", 5.0),
+    ({"highway": "unclassified", "name": "Aspen Ridge Road",
+      "ref:usfs": "FR 503", "smoothness": "excellent", "surface": "paved",
+      "operator": "US Forest Service"}, "Aspen Ridge Road", 60.0),
+    ({"highway": "unclassified", "name": "Cold Spring Road",
+      "ref:usfs": "FR 140", "smoothness": "good", "surface": "dirt",
+      "operator": "US Forest Service"}, "Cold Springs Road", 400.0),
+]
+
+
+def _road_coords(i, n_vertices, offset_m=0.0, jitter=0.0, seed=0):
+    """A ~1 km east-west polyline for road i (rows 1.5 km apart), shifted
+    offset_m north; jitter re-samples the vertex longitudes so a way's
+    vertices do not coincide with the road's."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    lon0 = BASE_LON + 0.004 * (i % 3)
+    lat0 = BASE_LAT + i * 1500.0 / M_PER_DEG_LAT + offset_m / M_PER_DEG_LAT
+    t = np.linspace(0.0, 0.012, n_vertices)
+    if jitter:
+        t = np.sort(t + rng.uniform(-jitter, jitter, n_vertices))
+    wiggle = 25.0 * np.sin(t * 600.0) / M_PER_DEG_LAT
+    return [(round(float(lon0 + x), 7), round(float(lat0 + w), 7))
+            for x, w in zip(t, wiggle)]
+
+
+@pytest.fixture(scope="module")
+def fixture_files(spark, tmp_path_factory):
+    """mvum.geojson via sources.geojson.write_feature_collection and
+    osm.osm via sources.osm_xml.write_osm_xml: one OSM way per MVUM road
+    (name variant or unnamed, offset from 0 m to beyond the threshold),
+    two unrelated far ways, and one way with a ref to a missing node."""
+    from osm_merge_spark.sources.geojson import write_feature_collection
+    from osm_merge_spark.sources.osm_xml import write_osm_xml
+
+    d = tmp_path_factory.mktemp("mvum_osm")
+    feats = []
+    for i, (props, _, _) in enumerate(MVUM_ROADS):
+        coords = _road_coords(i, 6 + i % 3)
+        feats.append(("LineString", [c[0] for c in coords],
+                      [c[1] for c in coords], props))
+    write_feature_collection(
+        spark.createDataFrame(
+            feats, "geom_type string, xs array<double>, ys array<double>,"
+                   " tags map<string,string>"),
+        str(d / "mvum.geojson"),
+    )
+
+    nodes, ways, nid = [], [], 1000
+    way_specs = [(i, name, off) for i, (_, name, off) in enumerate(MVUM_ROADS)]
+    way_specs += [(30, "Faraway Trail", 0.0), (40, None, 0.0)]
+    for wid, (i, name, off) in enumerate(way_specs, start=1):
+        refs = []
+        for lon, lat in _road_coords(i, 9, off, jitter=0.0008, seed=wid):
+            nodes.append((nid, 1, lat, lon, {}))
+            refs.append(nid)
+            nid += 1
+        if wid == 2:
+            refs.insert(3, 999_999)  # dangling ref: deref drops it
+        ways.append((wid, 1, refs, {"name": name, "highway": "track"}
+                     if name else {"highway": "track"}))
+    write_osm_xml(
+        spark.createDataFrame(
+            nodes, "id long, version int, lat double, lon double,"
+                   " tags map<string,string>"),
+        spark.createDataFrame(
+            ways, "id long, version int, refs array<long>,"
+                  " tags map<string,string>"),
+        str(d / "osm.osm"),
+    )
+    return str(d / "mvum.geojson"), str(d / "osm.osm")
+
+
+# ---------------------------------------------------------------------------
+# converted-output vocabulary parity
+# ---------------------------------------------------------------------------
+def test_mvum_fixture_matches_mapper_vocabulary(spark, fixture_files):
+    """The MVUM fixture carries the reference converter's output shape.
+    Every property key and every enum value in it, as written by the
+    GeoJSON sink and read back through the GeoJSON reader, must be
+    producible by our mappers (the mapper's output space covers the
     reference's real output)."""
-    with open(f"{REF_DATA}/mvum-test.geojson") as f:
+    from osm_merge_spark.sources.geojson import read_feature_collection
+
+    mvum_path, _ = fixture_files
+    with open(mvum_path) as f:
         fc = json.load(f)
+    read_back = [r.tags for r in
+                 read_feature_collection(spark, mvum_path).collect()]
+    assert sorted(map(sorted, (ft["properties"].items()
+                               for ft in fc["features"]))) == \
+        sorted(map(sorted, (t.items() for t in read_back)))
+    assert len(read_back) == len(MVUM_ROADS)
     our_keys = set(es.roadcore_entries(
         F.lit("x"), F.lit("x"), F.lit("1"), F.lit("NAT")).keys())
     our_keys |= {"operator"}  # mvum adds operator; roadcore does not
     smoothness_vals = {v for _, (k, v) in es.ROADCORE_MAINT.items()
                        if k == "smoothness"}
-    for feat in fc["features"]:
-        props = feat["properties"]
+    for props in read_back:
         assert set(props) <= our_keys | {"highway"}
         if "smoothness" in props:
             assert props["smoothness"] in smoothness_vals
@@ -131,8 +235,7 @@ def test_mvum_fixture_matches_mapper_vocabulary(spark):
 
 
 # ---------------------------------------------------------------------------
-# reference fixtures end-to-end: mvum-test.geojson × osm.osm through the
-# engine (GeoJSON reader → OSM XML reader → way deref → cell join → exact
+# fixtures end-to-end: mvum.geojson × osm.osm through the engine (GeoJSON reader → OSM XML reader → way deref → cell join → exact
 # refine) vs an independent brute-force oracle
 # ---------------------------------------------------------------------------
 THRESH_M = 100.0
@@ -193,22 +296,23 @@ def _brute_min_dists(mvum_feats, ways):
 
 
 @pytest.fixture(scope="module")
-def fixture_inputs(spark):
+def fixture_inputs(spark, fixture_files):
     from osm_merge_spark.sources.geojson import read_feature_collection
     from osm_merge_spark.sources.osm_xml import (deref_ways, read_nodes,
                                                  read_ways)
 
+    mvum_path, osm_path = fixture_files
     feats = read_feature_collection(
-        spark, f"{REF_DATA}/mvum-test.geojson"
+        spark, mvum_path
     ).withColumn("pid", F.col("tags")["ref:usfs"]).cache()
     ways = deref_ways(
-        read_ways(spark, f"{REF_DATA}/osm.osm"),
-        read_nodes(spark, f"{REF_DATA}/osm.osm"),
+        read_ways(spark, osm_path),
+        read_nodes(spark, osm_path),
     ).cache()
     return feats, ways
 
 
-def test_fixture_engine_vs_bruteforce(spark, fixture_inputs):
+def test_fixture_engine_vs_bruteforce(spark, fixture_files, fixture_inputs):
     from osm_merge_spark.functions.cells import CellGrid
     from osm_merge_spark.operators import cell_join
     from osm_merge_spark.operators.conflate import refine_distance
@@ -236,7 +340,8 @@ def test_fixture_engine_vs_bruteforce(spark, fixture_inputs):
     }
 
     # independent brute force on raw files
-    with open(f"{REF_DATA}/mvum-test.geojson") as f:
+    mvum_path, osm_path = fixture_files
+    with open(mvum_path) as f:
         fc = json.load(f)
     # pid = ref:usfs, which repeats (two FR 503 segments) — concatenate
     # coords per ref, matching the engine's groupBy(pid) min
@@ -245,7 +350,7 @@ def test_fixture_engine_vs_bruteforce(spark, fixture_inputs):
         mvum_feats.setdefault(
             feat["properties"]["ref:usfs"], []
         ).extend(feat["geometry"]["coordinates"])
-    root = ET.parse(f"{REF_DATA}/osm.osm").getroot()
+    root = ET.parse(osm_path).getroot()
     nodes = {
         n.get("id"): (float(n.get("lon")), float(n.get("lat")))
         for n in root.iter("node")
@@ -307,7 +412,7 @@ def test_fixture_nearest_way_name_agreement(spark, fixture_inputs):
     ).collect()
     assert len(best) > 0
     for r in best:
-        # the fixture pair (mvum-test, osm.osm) covers the same roads: the
+        # the fixture pair (mvum.geojson, osm.osm) covers the same roads: the
         # nearest way either has no name or a fuzzy-comparable one
         if r.s_name is not None and r.ratio > 85.0:
             from osm_merge_spark.functions.fuzzy import indel_ratio_oracle

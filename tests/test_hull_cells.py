@@ -68,10 +68,10 @@ def test_single_cell(spark):
 
 
 def test_candidate_bound_is_lattice_not_corpus(spark, sf_dir):
-    # the all-triples membership test (the audit-waived cartesian) runs on
-    # row-extreme candidates only: ≤ 2 rows per distinct ty, a lattice
+    # the all-triples membership test (a broadcast nested-loop join) runs
+    # on row-extreme candidates only: ≤ 2 rows per distinct ty, a lattice
     # bound that does NOT grow with corpus rows — this is the invariant
-    # that justifies scripts/plan_audit.py's WAIVED entry
+    # that justifies broadcasting the candidate sides
     from pyspark.sql import functions as F
 
     from osm_merge_spark.functions.cells import TileGrid

@@ -20,24 +20,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as contract  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
 
 
-@pytest.fixture(scope="module")
-def duck():
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per parquet table present in sf_dir
+    (shared with scripts/check_queries.py)."""
     con = duckdb.connect()
     for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
+        p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     return con
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    return duck_views(sf_dir)
+
+
+def canon(df: pd.DataFrame) -> pd.DataFrame:
+    """Column-name-sorted, row-sorted frame with object columns as str
+    (shared with scripts/check_queries.py)."""
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
         if df[c].dtype == object:
@@ -59,10 +66,10 @@ NAMES = sorted(contract.queries().keys())
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_query_matches_oracle(name, spark, duck):
+def test_query_matches_oracle(name, spark, duck, sf_dir):
     fn = contract.queries()[name]
     sqls = contract.oracle_sql()
-    sdf = fn(spark, SF_DIR).toPandas()
+    sdf = fn(spark, sf_dir).toPandas()
     if name not in sqls:
         assert len(sdf) >= 0  # rows-only check, same as the driver's
         return
@@ -71,7 +78,7 @@ def test_query_matches_oracle(name, spark, duck):
         f"{name}: columns {sorted(sdf.columns)} != {sorted(odf.columns)}"
     )
     assert len(sdf) == len(odf), f"{name}: rows {len(sdf)} != {len(odf)}"
-    a, b = _canon(sdf), _canon(odf)
+    a, b = canon(sdf), canon(odf)
     for c in a.columns:
         av, bv = a[c].tolist(), b[c].tolist()
         bad = [

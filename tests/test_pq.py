@@ -1,6 +1,6 @@
 """PQ (product quantization) ANN: representation invariants, exact
-equivalence of the Catalyst encoder/scorer vs a numpy reference, offline
-training gains, and recall vs the exact scorer.
+equivalence of the Arrow encoder and the ADC scorer vs a numpy reference,
+offline training gains, and recall vs the exact scorer.
 
 Context for the recall bars: the synthetic embeddings are uniform-ish
 random 64-d vectors — the WORST case for PQ (no cluster structure for the
@@ -63,7 +63,7 @@ def test_codes_match_numpy_and_are_in_range(spark, sf_dir, data):
     got = {
         r["vec_id"]: r["code"]
         for r in emb.select(
-            "vec_id", pq.pq_encode(F.col("embedding"), cb).alias("code")
+            "vec_id", pq.pq_encode_udf(cb)(F.col("embedding")).alias("code")
         ).collect()
     }
     want = _np_encode(x, np.array(cb))
@@ -72,19 +72,6 @@ def test_codes_match_numpy_and_are_in_range(spark, sf_dir, data):
         assert len(code) == pq.M_SUB
         assert all(0 <= c < pq.K_CODES for c in code)
         assert list(code) == list(want[i]), vid
-
-
-def test_udf_encoder_equals_catalyst_encoder(spark, sf_dir):
-    cb = pq.codebook()
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    both = emb.select(
-        "vec_id",
-        pq.pq_encode(F.col("embedding"), cb).alias("cat"),
-        pq.pq_encode_udf(cb)(F.col("embedding")).alias("udf"),
-    ).collect()
-    assert both
-    for r in both:
-        assert list(r["cat"]) == list(r["udf"]), r["vec_id"]
 
 
 def test_adc_scores_match_numpy(spark, sf_dir, data):
@@ -147,7 +134,7 @@ def test_recall_vs_exact_and_training_gain(spark, sf_dir, data):
 def test_encode_plan_is_shuffle_free(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     df = emb.select(
-        "vec_id", pq.pq_encode(F.col("embedding"), pq.codebook()).alias("code")
+        "vec_id", pq.pq_encode_udf(pq.codebook())(F.col("embedding")).alias("code")
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

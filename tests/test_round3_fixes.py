@@ -89,11 +89,10 @@ def test_knn_unbounded_reads_cached_rounds(spark):
 # cross the AOI with ZERO interior vertices; vertex PIP alone drops them,
 # the reference's contains-OR-intersects keeps them (osmhighways.py:243-253)
 # ---------------------------------------------------------------------------
-def test_aoi_clip_ways_planted_classes(spark):
+def test_aoi_clip_ways_planted_classes(spark, sf_dir):
     from osm_merge_spark.queries import base as qbase
     from osm_merge_spark.queries.geo2 import q_aoi_clip_ways
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     all_ways = qbase.ways_df(spark, sf_dir).select("way_id", "wcls").toPandas()
     kept = q_aoi_clip_ways(spark, sf_dir).toPandas()
     kept_ids = set(kept["way_id"])
@@ -106,13 +105,12 @@ def test_aoi_clip_ways_planted_classes(spark):
     assert (all_ways["wcls"] == 2).sum() >= 1
 
 
-def test_vertex_pip_alone_would_drop_crossing_ways(spark):
+def test_vertex_pip_alone_would_drop_crossing_ways(spark, sf_dir):
     """Documents WHY the segment test exists: the class-2 ways have no
     inside vertex, so any_vertex_in_fixed_ring alone misses them."""
     from osm_merge_spark.functions import geo as fgeo
     from osm_merge_spark.queries import base as qbase
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     ways = qbase.ways_df(spark, sf_dir).filter(F.col("wcls") == 2)
     n_cross = ways.count()
     n_vertex_in = ways.filter(

@@ -1,4 +1,4 @@
-"""Round-4 verdict-item pins: ann top-k selection strategy (item #2) and
+"""Round-4 verdict-item pins: ann top-k selection plan shape (item #2) and
 snap_points plan shape companions (item #1 lives in test_geo4)."""
 
 from pyspark.sql import functions as F
@@ -16,7 +16,7 @@ def _scored(spark, sf_dir):
 
 
 def test_cosine_topk_default_plan_has_no_window_sort(spark, sf_dir):
-    """r3 verdict #2: the exact re-rank's default selection must be the
+    """r3 verdict #2: the exact re-rank's selection must be the
     hash-agg top-k (ObjectHashAggregate over collect_list), not the
     row_number window — no Window node, no SortExec feeding one."""
     emb, qs = _scored(spark, sf_dir)
@@ -29,23 +29,6 @@ def test_cosine_topk_default_plan_has_no_window_sort(spark, sf_dir):
         .executedPlan().toString()
     assert "Window" not in plan8
     assert "ObjectHashAggregate" in plan8
-
-
-def test_topk_strategies_row_identical(spark, sf_dir):
-    """(-cos, nid) is a total order, so agg and window selections must be
-    row-for-row identical — including the rounded cos (double negation is a
-    sign-bit flip, bit-exact)."""
-    emb, qs = _scored(spark, sf_dir)
-    a = sorted(map(tuple,
-                   similarity.cosine_topk(emb, qs, 5, strategy="agg").collect()))
-    w = sorted(map(tuple,
-                   similarity.cosine_topk(emb, qs, 5, strategy="window").collect()))
-    assert a == w and len(a) > 0
-    a8 = sorted(map(tuple,
-                    similarity.q8_topk(emb, qs, 5, strategy="agg").collect()))
-    w8 = sorted(map(tuple,
-                    similarity.q8_topk(emb, qs, 5, strategy="window").collect()))
-    assert a8 == w8 and len(a8) > 0
 
 
 def test_image_sharpness_sees_the_codec(spark, sf_dir):

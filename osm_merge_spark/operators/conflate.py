@@ -10,8 +10,11 @@ version; primaries with no candidate become "new" features
 Spark-first plan (one lazy DataFrame graph, no driver loops):
     scan → cell encode → ring-1 explode → cell join (AQE picks broadcast
     or shuffle; points and lines split by geometry) → exact distance refine
-    (haversine / point→polyline) → fuzzy+ref gates → top-5 cap (hash
-    aggregation) → one winner per image → matched/new split.
+    (haversine / point→polyline) → then two outputs off the refined pairs:
+      new:     images with no refined pair (one anti-join);
+      matched: top-5 cap with the best-part min folded in (one hash
+               aggregation per image) → fuzzy+ref gates → one winner per
+               image.
 
 Intentional, documented divergences from the reference implementation:
   - deterministic top-5 by distance instead of scan-order early exit
@@ -159,9 +162,12 @@ def prepare_images(images: DataFrame) -> DataFrame:
 
 
 def new_features(p: DataFrame, matched_keys: DataFrame) -> DataFrame:
-    """J7: primaries with no accepted candidate become new features
-    (informal=yes + fixme, version=1 — conflator.py:318-325). p must be
-    prepare_images() output; matched_keys needs only image_id."""
+    """J7: primaries with no feature within the threshold become new
+    features (informal=yes + fixme, version=1 — conflator.py:318-325).
+    p must be prepare_images() output; matched_keys needs only image_id and
+    may repeat it. conflate() passes its in-threshold refined pairs (every
+    image with one gets a winner, so this equals anti-joining the winners
+    without computing them); the pipeline passes its matched checkpoint."""
     return (
         # shuffle_hash: both sides are corpus-scale (every unmatched image ×
         # every match) — SMJ would sort both for an equi-key with no
@@ -218,7 +224,7 @@ def conflate(images: DataFrame, layer: DataFrame,
          .withColumn("s_ref", F.element_at("s_tags", "ref:usfs")))
 
     # SLIM join: only ids + coordinates flow through the cell join, the
-    # 9× ring explode, the refine, and the top-5 window — captions/tag
+    # 9× ring explode, the refine, and the top-5 cap — captions/tag
     # maps/versions re-attach AFTER capping, when the row count is back to
     # ≤5·|images|. Payload-wide candidate rows were both the dominant
     # shuffle volume and (when AQE broadcasts the layer) a serial
@@ -238,15 +244,23 @@ def conflate(images: DataFrame, layer: DataFrame,
         if p_has_tags
         else p.select("image_id", "lon", "lat", "caption")
     )
-    s_slim = s.select("feature_id", "xs", "ys")
+    # a null feature_id would be a refined pair that no enrich join can
+    # pick as a winner — dropping it here keeps "has a refined pair" and
+    # "has a winner" the same image set, which `new` relies on
+    s_slim = s.select("feature_id", "xs", "ys").filter(
+        F.col("feature_id").isNotNull()
+    )
+    # line pairs dedup on the replicated object: the geometry part
+    pair_key = ["image_id", "feature_id"]
     if explode_multipart:
         # multi-part geometries ride as NaN-separated packed arrays
         # (sources/geojson); per-part rows join/refine independently and
-        # the best-part aggregation below takes min-over-sub-geometries
-        # (conflator.py:485-528)
+        # the cap below keeps each feature's nearest part
+        # (min-over-sub-geometries, conflator.py:485-528)
         from .multipart import explode_parts
 
-        s_slim = explode_parts(s_slim).drop("part_idx")
+        s_slim = explode_parts(s_slim)
+        pair_key.append("part_idx")
 
     # Planar bbox prefilter bound — cheap compares per candidate BEFORE
     # the transcendental refine. A point within threshold_m of a geometry
@@ -296,8 +310,8 @@ def conflate(images: DataFrame, layer: DataFrame,
         lp = cell_join.candidate_pairs(
             p_slim, s_part, grid,
             n_salt=params.n_salt, hot_threshold=params.hot_threshold,
-            secondary_points=False,
-        )
+            secondary_points=False, dedup_pairs=False,
+        ).dropDuplicates(pair_key)
         lp = lp.filter(
             (F.col("lat") >= F.array_min("ys") - F.lit(deg))
             & (F.col("lat") <= F.array_max("ys") + F.lit(deg))
@@ -320,19 +334,30 @@ def conflate(images: DataFrame, layer: DataFrame,
         refined = points_refined(s_slim.filter(F.size("xs") == 1)).unionByName(
             lines_refined(s_slim.filter(F.size("xs") > 1))
         )
-    if explode_multipart:
-        # best-part aggregation: one row per (image, feature) with the
-        # minimum part distance — partial (map-side) min, no sort
-        refined = refined.groupBy("image_id", "feature_id").agg(
-            F.min("dist_m").alias("dist_m"),
-            *[F.first(c).alias(c) for c in slim_cols
-              if c not in ("image_id", "feature_id", "dist_m")],
+    # J7: "new" means no feature within the threshold — an anti-join
+    # against the refined pairs, so its plan stops at the refine
+    new = new_features(p, refined)
+
+    # top-5 cap in one hash aggregation per image (collect_list, no window
+    # sort — BASELINE.md §4.5): sort the (dist, feature) pairs; each
+    # feature's first entry is its nearest part (the best-part min), and
+    # the first k distinct features are the cap. array_position finds each
+    # first entry, so the per-image work is O(k·n), not O(n²).
+    const_cols = ["lon", "lat"] if p_has_tags else ["lon", "lat", "caption"]
+    pairs = F.array_sort(F.collect_list(F.struct("dist_m", "feature_id")))
+    capped = (
+        refined.groupBy("image_id")
+        .agg(pairs.alias("__c"), *[F.first(c).alias(c) for c in const_cols])
+        .withColumn("__f", F.transform("__c", lambda t: t["feature_id"]))
+        .select(
+            "image_id", *const_cols,
+            F.explode(F.transform(
+                F.slice(F.array_distinct("__f"), 1, params.candidate_cap),
+                lambda f: F.element_at(
+                    "__c", F.array_position("__f", f).cast("int")),
+            )).alias("__t"),
         )
-    # top-5 cap: collect_list/array_sort/slice hash aggregation — no
-    # window sort (BASELINE.md §4.5)
-    capped = knn.top_k_agg(
-        refined, "image_id", "dist_m", "feature_id", params.candidate_cap,
-        const_cols=["lon", "lat"] if p_has_tags else ["lon", "lat", "caption"],
+        .select("image_id", *const_cols, "__t.dist_m", "__t.feature_id")
     )
     enriched = capped
     if p_has_tags:
@@ -367,5 +392,4 @@ def conflate(images: DataFrame, layer: DataFrame,
         ).alias("tags"),
         "lon", "lat",
     )
-    new = new_features(p, best.select("image_id"))
     return matched, new

@@ -6,9 +6,9 @@ over sub-geometries (conflator.py:485-495 with the per-segment minimum at
 :496-528). The engine's packed single-ring rows carry multi-part
 geometries as NaN-separated xs/ys arrays (sources/geojson._flatten);
 explode_parts() recovers first-class per-part rows — pure Catalyst
-(sequence/filter/slice), no Python — and the conflation ladder's best-part
-aggregation (min dist per (probe, feature)) reproduces the reference's
-min-over-sub-geometries exactly.
+(sequence/filter/slice), no Python — and the conflation ladder's top-5
+cap, which keeps each feature's nearest part per probe, reproduces the
+reference's min-over-sub-geometries exactly.
 """
 
 from __future__ import annotations

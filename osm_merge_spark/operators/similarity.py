@@ -198,9 +198,14 @@ def ivf_train(emb: DataFrame, k: int = 16, iters: int = 3,
 def ivf_assign(emb: DataFrame, centroids, id_col: str = "vec_id",
                vec_col: str = "embedding") -> DataFrame:
     """Attach the nearest-centroid cluster id — one Arrow-batch matmul per
-    batch (the centroid matrix rides in the UDF closure; tiny)."""
+    batch (the centroid matrix rides in the UDF closure; tiny). The id
+    sits behind an eval_once barrier: a join on it infers
+    isnotnull(cluster), which would otherwise run the UDF a second time
+    below the projection."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import IntegerType
+
+    from ..functions.barrier import eval_once
 
     C = np.asarray(centroids, dtype=np.float64)
     Cn2 = (C * C).sum(axis=1)
@@ -211,7 +216,8 @@ def ivf_assign(emb: DataFrame, centroids, id_col: str = "vec_id",
         d = Cn2[None, :] - 2.0 * (M @ C.T)  # + ||x||² is constant per row
         return pd.Series(np.argmin(d, axis=1).astype(np.int32))
 
-    return emb.withColumn("cluster", nearest(F.col(vec_col)))
+    return eval_once(emb.withColumn("cluster", nearest(F.col(vec_col))),
+                     ["cluster"])
 
 
 def ivf_search(assigned: DataFrame, centroids, queries: DataFrame,

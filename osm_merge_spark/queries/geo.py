@@ -399,12 +399,16 @@ def q_s2_dist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for the numpy fold (8 whole-batch table lookups) — 33×, identical
     # ids (tests pin catalyst == udf == numpy; ring-1 sets match per row).
     from ..functions import s2
+    from ..functions.barrier import eval_once
 
-    img = base.images_df(spark, sf_dir).select(
+    # eval_once: the join's inferred isnotnull(s2_cell) filter would
+    # otherwise be pushed below the projection and run the encoder a
+    # second time over the same probe rows
+    img = eval_once(base.images_df(spark, sf_dir).select(
         "image_id", "lon", "lat",
         s2.s2_cell_udf(_S2_JOIN_LEVEL)(F.col("lon"), F.col("lat"))
         .alias("s2_cell"),
-    )
+    ), ["s2_cell"])
     ring = s2.s2_cells_ring1_udf(_S2_JOIN_LEVEL)
     lyr = base.layer_df(spark, sf_dir).select(
         "feature_id", "s_lon", "s_lat",

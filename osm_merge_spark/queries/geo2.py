@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from ..functions.barrier import eval_once
 from ..functions.cells import CellGrid
 from ..functions.kernels import polygon_intersection_area
 from ..operators import cell_join, knn
@@ -207,7 +208,11 @@ def _building_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     area = polygon_intersection_area(
         F.col("xs1"), F.col("ys1"), F.col("xs2"), F.col("ys2")
     )
-    return pairs.withColumn("area", area).filter(F.col("area") > F.lit(0.0))
+    # eval_once: pushed below the projection, the area filter would run
+    # the area UDF a second time over every pair
+    return eval_once(pairs.withColumn("area", area), ["area"]).filter(
+        F.col("area") > F.lit(0.0)
+    )
 
 
 _BLD_PAIRS_SQL = (

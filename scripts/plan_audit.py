@@ -2,7 +2,10 @@
 
 For every `queries()` entry, compile the physical plan at a given sf dir and
 flag scale anti-patterns: SortMergeJoin (two needless full sorts on hash
-keys), CartesianProduct, and count Exchanges / Sorts / broadcast joins.
+keys), CartesianProduct, a Python UDF evaluated by two plan nodes over the
+same input attributes (DUP-UDF: an inferred filter pushed below the
+projection re-runs it — functions/barrier.eval_once prevents that), and
+count Exchanges / Sorts / broadcast joins.
 This is the tool that caught the banded-join SMJ (fixed with shuffle_hash
 hints — BASELINE.md §5.9); run it after adding any join.
 
@@ -17,6 +20,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,6 +38,25 @@ WAIVED = {
     # tests/test_dbscan.py::test_coverage_gini_raster_bound_and_range
     "coverage_gini": "NOPART-WINDOW",
 }
+
+
+def udf_calls(plan: str) -> list[str]:
+    """The UDF calls of every Python-eval node in a plan string, one entry
+    per (node, call), with the call's result id stripped: equal entries
+    are the same UDF over the same input attributes."""
+    calls = []
+    for m in re.finditer(r"(?:Arrow|Batch)EvalPython \[", plan):
+        depth, start, parts = 1, m.end(), []
+        for i in range(m.end(), len(plan)):
+            c = plan[i]
+            depth += (c in "([") - (c in ")]")
+            if depth == 0 or (depth == 1 and c == ","):
+                parts.append(plan[start:i])
+                start = i + 1
+            if depth == 0:
+                break
+        calls += {re.sub(r"#\d+L?$", "", p.strip()) for p in parts}
+    return calls
 
 
 def main() -> int:
@@ -69,10 +92,12 @@ def main() -> int:
         n_ex = len(re.findall(r"Exchange hashpartitioning", plan))
         n_sort = len(re.findall(r"\bSort \[", plan))
         n_bc = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoop", plan))
+        dup_udf = any(n > 1 for n in Counter(udf_calls(plan)).values())
         flags = (("SMJ " if smj else "") + ("CARTESIAN " if cart else "")
-                 + ("NOPART-WINDOW" if nopart else ""))
+                 + ("NOPART-WINDOW " if nopart else "")
+                 + ("DUP-UDF" if dup_udf else ""))
         waived = flags.strip() and WAIVED.get(name) == flags.strip()
-        if (smj or cart or nopart) and not waived:
+        if (smj or cart or nopart or dup_udf) and not waived:
             flagged += 1
         if name in WAIVED and not waived:
             dead.append(name)

@@ -48,6 +48,30 @@ def _point_line_dist_m(plon, plat, xs, ys):
     return best * math.cos(math.radians(plat))
 
 
+def _parts(xs, ys):
+    """Split NaN-separated packed arrays into their (xs, ys) parts."""
+    parts, cur = [], ([], [])
+    for x, y in zip(xs, ys):
+        if math.isnan(x):
+            parts.append(cur)
+            cur = ([], [])
+        else:
+            cur[0].append(x)
+            cur[1].append(y)
+    parts.append(cur)
+    return [pt for pt in parts if pt[0]]
+
+
+def _dist_m(lon, lat, xs, ys):
+    """Distance to a feature: the minimum over its parts
+    (conflator.py:485-528)."""
+    return min(
+        _haversine(lon, lat, px[0], py[0]) if len(px) == 1
+        else _point_line_dist_m(lon, lat, px, py)
+        for px, py in _parts(xs, ys)
+    )
+
+
 def _oracle(images, layer, params: ConflateParams):
     """Brute-force reference-semantics conflation. Returns
     {image_id: (feature_id, hits)} for matches and set of new image_ids."""
@@ -55,10 +79,7 @@ def _oracle(images, layer, params: ConflateParams):
     for img in images:
         cands = []
         for f in layer:
-            if len(f["xs"]) == 1:
-                d = _haversine(img["lon"], img["lat"], f["xs"][0], f["ys"][0])
-            else:
-                d = _point_line_dist_m(img["lon"], img["lat"], f["xs"], f["ys"])
+            d = _dist_m(img["lon"], img["lat"], f["xs"], f["ys"])
             if d <= params.threshold_m:
                 cands.append((d, f))
         cands.sort(key=lambda t: (t[0], t[1]["feature_id"]))
@@ -105,6 +126,60 @@ def test_conflate_matches_bruteforce_oracle(spark, data):
     for iid, (fid, hits) in want_m.items():
         assert got_m[iid][0] == fid, f"{iid}: engine {got_m[iid]} vs oracle {(fid, hits)}"
         assert got_m[iid][1] == hits, f"{iid}: hits differ"
+
+
+def _with_second_parts(images, layer):
+    """Give two planted features in three a short second line part: for
+    i%3 == 0 it lies near another image (7 further on), for i%3 == 1 near
+    the feature's own image, so that image has both parts within the
+    threshold. Even i put the new part first in the packed arrays."""
+    m = 1.0 / 110_574.0
+    by_i = {img["i"]: img for img in images}
+    out = []
+    for f in layer:
+        f = dict(f)
+        i = f["src_img"]
+        if i is not None and i % 3 != 2:
+            tgt = by_i[(i + 7) % len(images)] if i % 3 == 0 else by_i[i]
+            off = (1.0 + i % 5) * m
+            px = [tgt["lon"] - 10 * m, tgt["lon"] + 10 * m]
+            py = [tgt["lat"] + off, tgt["lat"] + off]
+            nan = [float("nan")]
+            if i % 2 == 0:
+                f["xs"], f["ys"] = px + nan + f["xs"], py + nan + f["ys"]
+            else:
+                f["xs"], f["ys"] = f["xs"] + nan + px, f["ys"] + nan + py
+            f["geom_type"] = "MultiLineString"
+        out.append(f)
+    return out
+
+
+def test_multipart_conflate_matches_bruteforce_oracle(spark, data):
+    """conflate(explode_multipart=True) against the oracle's
+    min-over-parts distance, on a layer where some features have a second
+    part near another image and some images have both parts in range."""
+    images, layer = data
+    layer = _with_second_parts(images, layer)
+    want_m, want_new = _oracle(images, layer, PARAMS)
+    cols = ["feature_id", "version", "geom_type", "xs", "ys", "tags", "caption"]
+    layer_df = spark.createDataFrame(
+        [tuple(f[c] for c in cols) for f in layer],
+        "feature_id long, version int, geom_type string,"
+        " xs array<double>, ys array<double>,"
+        " tags map<string,string>, caption string",
+    )
+    matched, new = conflate(synth.synth_images(spark, N_IMAGES), layer_df,
+                            PARAMS, explode_multipart=True)
+    rows = matched.collect()
+    got_m = {r["image_id"]: (r["feature_id"], r["hits"]) for r in rows}
+    assert {r["image_id"] for r in new.collect()} == want_new
+    assert got_m == want_m
+    # the winner's distance is its nearest part's
+    img_by_id = {img["image_id"]: img for img in images}
+    f_by_id = {f["feature_id"]: f for f in layer}
+    for r in rows:
+        img, f = img_by_id[r["image_id"]], f_by_id[r["feature_id"]]
+        assert abs(r["dist_m"] - _dist_m(img["lon"], img["lat"], f["xs"], f["ys"])) < 1e-6
 
 
 def test_planted_classes_behave(spark, data):

@@ -161,3 +161,39 @@ def test_explode_parts_roundtrip_property(spark):
         assert len(rec) == len(parts)
         for (idx, gx, gy), (px, py) in zip(rec, parts):
             assert gx == px and gy == py
+
+
+def test_multipart_match_does_not_depend_on_part_order(spark):
+    """Line pairs dedup on the geometry part, not the feature: an image
+    within the threshold of one part and outside it of the other must
+    match at the near part whichever part comes first in the packed
+    arrays (deduping on the feature kept the far part when it came
+    first, and the image came out as new)."""
+    from osm_merge_spark.operators.conflate import ConflateParams, conflate
+
+    m = 1.0 / 110_574.0
+    lon0, lat0 = -108.1, 43.0
+    far = ([lon0 - 9 * m] * 2, [lat0, lat0 + 20 * m])   # ≈8.8 m away
+    near = ([lon0 + 5 * m] * 2, [lat0, lat0 + 20 * m])  # ≈1.47 m away
+    images = spark.createDataFrame(
+        [("img", "Split Track", lon0 + 3 * m, lat0 + 10 * m)],
+        "image_id string, caption string, lon double, lat double",
+    )
+    # the engine's line metric: mercator-x offset × cos(lat)
+    expected = (6378137.0 * math.radians(2 * m)
+                * math.cos(math.radians(lat0 + 10 * m)))
+    for first, second in ((far, near), (near, far)):
+        layer = spark.createDataFrame(
+            [(1, 1, "MultiLineString",
+              first[0] + [NAN] + second[0], first[1] + [NAN] + second[1],
+              {"name": "Split Track"}, "Split Track")],
+            "feature_id long, version int, geom_type string,"
+            " xs array<double>, ys array<double>,"
+            " tags map<string,string>, caption string",
+        )
+        matched, new = conflate(images, layer, ConflateParams(),
+                                explode_multipart=True)
+        rows = matched.collect()
+        assert new.count() == 0
+        assert [(r.image_id, r.feature_id) for r in rows] == [("img", 1)]
+        assert abs(rows[0].dist_m - expected) < 1e-3

@@ -6,11 +6,16 @@ filter pushdown dragging the refine into a join condition)."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
-from pyspark.sql import functions as F  # noqa: F401
+import pytest  # noqa: E402
+from plan_audit import udf_calls  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402,F401
 
 
 def _plan(df) -> str:
@@ -43,6 +48,32 @@ def test_conflate_plan_has_no_window_or_smj(spark):
             assert "lambdafunction" not in line, line[:200]
 
 
+def test_multipart_conflate_plan_shape(spark):
+    """With explode_multipart the best-part min rides inside the per-image
+    top-5 cap: no aggregate keyed on (image_id, feature_id), at most 3
+    hash exchanges for matched. `new` is the refined pairs' anti-join, so
+    its plan carries no scoring UDF, cap or winner pick."""
+    from osm_merge_spark.data.synth import synth_images, synth_layer
+    from osm_merge_spark.operators.conflate import ConflateParams, conflate
+
+    images = synth_images(spark, 2000)
+    layer = synth_layer(spark, 2000)
+    matched, new = conflate(images, layer, ConflateParams(),
+                            explode_multipart=True)
+    plan = _plan(matched)
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3
+    agg_keys = [
+        sorted(re.sub(r"#\d+L?", "", k).split(", "))
+        for k in re.findall(r"Aggregate\(keys?=\[([^\]]*)\]", plan)
+    ]
+    # line pairs dedup on the geometry part
+    assert ["feature_id", "image_id", "part_idx"] in agg_keys, agg_keys
+    assert ["feature_id", "image_id"] not in agg_keys, agg_keys
+    new_plan = _plan(new)
+    for op in ("ArrowEvalPython", "collect_list", "min_by"):
+        assert op not in new_plan, op
+
+
 def test_dedup_ngram_plan_broadcasts_stop_shingles(spark):
     """The stop_df guard must be a BROADCAST anti-join (the stop list is
     tiny by construction) — a shuffle anti-join would re-shuffle the whole
@@ -58,3 +89,25 @@ def test_dedup_ngram_plan_broadcasts_stop_shingles(spark):
     assert "BroadcastHashJoin LeftAnti" in plan or (
         "LeftAnti" in plan and "BroadcastExchange" in plan
     )
+
+
+def test_udf_calls_finds_a_udf_evaluated_twice():
+    """The plan audit's DUP-UDF detector on the shape s2_dist_join had: an
+    inferred filter pushed below the projection re-ran the encoder."""
+    plan = (":  +- ArrowEvalPython [_enc(lon#36, lat#37)#76L],"
+            " [pythonUDF0#166L], 200\n"
+            ":     +- Filter isnotnull(pythonUDF0#165L)\n"
+            ":        +- ArrowEvalPython [_enc(lon#36, lat#37)#76L, f(x#1)#9],"
+            " [pythonUDF0#165L, pythonUDF1#167], 200\n")
+    assert sorted(udf_calls(plan)) == ["_enc(lon#36, lat#37)"] * 2 + ["f(x#1)"]
+
+
+@pytest.mark.parametrize("name", ["building_pairs", "ivf_search"])
+def test_python_udf_evaluated_once(spark, sf_dir, name):
+    """Each of these once ran a Python UDF twice over the same rows (a
+    filter on its output pushed below the projection); eval_once barriers
+    keep one evaluation per UDF call (s2_dist_join: tests/test_s2.py)."""
+    import __spark_entry__ as contract
+
+    calls = udf_calls(_plan(contract.queries()[name](spark, sf_dir)))
+    assert calls and len(calls) == len(set(calls)), calls

@@ -192,6 +192,18 @@ def test_s2_dist_join_equals_cellgrid_dist_join(spark, sf_dir):
     pd.testing.assert_frame_equal(a, b[a.columns])
 
 
+def test_s2_dist_join_encodes_probe_once(spark, sf_dir):
+    """One Arrow encoder node per side: the probe encoder sits behind an
+    eval_once barrier, so the join's inferred isnotnull(s2_cell) filter
+    cannot re-run it below the projection (it did: 3 nodes, the probe
+    encoder twice over the same rows)."""
+    from osm_merge_spark.queries.geo import q_s2_dist_join
+
+    plan = (q_s2_dist_join(spark, sf_dir)._jdf.queryExecution()
+            .executedPlan().toString())
+    assert plan.count("ArrowEvalPython") == 2
+
+
 def test_ring1_numpy_matches_catalyst(spark):
     """The Arrow ring-1 batch kernel (s2_cells_ring1_numpy) produces the
     same per-row neighbor-cell SET as the Catalyst HOF version at the join

@@ -9,8 +9,6 @@ segments of one geometry (per-row loop, vectorized inner).
 Reference parity:
   - ray-cast point-in-polygon  → shapely contains/intersects
     (osm_merge/geosupport.py:201-224, utilities/osmhighways.py:243-253)
-  - point→polyline distance    → shapely .distance() on EPSG:3857
-    (osm_merge/conflator.py:456-531)
   - polygon intersection area  → ST_Area(ST_Intersection(...))
     (osm_merge/conflateBuildings.py:110)
 """
@@ -71,18 +69,6 @@ def _split_rings(rx: np.ndarray, ry: np.ndarray) -> list[tuple[np.ndarray, np.nd
     return out
 
 
-def _raycast_polygon(px: np.ndarray, py: np.ndarray,
-                     rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
-    """Even-odd PIP for a possibly-holed packed polygon: XOR of per-ring
-    ray casts (VERDICT r2 #7 — a point in a courtyard is outside, matching
-    shapely contains on the same rings; geosupport.py:201-224)."""
-    inside = np.zeros(px.shape, dtype=bool)
-    for qx, qy in _split_rings(rx, ry):
-        if len(qx) >= 3:
-            inside ^= _raycast(px, py, qx, qy)
-    return inside
-
-
 def point_in_polygon_udf(ring_x: Sequence[float], ring_y: Sequence[float]):
     """PIP against ONE fixed polygon (AOI clip, F6/J8) — NaN-separated
     interior rings supported (even-odd parity).
@@ -107,25 +93,14 @@ def point_in_polygon_udf(ring_x: Sequence[float], ring_y: Sequence[float]):
     return _pip
 
 
-def _pip_rowloop(pxv, pyv, rxs, rys) -> np.ndarray:
-    """Reference row loop (the original point_in_ring body) — kept as the
-    equivalence oracle for the vectorized batch kernel below."""
-    out = np.zeros(len(pxv), dtype=bool)
-    for i in range(len(pxv)):
-        rx = np.asarray(rxs[i], dtype=np.float64)
-        ry = np.asarray(rys[i], dtype=np.float64)
-        if len(rx) >= 3:
-            out[i] = _raycast_polygon(pxv[i : i + 1], pyv[i : i + 1], rx, ry)[0]
-    return out
-
-
 def pip_batch(pxv: np.ndarray, pyv: np.ndarray, rxs, rys) -> np.ndarray:
     """Vectorized per-row-polygon PIP: even-odd parity over ALL edges of
     every row's rings in ONE flattened pass (no Python per row). Identical
-    semantics to _pip_rowloop — NaN ring separators, closing-duplicate
-    stripping, <3-vertex rings ignored, per-edge math in the same
-    expression form (xint = (xj−xi)·(py−yi)/(yj−yi)+xi) — property-tested
-    equal. Total-crossing parity per row == XOR of per-ring parities, so
+    semantics to the per-row loop it replaced (tests/ref_kernels.py) — NaN
+    ring separators, closing-duplicate stripping, <3-vertex rings ignored,
+    per-edge math in the same expression form
+    (xint = (xj−xi)·(py−yi)/(yj−yi)+xi) — property-tested equal.
+    Total-crossing parity per row == XOR of per-ring parities, so
     one bincount replaces the ring loop."""
     n = len(pxv)
     if n == 0:
@@ -195,57 +170,6 @@ def point_in_ring(px: pd.Series, py: pd.Series, rxs: pd.Series, rys: pd.Series) 
         pip_batch(px.to_numpy(np.float64), py.to_numpy(np.float64),
                   list(rxs), list(rys))
     )
-
-
-def pip_oracle(px: float, py: float, ring: list[tuple[float, float]]) -> bool:
-    """Plain-Python ray cast for tests."""
-    inside = False
-    n = len(ring)
-    j = n - 1
-    for i in range(n):
-        xi, yi = ring[i]
-        xj, yj = ring[j]
-        if (yi > py) != (yj > py):
-            xint = (xj - xi) * (py - yi) / (yj - yi) + xi
-            if px < xint:
-                inside = not inside
-        j = i
-    return inside
-
-
-# ---------------------------------------------------------------------------
-# Point → polyline distance (planar meters; inputs pre-projected to 3857)
-# ---------------------------------------------------------------------------
-def _seg_dist(px: float, py: float, xs: np.ndarray, ys: np.ndarray) -> float:
-    """Min distance from point to each segment of a packed polyline,
-    vectorized over segments (clamped projection onto each segment)."""
-    if len(xs) == 1:
-        return float(np.hypot(px - xs[0], py - ys[0]))
-    ax, ay = xs[:-1], ys[:-1]
-    bx, by = xs[1:], ys[1:]
-    dx, dy = bx - ax, by - ay
-    seg2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = ((px - ax) * dx + (py - ay) * dy) / seg2
-    t = np.where(seg2 == 0.0, 0.0, np.clip(t, 0.0, 1.0))
-    cx, cy = ax + t * dx, ay + t * dy
-    return float(np.min(np.hypot(px - cx, py - cy)))
-
-
-@pandas_udf(DoubleType())
-def point_polyline_dist(px: pd.Series, py: pd.Series, xs: pd.Series, ys: pd.Series) -> pd.Series:
-    """Exact planar point→linestring distance (X2 refine after cell join).
-
-    Matches shapely's Point.distance(LineString) on projected coordinates
-    (conflator.py:500-521). Runs only on cell-join candidates.
-    """
-    out = np.empty(len(px), dtype=np.float64)
-    pxv, pyv = px.to_numpy(np.float64), py.to_numpy(np.float64)
-    for i in range(len(px)):
-        x = np.asarray(xs.iat[i], dtype=np.float64)
-        y = np.asarray(ys.iat[i], dtype=np.float64)
-        out[i] = _seg_dist(pxv[i], pyv[i], x, y) if len(x) else np.inf
-    return pd.Series(out)
 
 
 # ---------------------------------------------------------------------------

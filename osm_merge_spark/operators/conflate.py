@@ -51,10 +51,10 @@ class ConflateParams:
 def point_polyline_dist_native(px, py, xs, ys) -> F.Column:
     """Min point→segment distance over a packed polyline as a PURE Catalyst
     expression: clamped projection onto each segment, array_min over
-    segments. Same math as kernels.point_polyline_dist (the Arrow kernel
-    stays as the test oracle) but runs inside codegen — at 18M candidate
-    pairs the per-row Python loop was the single hottest spot in the whole
-    engine. Inputs must be planar (pre-projected) coordinates."""
+    segments. Same math as the Arrow row-loop oracle
+    tests/ref_kernels.point_polyline_dist, but runs inside codegen — at
+    18M candidate pairs the per-row Python loop was the single hottest
+    spot in the whole engine. Inputs must be planar (pre-projected) coordinates."""
 
     def seg(k):
         ax, ay = F.element_at(xs, k), F.element_at(ys, k)

@@ -10,8 +10,11 @@ This engine gives every pipeline stage:
     Iceberg catalog slots in where available),
   - a manifest row (stage, status, rows_out, n_partitions, t_start, t_end,
     wall_s) appended only after the commit,
-  - per-partition lineage rows (stage, partition_id, rows_out) collected by
-    a Spark accumulator inside the same action — no second scan,
+  - per-partition lineage rows (stage, partition_id, rows_out) taken from
+    the commit itself: row counts from the committed files' metadata
+    (sources/tables.committed_partition_rows), the partition count from
+    the write job's result stage, so empty partitions are listed too — no
+    second scan and no Python in the write,
   - resume: a re-run skips any stage whose manifest row is committed and
     whose output exists, so a failed 40-stage job at 100 TB re-executes
     only the incomplete suffix.
@@ -24,32 +27,13 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark import AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-class _DictMaxParam(AccumulatorParam):
-    """Accumulator merging {partition_id: row count} dicts by MAX per key.
-
-    Spark guarantees exactly-once accumulator updates only for actions;
-    task retries and speculative attempts re-run the lineage pass-through
-    and would double-count under a sum merge. Each attempt adds its FULL
-    partition count exactly once (at generator exhaustion), so every add
-    for a given partition carries the same value and max-per-key is both
-    retry-proof and exact."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            a[k] = max(a.get(k, 0), v)
-        return a
 
 
 @dataclass
@@ -102,22 +86,22 @@ class PipelineContext:
             return [json.loads(line) for line in f if line.strip()]
 
 
-def _with_lineage(df: DataFrame, acc) -> DataFrame:
-    """Count rows per physical partition inside the write action itself
-    (mapInPandas pass-through + accumulator — no extra scan, no driver
-    O(rows) state)."""
-
-    schema = df.schema
-
-    def count_rows(batches):
-        pid = TaskContext.get().partitionId()
-        n = 0
-        for pdf in batches:
-            n += len(pdf)
-            yield pdf
-        acc.add({str(pid): n})
-
-    return df.mapInPandas(count_rows, schema=schema)
+def _write_tasks(sc, tag: str) -> int:
+    """Task count of the result stage of the newest job tagged `tag` (the
+    write job), first attempt: a resubmitted attempt lists only the
+    partitions still missing."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store is fed async
+    tracker = jsc.statusTracker()
+    job = max(tracker.getJobIdsForTag(tag))
+    # a job's result stage is created after all its parents: highest id
+    stage = max(tracker.getJobInfo(job).get().stageIds())
+    gw = sc._gateway
+    first = jsc.statusStore().stageAttempt(
+        stage, 0, False, gw.jvm.java.util.Collections.emptyList(), False,
+        gw.new_array(gw.jvm.double, 0),
+    )._1()
+    return first.numTasks()
 
 
 def run_stage(
@@ -132,7 +116,7 @@ def run_stage(
     build() is only called when the stage is not already committed — the
     lazy plan is materialized exactly once per pipeline lifetime.
     """
-    from ..sources.tables import commit_table, read_table
+    from ..sources.tables import commit_table, committed_partition_rows, read_table
 
     out = ctx.stage_path(stage)
     if ctx.committed(stage):
@@ -148,17 +132,25 @@ def run_stage(
         observation = Observation(f"stage:{stage}")
         df = df.observe(observation, *[c.alias(k) for k, c in observe_metrics.items()])
 
-    acc = ctx.spark.sparkContext.accumulator({}, _DictMaxParam())
-    df = _with_lineage(df, acc)
-
     # atomic commit THROUGH THE TABLE SEAM (an Iceberg snapshot commit
     # when a catalog is configured; tmp+rename on the parquet fallback —
-    # see sources/tables.commit_table), then the manifest row
-    commit_table(df, out, partition_by)
+    # see sources/tables.commit_table), then lineage and the manifest row.
+    # The tag sits beside the caller's job group, which stays as it was.
+    sc = ctx.spark.sparkContext
+    tag = f"stage-commit-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        commit_table(df, out, partition_by)
+    finally:
+        sc.removeJobTag(tag)
 
+    # a task whose partition was empty wrote no file (except partition 0)
+    n_tasks = _write_tasks(sc, tag)
+    rows = committed_partition_rows(ctx.spark, out)
+    assert all(p < n_tasks for p in rows), (stage, n_tasks, sorted(rows))
     lineage_rows = [
-        {"stage": stage, "partition_id": int(k), "rows_out": v}
-        for k, v in sorted(acc.value.items(), key=lambda kv: int(kv[0]))
+        {"stage": stage, "partition_id": p, "rows_out": rows.get(p, 0)}
+        for p in range(n_tasks)
     ]
     with open(os.path.join(ctx.base_dir, "_lineage", f"{stage}.jsonl"), "w") as f:
         for row in lineage_rows:

@@ -964,8 +964,9 @@ QUERIES["dbscan_label"] = (q_dbscan_label, _sql_dbscan_label())
 #
 # Integer-exact by the classic rank identity on sorted counts:
 #   G = (2·Σ i·x_(i) − (n+1)·Σ x) / (n·Σ x),   i = 1..n ascending
-# every term is int64; the final division is truncating (num ≥ 0, and
-# Spark `div` / DuckDB `//` agree on non-negatives), published as gini_e6.
+# the sums are exact integers (DECIMAL(38,0) past the ×10⁶, see gini_e6);
+# the final division is truncating (num ≥ 0, and Spark `div` / DuckDB `//`
+# agree on non-negatives), published as gini_e6.
 #
 # Scale shape: the corpus collapses to ≤|raster| rows in ONE map-side-
 # combined hash agg (the only corpus-scale stage); the rank window then
@@ -991,12 +992,22 @@ def q_coverage_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both engines rank identically)
     w = Window.orderBy("cnt", "tx", "ty")
     ranked = cells.withColumn("i", F.row_number().over(w).cast("long"))
+    return gini_e6(ranked)
+
+
+def gini_e6(ranked: DataFrame) -> DataFrame:
+    """n_cells, total_images and gini_e6 over (i, cnt) rows, i the 1-based
+    rank of cnt. The numerator times 10⁶ passes 2^63 once Σ i·cnt nears
+    10¹³, so the sums are widened to DECIMAL(38,0) before it (BIGINT would
+    wrap or raise; DuckDB promotes to HUGEINT on its own)."""
+    num = "CAST(sum(i * cnt) AS DECIMAL(38,0))"
+    tot = "CAST(sum(cnt) AS DECIMAL(38,0))"
     return ranked.agg(
         F.count("*").cast("long").alias("n_cells"),
         F.sum("cnt").cast("long").alias("total_images"),
         F.expr(
-            "CAST((2 * sum(i * cnt) - (count(*) + 1) * sum(cnt)) * 1000000"
-            " div (count(*) * sum(cnt)) AS BIGINT)"
+            f"CAST((2 * {num} - (count(*) + 1) * {tot}) * 1000000"
+            f" div (count(*) * {tot}) AS BIGINT)"
         ).alias("gini_e6"),
     )
 

@@ -170,6 +170,18 @@ def test_coverage_gini_raster_bound_and_range(spark, sf_dir):
     assert row["gini_e6"] > 200_000
 
 
+def test_coverage_gini_exact_past_int64(spark):
+    """gini_e6 stays integer-exact when the numerator times 10⁶ passes
+    2^63 (Σ i·cnt near 10¹³), where BIGINT arithmetic would wrap."""
+    rows = [(1, 1), (2, 3), (3, 10**13)]
+    n, tot = len(rows), sum(c for _i, c in rows)
+    num = 2 * sum(i * c for i, c in rows) - (n + 1) * tot
+    assert num * 10**6 > 2**63
+    got = geo7.gini_e6(spark.createDataFrame(rows, "i long, cnt long")).collect()[0]
+    assert (got["n_cells"], got["total_images"]) == (n, tot)
+    assert got["gini_e6"] == num * 10**6 // (n * tot)
+
+
 def test_dbscan_delta_matches_batch_and_keeps_locality(spark, sf_dir):
     """The incremental result equals the batch classification row-for-row
     (the oracle also pins this vs DuckDB), and the spliced 'keep' region is

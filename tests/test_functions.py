@@ -16,6 +16,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from osm_merge_spark.functions import cells, fuzzy, geo, hashes, kernels
+from ref_kernels import _pip_rowloop, pip_oracle, point_polyline_dist
 
 
 # ---------------------------------------------------------------------- geo
@@ -165,7 +166,7 @@ def test_pip_fixed_polygon(spark):
     got = {(r["px"], r["py"]): r["inside"]
            for r in df.select("px", "py", udf(F.col("px"), F.col("py")).alias("inside")).collect()}
     for x, y in pts:
-        assert got[(x, y)] == kernels.pip_oracle(x, y, HEX_RING), (x, y)
+        assert got[(x, y)] == pip_oracle(x, y, HEX_RING), (x, y)
 
 
 def test_pip_per_row(spark):
@@ -184,7 +185,7 @@ def test_point_polyline_dist(spark):
             Row(px=0.0, py=0.0, xs=[0.0, 0.0], ys=[0.0, 0.0]),      # degenerate → 0
             Row(px=2.0, py=2.0, xs=[0.0, 4.0, 4.0], ys=[0.0, 0.0, 4.0])]  # → 2.0
     df = spark.createDataFrame(rows)
-    got = [r["d"] for r in df.select(kernels.point_polyline_dist(
+    got = [r["d"] for r in df.select(point_polyline_dist(
         F.col("px"), F.col("py"), F.col("xs"), F.col("ys")).alias("d")).collect()]
     assert got == pytest.approx([1.0, 4.0, 0.0, 2.0])
 
@@ -210,7 +211,6 @@ def test_point_polyline_dist_native_matches_arrow_kernel(spark):
 
     from pyspark.sql import functions as F
 
-    from osm_merge_spark.functions.kernels import point_polyline_dist
     from osm_merge_spark.operators.conflate import point_polyline_dist_native
 
     random.seed(7)
@@ -235,7 +235,7 @@ def test_pip_batch_equals_rowloop_on_random_polygons():
     duplicates, NaN-holed polygons, and random jumbles."""
     import numpy as np
 
-    from osm_merge_spark.functions.kernels import _pip_rowloop, pip_batch
+    from osm_merge_spark.functions.kernels import pip_batch
 
     rng = np.random.RandomState(7)
     for _trial in range(60):

@@ -6,6 +6,8 @@ import os
 import shutil
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
@@ -13,6 +15,7 @@ from pyspark.sql import functions as F
 from osm_merge_spark.data.synth import synth_images, synth_layer
 from osm_merge_spark.plans import PipelineContext
 from osm_merge_spark.plans.pipeline import conflation_pipeline, run_stage
+from osm_merge_spark.sources.tables import read_table
 
 N = 400
 
@@ -39,6 +42,85 @@ def test_stage_commit_lineage_and_metrics(spark, tmp_path):
     lin = ctx.lineage("imgs")
     assert sum(r["rows_out"] for r in lin) == N
     assert len(lin) == 4  # one lineage row per physical partition
+
+
+def _lineage_rows(spark, ctx, stage):
+    """Per-partition rows of a committed stage, checked against the
+    manifest row and a full count of the stage's table."""
+    (m,) = [m for m in ctx.manifest() if m["stage"] == stage]
+    lin = ctx.lineage(stage)
+    assert [r["partition_id"] for r in lin] == list(range(len(lin)))
+    assert m["n_partitions"] == len(lin)
+    assert m["rows_out"] == sum(r["rows_out"] for r in lin)
+    assert m["rows_out"] == read_table(spark, ctx.stage_path(stage)).count()
+    return [r["rows_out"] for r in lin]
+
+
+def test_lineage_lists_empty_partitions(spark, tmp_path):
+    """Every write task gets a lineage row, including tasks whose partition
+    held no rows (they commit no data file)."""
+    ctx = _ctx(spark, tmp_path, "p5")
+    run_stage(ctx, "skew", lambda s: synth_images(s, 100).repartition(8, F.lit(1)))
+    rows = _lineage_rows(spark, ctx, "skew")
+    assert len(rows) == 8 and sorted(rows) == [0] * 7 + [100]
+
+    run_stage(ctx, "empty",
+              lambda s: synth_images(s, 100).repartition(4).filter(F.col("lat") > 1000.0))
+    assert _lineage_rows(spark, ctx, "empty") == [0, 0, 0, 0]
+
+
+def test_lineage_of_a_plan_optimized_to_empty(spark, tmp_path):
+    """A plan the optimizer folds to an empty relation still runs one write
+    task, which commits partition 0's empty file: one zero row."""
+    ctx = _ctx(spark, tmp_path, "p8")
+    run_stage(ctx, "folded", lambda s: synth_images(s, 100).filter(F.lit(False)))
+    assert _lineage_rows(spark, ctx, "folded") == [0]
+
+
+def test_lineage_sums_partition_directories(spark, tmp_path):
+    """A partition_by stage writes one file per (task, directory); lineage
+    sums them per write task."""
+    ctx = _ctx(spark, tmp_path, "p6")
+    run_stage(
+        ctx, "split",
+        lambda s: synth_images(s, 100).repartition(3).withColumn("k", F.col("i") % 5),
+        partition_by=["k"],
+    )
+    rows = _lineage_rows(spark, ctx, "split")
+    assert len(rows) == 3 and sum(rows) == 100 and min(rows) > 0
+    n_files = sum(
+        fn.startswith("part-")
+        for _dp, _dns, fns in os.walk(ctx.stage_path("split")) for fn in fns
+    )
+    assert n_files > len(rows)
+
+
+def test_failed_stage_commits_nothing(spark, tmp_path):
+    """A stage whose job fails leaves no output, manifest row, lineage or
+    job tag behind, keeps the caller's job group, and runs on the rerun."""
+    sc = spark.sparkContext
+    ctx = _ctx(spark, tmp_path, "p7")
+
+    def bad(s):
+        df = synth_images(s, 50)
+        return df.withColumn(
+            "i", F.when(F.col("i") == 7, F.raise_error(F.lit("bad row"))).otherwise(F.col("i"))
+        )
+
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        with pytest.raises(Exception, match="bad row"):
+            run_stage(ctx, "flaky", bad)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(sc.getJobTags()) == set()
+    assert ctx.manifest() == [] and ctx.lineage("flaky") == []
+    assert not os.path.exists(ctx.stage_path("flaky"))
+
+    run_stage(ctx, "flaky", lambda s: synth_images(s, 50))
+    assert ctx.executed == ["flaky"]
+    assert sum(_lineage_rows(spark, ctx, "flaky")) == 50
 
 
 def test_resume_skips_committed_stages(spark, tmp_path):

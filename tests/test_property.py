@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from osm_merge_spark.functions.cells import CellGrid
 from osm_merge_spark.functions.fuzzy import _indel_ratio_batch, indel_ratio_oracle
-from osm_merge_spark.functions.kernels import pip_oracle
+from ref_kernels import pip_oracle
 
 LAT_CAP = 70.0
 

@@ -180,8 +180,8 @@ def test_pip_respects_polygon_holes(spark):
 def test_flatten_multipolygon_carries_holes(spark):
     import math
 
-    from osm_merge_spark.functions import kernels
     from osm_merge_spark.sources.geojson import _flatten
+    from ref_kernels import _raycast_polygon
 
     mp = {"type": "MultiPolygon", "coordinates": [
         [[[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]],
@@ -194,7 +194,7 @@ def test_flatten_multipolygon_carries_holes(spark):
     assert sum(1 for v in xs if math.isnan(v)) == 2
     px = np.array([2.0, 0.5, 11.0, 5.0])
     py = np.array([2.0, 0.5, 11.0, 5.0])
-    got = kernels._raycast_polygon(
+    got = _raycast_polygon(
         px, py, np.asarray(xs, float), np.asarray(ys, float)
     )
     assert got.tolist() == [False, True, True, False]

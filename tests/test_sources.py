@@ -133,6 +133,19 @@ def test_poly_writer(tmp_path):
     assert len(lines) == 2 + 3 + 2
 
 
+def test_iceberg_catalog_without_runtime_jar_uses_parquet(spark):
+    """A configured Iceberg catalog alone does not select the Iceberg
+    branch: the runtime jar must load too (it does not ship here)."""
+    from osm_merge_spark.sources import tables
+
+    conf = spark.sparkContext._jsc.sc().conf()
+    conf.set("spark.sql.catalog.probe", "org.apache.iceberg.spark.SparkCatalog")
+    try:
+        assert tables.iceberg_available(spark) is False
+    finally:
+        conf.remove("spark.sql.catalog.probe")
+
+
 def test_table_io_abstraction(spark, tmp_path):
     """tables.write_table/read_table: parquet layout fallback when no
     Iceberg catalog is configured (this sandbox)."""

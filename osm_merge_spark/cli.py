@@ -108,18 +108,16 @@ def cmd_poidup(args) -> int:
         F.col(args.name_col).alias("name"),
     )
     grid = CellGrid.for_radius(args.threshold_m * 1.05, max_abs_lat=70.0)
-    pairs = cell_join.candidate_pairs(
+    pairs = cell_join.cell_pairs(
         pts, pts.select(
             F.col("poi_id").alias("feature_id"),
-            F.array("lon").alias("xs"), F.array("lat").alias("ys"),
+            F.col("lon").alias("s_lon"), F.col("lat").alias("s_lat"),
             F.col("name").alias("s_name"),
         ),
-        grid, p_key="poi_id", s_key="feature_id", secondary_points=True,
+        grid.ring1(grid.encode(F.col("lon"), F.col("lat"))),
+        grid.encode(F.col("s_lon"), F.col("s_lat")),
     ).filter(F.col("poi_id") < F.col("feature_id"))
-    d = geo.haversine_m(
-        F.col("lon"), F.col("lat"),
-        F.element_at("xs", 1), F.element_at("ys", 1),
-    )
+    d = geo.haversine_m(F.col("lon"), F.col("lat"), F.col("s_lon"), F.col("s_lat"))
     dups = (
         pairs.withColumn("dist_m", d)
         .filter(F.col("dist_m") <= F.lit(args.threshold_m))
@@ -150,16 +148,16 @@ def cmd_buildings(args) -> int:
     pa = a.select(
         F.col(args.id_col).alias("id_a"),
         F.col("xs").alias("xs1"), F.col("ys").alias("ys1"),
-    ).withColumn("__jcell", F.explode(
-        cell_join.covering_cells(F.col("xs1"), F.col("ys1"), grid)))
+    )
     pb = b.select(
         F.col(args.id_col).alias("id_b"),
         F.col("xs").alias("xs2"), F.col("ys").alias("ys2"),
-    ).withColumn("__jcell", F.explode(
-        cell_join.covering_cells(F.col("xs2"), F.col("ys2"), grid)))
+    )
     pairs = (
-        pa.join(pb, "__jcell").drop("__jcell")
-        .dropDuplicates(["id_a", "id_b"])
+        cell_join.cell_pairs(
+            pa, pb, cell_join.covering_cells(F.col("xs1"), F.col("ys1"), grid),
+            cell_join.covering_cells(F.col("xs2"), F.col("ys2"), grid),
+        )
         .withColumn("area", polygon_intersection_area(
             F.col("xs1"), F.col("ys1"), F.col("xs2"), F.col("ys2")))
         .filter(F.col("area") > F.lit(0.0))

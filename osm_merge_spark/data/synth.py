@@ -22,7 +22,7 @@ Planted structure (match classes, known by construction — FIXTURES.md §2):
   i%10 == 6   : matching caption but planted FAR away       → NEW (distance
                 gates before tags, conflator.py:188)
   i%10 == 7-9 : no layer feature at all                     → NEW
-Plus a 20% hot cluster inside one grid cell (skew/salting test) and decoy
+Plus a 20% hot cluster inside one grid cell (skew-split test) and decoy
 layer features derived from no image.
 """
 

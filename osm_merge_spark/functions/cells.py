@@ -77,13 +77,19 @@ class CellGrid:
     def ring1(self, cell: Column) -> Column:
         """The 3×3 k-ring around a cell id, as an array<long> for explode().
 
-        Exploding the *probe* side by its ring and equi-joining on the raw
-        cell of the build side finds every pair within one cell edge —
-        the standard grid spatial-join (candidate superset, exact refine
-        afterwards).
+        Joining one side's ring against the other side's raw cell finds
+        every pair within one cell edge (offsets are symmetric, so either
+        side may carry the ring) — the standard grid spatial join
+        (candidate superset, exact refine afterwards).
         """
         offsets = [dy * self.nx + dx for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
         return F.array(*[cell + F.lit(o) for o in offsets])
+
+    def ring1_union(self, cells: Column) -> Column:
+        """The ring-1 dilation of an array<long> of cells: the distinct
+        union of ring1 over every cell (a geometry's covering set grown by
+        one cell edge)."""
+        return F.array_distinct(F.flatten(F.transform(cells, self.ring1)))
 
     def ring1_sql_values(self) -> list[int]:
         """Ring offsets for building the oracle's UNNEST list."""

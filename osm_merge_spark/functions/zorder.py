@@ -7,7 +7,7 @@ OPTIMIZE ZORDER uses). Pure Catalyst bit arithmetic — codegen'd, no UDF —
 with a bit-identical DuckDB mirror for the oracle.
 
 The reference has no layout notion at all (flat GeoJSON lists); this is
-scale engineering the Spark engine adds, like hot-cell salting.
+scale engineering the Spark engine adds, like the cell join.
 """
 
 from __future__ import annotations

@@ -2,30 +2,36 @@
 
 The reference's distance-threshold join is an O(N·M) nested loop with the
 full secondary copied into every worker (conflator.py:134-188, 766-788).
-Spark-first re-expression: encode both sides into grid cells, equi-join on
-the cell key, refine exactly. The physical strategy is chosen per layer:
+Spark-first re-expression: give each row its set of grid cells, equi-join
+on the cell key, refine exactly. `cell_pairs` is the one join:
 
-  - broadcast hash join   — secondary fits executor memory (the reference's
-                            copy-everywhere layout IS a broadcast join);
-  - shuffle hash join     — with *explicit salting of hot cells* (north
-                            rule): without it one dense urban cell becomes
-                            one straggler task at 100 TB.
+  - a point's cell set is its one cell, `grid.encode(lon, lat)`;
+  - a line or ring's is `covering_cells(xs, ys, grid)`;
+  - in a distance join (threshold ≤ cell edge) the side that is not a
+    point is ring-1 dilated (`grid.ring1` / `grid.ring1_union`). Ring-1
+    is symmetric, so which side carries it changes no candidate pair.
 
-Candidate generation is a strict superset of the true result (ring-1
-neighbor expansion with cell edge ≥ threshold); exactness comes from the
-refine stage (haversine / point→polyline distance), so the join itself
-never produces false negatives.
+Each pair is produced in exactly one cell, so no plan needs a pair-dedup
+aggregate (the reference-cell rule of PBSM duplicate avoidance): with a
+point on one side the pair meets only in that point's cell; with two
+geometries it is kept only in the smallest cell the two sets share.
+
+No strategy knob: AQE picks broadcast or shuffle at runtime from measured
+sizes, and its skew-join split (enabled engine-wide in session.py) splits
+the shuffle partitions a hot cell makes oversized.
+
+Candidate generation is a strict superset of the true result; exactness
+comes from the caller's refine (haversine / point→polyline distance /
+point-in-ring / intersection area).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from ..functions.cells import CellGrid
-
-DEFAULT_SALT = 8
-DEFAULT_HOT_THRESHOLD = 5_000  # rows in one cell before it counts as "hot"
 
 
 def covering_cells(xs: Column, ys: Column, grid: CellGrid) -> Column:
@@ -56,233 +62,53 @@ def covering_cells(xs: Column, ys: Column, grid: CellGrid) -> Column:
     return F.array_distinct(F.flatten(F.transform(F.sequence(F.lit(1), nseg), seg_cells)))
 
 
-def candidate_pairs(
-    primary: DataFrame,
-    secondary: DataFrame,
-    grid: CellGrid,
-    *,
-    p_lon: str = "lon",
-    p_lat: str = "lat",
-    p_key: str = "image_id",
-    s_key: str = "feature_id",
-    s_xs: str = "xs",
-    s_ys: str = "ys",
-    broadcast_secondary: bool | None = None,
-    n_salt: int = DEFAULT_SALT,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    secondary_points: bool = False,
-    ring_secondary: bool = False,
-    dedup_pairs: bool = True,
-) -> DataFrame:
-    """Primary points × secondary geometries candidate pairs via cell join.
+def cell_pairs(a: DataFrame, b: DataFrame, a_cells: Column, b_cells: Column) -> DataFrame:
+    """Every (a, b) row pair whose cell sets share a cell, each exactly once.
 
-    Returns primary columns + secondary columns (both sides' payloads), one
-    row per distinct (p_key, s_key) pair whose geometries can possibly be
-    within one cell edge.
-
-    broadcast_secondary=None auto-chooses: try broadcast when the secondary
-    plan is a simple small scan (AQE will demote if oversized); True/False
-    forces. The salted path is taken only for the shuffle strategy.
+    A cell set is a long (a point's one cell) or an array<long> of distinct
+    cells; the column types pick the case at plan time. Returns a's columns
+    then b's columns.
     """
-    if ring_secondary and secondary_points:
-        # Ring-1 coverage is symmetric: pairs within one cell edge meet
-        # whether the probe or the build side is dilated. Ringing the
-        # SMALLER side (typically the feature layer: 10-100× fewer rows
-        # than the image stream) keeps the big side un-exploded — 9× less
-        # join input on the dominant side.
-        p = primary.withColumn(
-            "__jcell", grid.encode(F.col(p_lon), F.col(p_lat))
-        )
-        s = secondary.withColumn(
-            "__jcell",
-            F.explode(
-                grid.ring1(grid.encode(F.element_at(s_xs, 1), F.element_at(s_ys, 1)))
-            ),
-        )
-        if broadcast_secondary:
-            return p.join(F.broadcast(s), "__jcell").drop("__jcell")
-        if broadcast_secondary is None:
-            return p.join(s, "__jcell").drop("__jcell")
-        return _salted_join(p, s, p_key, n_salt, hot_threshold).drop(
-            "__jcell", "__salt"
-        )
-
-    p = primary.withColumn(
-        "__jcell", F.explode(grid.ring1(grid.encode(F.col(p_lon), F.col(p_lat))))
+    a_arr = isinstance(a.select(a_cells).schema[0].dataType, ArrayType)
+    b_arr = isinstance(b.select(b_cells).schema[0].dataType, ArrayType)
+    if not (a_arr and b_arr):
+        # a point meets each partner only in its own cell: the array side's
+        # cells are distinct, so no pair can repeat and no array rides along
+        ja = a.withColumn("__jcell", F.explode(a_cells) if a_arr else a_cells)
+        jb = b.withColumn("__jcell", F.explode(b_cells) if b_arr else b_cells)
+        return ja.join(jb, "__jcell").drop("__jcell")
+    # two geometries can share several cells: keep the pair only in the
+    # smallest shared one — a row filter, not a dedup aggregate.
+    # explode_outer: a plain explode of the array column infers a
+    # size() > 0 filter that is pushed below the projection and recomputes
+    # the cell sets there (5× the join's time at sf0.1); the null cell it
+    # emits for an empty set matches nothing
+    ja = a.withColumn("__acells", a_cells).withColumn("__jcell", F.explode_outer("__acells"))
+    jb = b.withColumn("__bcells", b_cells).withColumn("__jcell", F.explode_outer("__bcells"))
+    ref_cell = F.array_min(F.array_intersect("__acells", "__bcells"))
+    return (
+        ja.join(jb, "__jcell")
+        .filter(F.col("__jcell") == ref_cell)
+        .drop("__jcell", "__acells", "__bcells")
     )
-    if secondary_points:
-        # point secondaries live in exactly ONE cell, and the probe's 9
-        # ring cells are distinct → every (p_key, s_key) pair joins in at
-        # most one cell. No pair-dedup aggregation needed — that dedup is
-        # a SortAggregate over the full payload (maps sort-merge, not
-        # hash) and dominates the join cost at scale.
-        s = secondary.withColumn(
-            "__jcell",
-            grid.encode(F.element_at(s_xs, 1), F.element_at(s_ys, 1)),
-        )
-    else:
-        s = secondary.withColumn(
-            "__jcell", F.explode(covering_cells(F.col(s_xs), F.col(s_ys), grid))
-        )
-
-    if broadcast_secondary:
-        joined = p.join(F.broadcast(s), "__jcell")
-    elif broadcast_secondary is None:
-        joined = p.join(s, "__jcell")  # AQE picks broadcast vs shuffle at runtime
-    else:
-        joined = _salted_join(p, s, p_key, n_salt, hot_threshold)
-
-    joined = joined.drop("__jcell", "__salt")
-    if secondary_points:
-        return joined
-    # a line/ring pair can meet in several cells — keep one row per pair.
-    # Dedup HERE, before the refine: measured 2.2× faster than deduping
-    # after it (duplicates would re-run the expensive polyline math), and
-    # also faster than a segment-exploded codegen reformulation (which
-    # doubles the candidate row count). dedup_pairs=False is for callers
-    # whose downstream aggregation absorbs duplicates anyway.
-    if not dedup_pairs:
-        return joined
-    return joined.dropDuplicates([p_key, s_key])
 
 
-def candidate_pairs_points(
-    primary: DataFrame,
-    secondary: DataFrame,
-    grid: CellGrid,
-    *,
-    p_lon: str = "lon",
-    p_lat: str = "lat",
-    p_key: str = "image_id",
-    s_lon: str = "s_lon",
-    s_lat: str = "s_lat",
-    broadcast_secondary: bool | None = None,
-    n_salt: int = DEFAULT_SALT,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-) -> DataFrame:
-    """Point-secondary cell join on SCALAR coordinates.
-
-    Same semantics as candidate_pairs(secondary_points=True) but the
-    secondary carries (s_lon, s_lat) doubles instead of 1-element arrays.
-    This exists for the broadcast build side: a scalar point row is ~24 B
-    in the hash relation vs ~90 B with two array headers — the driver-side
-    broadcast collect is the one serial term both cluster sizes pay
-    identically, so its byte count directly caps scaling efficiency.
-    """
-    p = primary.withColumn(
-        "__jcell", F.explode(grid.ring1(grid.encode(F.col(p_lon), F.col(p_lat))))
+# perfbench-only: perfbench/workloads.py's `--trace 1` chain calls these
+# two forms. Both take the orientation conflate() uses (single probe cell,
+# ring-1 dilated layer); the salting keywords it passes are ignored.
+def candidate_pairs_points(primary: DataFrame, secondary: DataFrame, grid: CellGrid,
+                           **_ignored) -> DataFrame:
+    """Images (lon, lat) × point features (s_lon, s_lat)."""
+    return cell_pairs(
+        primary, secondary, grid.encode(F.col("lon"), F.col("lat")),
+        grid.ring1(grid.encode(F.col("s_lon"), F.col("s_lat"))),
     )
-    s = secondary.withColumn(
-        "__jcell", grid.encode(F.col(s_lon), F.col(s_lat))
+
+
+def candidate_pairs(primary: DataFrame, secondary: DataFrame, grid: CellGrid,
+                    **_ignored) -> DataFrame:
+    """Images (lon, lat) × line/ring features (xs, ys)."""
+    return cell_pairs(
+        primary, secondary, grid.encode(F.col("lon"), F.col("lat")),
+        grid.ring1_union(covering_cells(F.col("xs"), F.col("ys"), grid)),
     )
-    if broadcast_secondary:
-        joined = p.join(F.broadcast(s), "__jcell")
-    elif broadcast_secondary is None:
-        joined = p.join(s, "__jcell")
-    else:
-        joined = _salted_join(p, s, p_key, n_salt, hot_threshold)
-    return joined.drop("__jcell", "__salt")
-
-
-def candidate_pairs_fused(
-    primary: DataFrame,
-    secondary: DataFrame,
-    grid: CellGrid,
-    *,
-    p_lon: str = "lon",
-    p_lat: str = "lat",
-    s_key: str = "feature_id",
-    s_xs: str = "xs",
-    s_ys: str = "ys",
-) -> DataFrame:
-    """Shuffle-first candidate generation with ring-1 on the SECONDARY and
-    BOTH geometry kinds in ONE join — the 100 TB formulation (no broadcast,
-    no serial driver-side hash build; round-3 scaling fix).
-
-    Layout inversion vs candidate_pairs: the probe keeps its single raw
-    cell (the big image stream is never exploded 9×), while the layer side
-    — typically 10-100× smaller — explodes ring-1 (points) or ring-1-
-    dilated covering cells (polylines). Point build rows carry scalar
-    s_lon/s_lat with NULL arrays; line rows carry the packed arrays with
-    NULL scalars; one unionByName feeds ONE shuffle-hash equi-join on the
-    cell key, so the probe is scanned/shuffled once for both kinds.
-
-    Pair-dedup is eliminated STRUCTURALLY: each (probe, feature) pair can
-    meet only in the probe's single cell (the exploded cell lists are
-    distinct per feature), so no dropDuplicates aggregation — the r2
-    line-branch dedup shuffle + SortAggregate vanish from the plan.
-
-    Every shuffle here scales with executors; skewed probe cells are
-    handled by AQE's runtime skew-join split (enabled engine-wide), which
-    on a shuffle join CAN act — unlike the broadcast path, where the skew
-    is hidden inside one map task.
-    """
-    p = primary.withColumn("__jcell", grid.encode(F.col(p_lon), F.col(p_lat)))
-    null_arr = F.lit(None).cast("array<double>")
-    pts_cell = F.explode(
-        grid.ring1(grid.encode(F.element_at(s_xs, 1), F.element_at(s_ys, 1)))
-    ).alias("__jcell")
-    lines_cell = F.explode(
-        F.array_distinct(F.flatten(F.transform(
-            covering_cells(F.col(s_xs), F.col(s_ys), grid),
-            lambda c: grid.ring1(c),
-        )))
-    ).alias("__jcell")
-    sec_pts = secondary.filter(F.size(s_xs) == 1).select(
-        F.col(s_key),
-        F.element_at(s_xs, 1).alias("s_lon"),
-        F.element_at(s_ys, 1).alias("s_lat"),
-        null_arr.alias(s_xs),
-        null_arr.alias(s_ys),
-        pts_cell,
-    )
-    sec_lines = secondary.filter(F.size(s_xs) > 1).select(
-        F.col(s_key),
-        F.lit(None).cast("double").alias("s_lon"),
-        F.lit(None).cast("double").alias("s_lat"),
-        F.col(s_xs), F.col(s_ys),
-        lines_cell,
-    )
-    s = sec_pts.unionByName(sec_lines)
-    # hint on the probe: it is the smaller, fixed-width side — its per-
-    # partition hash map stays small while the exploded layer streams
-    return p.hint("SHUFFLE_HASH").join(s, "__jcell").drop("__jcell")
-
-
-def _salted_join(p: DataFrame, s: DataFrame, p_key: str, n_salt: int,
-                 hot_threshold: int) -> DataFrame:
-    """Shuffle hash join on cell keys with explicit hot-cell salting.
-
-    Hot cells (dense clusters: one city block of images) are detected with a
-    cheap pre-aggregation on the already-exploded build side; the probe side
-    splits each hot cell into n_salt sub-keys by hashing its row key, the
-    build side replicates hot-cell rows n_salt times. Cold cells pay
-    nothing (salt 0 on both sides, no replication).
-    """
-    hot = (
-        s.groupBy("__jcell").count()
-        .filter(F.col("count") > F.lit(hot_threshold))
-        .select("__jcell", F.lit(True).alias("__hot"))
-    )
-    p2 = (
-        p.join(F.broadcast(hot), "__jcell", "left")
-        .withColumn(
-            "__salt",
-            F.when(F.col("__hot"), F.pmod(F.xxhash64(F.col(p_key)), F.lit(n_salt)))
-            .otherwise(F.lit(0)).cast("int"),
-        )
-        .drop("__hot")
-    )
-    s2 = (
-        s.join(F.broadcast(hot), "__jcell", "left")
-        .withColumn(
-            "__salt",
-            F.explode(
-                F.when(F.col("__hot"), F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        .withColumn("__salt", F.col("__salt").cast("int"))
-        .drop("__hot")
-    )
-    return p2.join(s2, ["__jcell", "__salt"])

@@ -8,9 +8,11 @@ version; primaries with no candidate become "new" features
 (conflator.py:318-325).
 
 Spark-first plan (one lazy DataFrame graph, no driver loops):
-    scan → cell encode → ring-1 explode → cell join (AQE picks broadcast
-    or shuffle; points and lines split by geometry) → exact distance refine
-    (haversine / point→polyline) → then two outputs off the refined pairs:
+    scan → cell encode → cell_pairs (each image keeps its one cell, the
+    layer is ring-1 dilated; points and lines split by geometry; every
+    pair meets in exactly one cell, so no pair dedup; AQE picks broadcast
+    or shuffle) → exact distance refine (haversine / point→polyline) →
+    then two outputs off the refined pairs:
       new:     images with no refined pair (one anti-join);
       matched: top-5 cap with the best-part min folded in (one hash
                aggregation per image) → fuzzy+ref gates → one winner per
@@ -44,8 +46,10 @@ class ConflateParams:
     fuzz_min: float = 85.0        # conflator.py:596-598
     len_diff_max: int = 3         # conflator.py:597
     candidate_cap: int = 5        # conflator.py:262-267
-    n_salt: int = cell_join.DEFAULT_SALT
-    hot_threshold: int = cell_join.DEFAULT_HOT_THRESHOLD
+    # perfbench-only: its `--trace 1` chain passes these to the cell-join
+    # delegates, which ignore them (skew is AQE's skew-join split)
+    n_salt: int = 8
+    hot_threshold: int = 5_000
 
 
 def point_polyline_dist_native(px, py, xs, ys) -> F.Column:
@@ -224,7 +228,7 @@ def conflate(images: DataFrame, layer: DataFrame,
          .withColumn("s_ref", F.element_at("s_tags", "ref:usfs")))
 
     # SLIM join: only ids + coordinates flow through the cell join, the
-    # 9× ring explode, the refine, and the top-5 cap — captions/tag
+    # refine, and the top-5 cap — captions/tag
     # maps/versions re-attach AFTER capping, when the row count is back to
     # ≤5·|images|. Payload-wide candidate rows were both the dominant
     # shuffle volume and (when AQE broadcasts the layer) a serial
@@ -250,8 +254,6 @@ def conflate(images: DataFrame, layer: DataFrame,
     s_slim = s.select("feature_id", "xs", "ys").filter(
         F.col("feature_id").isNotNull()
     )
-    # line pairs dedup on the replicated object: the geometry part
-    pair_key = ["image_id", "feature_id"]
     if explode_multipart:
         # multi-part geometries ride as NaN-separated packed arrays
         # (sources/geojson); per-part rows join/refine independently and
@@ -260,7 +262,6 @@ def conflate(images: DataFrame, layer: DataFrame,
         from .multipart import explode_parts
 
         s_slim = explode_parts(s_slim)
-        pair_key.append("part_idx")
 
     # Planar bbox prefilter bound — cheap compares per candidate BEFORE
     # the transcendental refine. A point within threshold_m of a geometry
@@ -276,20 +277,19 @@ def conflate(images: DataFrame, layer: DataFrame,
         [] if p_has_tags else ["caption"]
     )
 
+    p_cell = grid.encode(F.col("lon"), F.col("lat"))
+
     def points_refined(s_part: DataFrame) -> DataFrame:
-        # point features join + refine on SCALAR coordinates: the
-        # broadcast hash relation holds ~24 B/row (vs ~90 B with packed
-        # 1-element arrays) — the broadcast collect is the serial term
-        # BOTH simulated cluster sizes pay identically, so its byte count
-        # directly caps the N→4N scaling efficiency.
+        # point features join + refine on SCALAR coordinates: a build row
+        # holds ~24 B (vs ~90 B with packed 1-element arrays)
         s_pts = s_part.select(
             "feature_id",
             F.element_at("xs", 1).alias("s_lon"),
             F.element_at("ys", 1).alias("s_lat"),
         )
-        pp = cell_join.candidate_pairs_points(
-            p_slim, s_pts, grid,
-            n_salt=params.n_salt, hot_threshold=params.hot_threshold,
+        pp = cell_join.cell_pairs(
+            p_slim, s_pts, p_cell,
+            grid.ring1(grid.encode(F.col("s_lon"), F.col("s_lat"))),
         )
         pp = pp.filter(
             (F.col("lat") >= F.col("s_lat") - F.lit(deg))
@@ -307,11 +307,10 @@ def conflate(images: DataFrame, layer: DataFrame,
         )
 
     def lines_refined(s_part: DataFrame) -> DataFrame:
-        lp = cell_join.candidate_pairs(
-            p_slim, s_part, grid,
-            n_salt=params.n_salt, hot_threshold=params.hot_threshold,
-            secondary_points=False, dedup_pairs=False,
-        ).dropDuplicates(pair_key)
+        lp = cell_join.cell_pairs(
+            p_slim, s_part, p_cell,
+            grid.ring1_union(cell_join.covering_cells(F.col("xs"), F.col("ys"), grid)),
+        )
         lp = lp.filter(
             (F.col("lat") >= F.array_min("ys") - F.lit(deg))
             & (F.col("lat") <= F.array_max("ys") + F.lit(deg))
@@ -329,8 +328,8 @@ def conflate(images: DataFrame, layer: DataFrame,
     else:
         # mixed layers split by geometry: point features (the vast
         # majority in real layers) take the scalar fast path; only
-        # line/ring features pay the covering-cells explode + pair-dedup
-        # + polyline refine.
+        # line/ring features pay the covering-cells explode + polyline
+        # refine.
         refined = points_refined(s_slim.filter(F.size("xs") == 1)).unionByName(
             lines_refined(s_slim.filter(F.size("xs") > 1))
         )
@@ -339,7 +338,7 @@ def conflate(images: DataFrame, layer: DataFrame,
     new = new_features(p, refined)
 
     # top-5 cap in one hash aggregation per image (collect_list, no window
-    # sort — BASELINE.md §4.5): sort the (dist, feature) pairs; each
+    # sort): sort the (dist, feature) pairs; each
     # feature's first entry is its nearest part (the best-part min), and
     # the first k distinct features are the cap. array_position finds each
     # first entry, so the per-image work is O(k·n), not O(n²).

@@ -17,8 +17,8 @@ Scale shape (the 100 TB story):
     the build side keeps its single cell, so each directed pair meets in
     EXACTLY one cell — no distinct before the count;
   - quadratic cost is confined INSIDE an eps-cell (the bound every density
-    method pays); hot cells fall under the salting/AQE-skew doctrine
-    (operators/cell_join.py:289);
+    method pays); hot cells fall under AQE's skew-join split
+    (session.py);
   - neighbor counts: one map-side-combined hash agg; border detection: one
     shuffled-hash LEFT SEMI of the pair stream against the core set
     (corpus-scale — never broadcast); label attach: two shuffled-hash
@@ -40,16 +40,16 @@ def eps_pairs(points: DataFrame, grid: CellGrid, eps_m: float, *,
               key: str = "id", lon: str = "lon", lat: str = "lat") -> DataFrame:
     """Directed pairs (key, bkey) with haversine ≤ eps_m, each exactly once."""
     a = points.select(key, lon, lat).withColumn(
-        "__jcell",
+        "__cell",
         F.explode(grid.ring1(grid.encode(F.col(lon), F.col(lat)))),
     )
     b = points.select(
         F.col(key).alias("__bkey"),
         F.col(lon).alias("__blon"),
         F.col(lat).alias("__blat"),
-    ).withColumn("__jcell", grid.encode(F.col("__blon"), F.col("__blat")))
+    ).withColumn("__cell", grid.encode(F.col("__blon"), F.col("__blat")))
     return (
-        a.join(b.hint("shuffle_hash"), "__jcell")
+        a.join(b.hint("shuffle_hash"), "__cell")
         .where(F.col(key) != F.col("__bkey"))
         .where(
             geo.haversine_m(

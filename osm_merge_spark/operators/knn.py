@@ -23,8 +23,9 @@ def top_k_agg(pairs: DataFrame, partition_key: str, dist_col: str,
 
     A row_number window shuffles every pair row then SORTS entire
     partitions just to keep k rows per key — measured as the worst-scaling
-    stage of the conflation ladder (0.34 efficiency at 4× cores, BASELINE.md
-    §4.3). This formulation instead hash-aggregates:
+    stage of the conflation ladder (0.34 efficiency at 4× cores on an
+    earlier 32-core host, BASELINE.md §5). This formulation instead
+    hash-aggregates:
 
         groupBy(key).agg(slice(array_sort(collect_list(struct(dist, tie))), 1, k))
 
@@ -148,9 +149,10 @@ def knn_unbounded(primary: DataFrame, secondary: DataFrame, k: int,
         if n_rem == 0:
             break
         grid = CellGrid.for_radius(radius, max_abs_lat=75.0)
-        pairs = cell_join.candidate_pairs(
-            remaining, secondary, grid, p_key=p_key, s_key=s_key,
-            secondary_points=True,
+        pairs = cell_join.cell_pairs(
+            remaining, secondary,
+            grid.ring1(grid.encode(F.col("lon"), F.col("lat"))),
+            grid.encode(F.element_at("xs", 1), F.element_at("ys", 1)),
         ).withColumn(
             "dist",
             geo.haversine_m(

@@ -131,7 +131,7 @@ def _sql_zorder_key() -> str:
 
 # ---------------------------------------------------------------------------
 # cell_stats — cell encoding (the H3/S2-style index) + per-cell density
-# (feeds hot-cell detection for salting; SURVEY §4 skew row)
+# (the hot-cell view of join skew; SURVEY §4 skew row)
 # ---------------------------------------------------------------------------
 def q_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = base.images_df(spark, sf_dir)
@@ -161,12 +161,11 @@ def _pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs more than the downstream queries save (the cached slim images
     table already removes the expensive shared prefix)."""
     img = base.images_df(spark, sf_dir)
-    lyr = base.layer_df(spark, sf_dir).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
-    pairs = cell_join.candidate_pairs(
-        img, lyr, GRID, p_key="image_id", s_key="feature_id",
-        secondary_points=True, ring_secondary=True,  # layer is ~25× smaller
+    lyr = base.layer_df(spark, sf_dir)
+    # the ring dilates the layer (~25× smaller); images keep their one cell
+    pairs = cell_join.cell_pairs(
+        img, lyr, GRID.encode(F.col("lon"), F.col("lat")),
+        GRID.ring1(GRID.encode(F.col("s_lon"), F.col("s_lat"))),
     )
     return pairs.withColumn(
         "dist",
@@ -175,8 +174,8 @@ def _pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_pairs() -> str:
-    # mirror of the ring_secondary=True engine plan: the (small) layer is
-    # dilated by the ring, images keep their single cell
+    # mirror of the engine plan: the (small) layer is dilated by the ring,
+    # images keep their single cell
     offs = ", ".join(str(o) for o in GRID.ring1_sql_values())
     return (
         f"img AS ({base.IMAGES_SQL}), lyr AS ({base.LAYER_SQL}), "
@@ -288,7 +287,7 @@ def q_conflate_new(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # shuffle_hash: both legs are corpus-scale equi-keys — SMJ's two sorts
-    # buy nothing (same rationale as the banded dedup joins, BASELINE §5.9)
+    # buy nothing (same rationale as the banded dedup joins)
     return img.join(matched.hint("shuffle_hash"), "image_id", "left_anti") \
         .select("image_id", "caption", F.lit(1).alias("version"))
 

@@ -35,12 +35,10 @@ _E8 = 1.0e8  # areas are ~1e-7 deg² — scale before rounding
 # ---------------------------------------------------------------------------
 def q_knn_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = base.images_df(spark, sf_dir)
-    lyr = base.layer_df(spark, sf_dir).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
-    pairs = cell_join.candidate_pairs(
-        img, lyr, GRID100, p_key="image_id", s_key="feature_id",
-        secondary_points=True,
+    lyr = base.layer_df(spark, sf_dir)
+    pairs = cell_join.cell_pairs(
+        img, lyr, GRID100.ring1(GRID100.encode(F.col("lon"), F.col("lat"))),
+        GRID100.encode(F.col("s_lon"), F.col("s_lat")),
     ).withColumn(
         "dist",
         geo.haversine_m(F.col("lon"), F.col("lat"), F.col("s_lon"), F.col("s_lat")),
@@ -196,15 +194,14 @@ def _building_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = _building_layer(spark, sf_dir, shifted=True)
     pa = a.select(
         F.col("bld_id").alias("id_a"), F.col("xs").alias("xs1"), F.col("ys").alias("ys1")
-    ).withColumn(
-        "__jcell", F.explode(cell_join.covering_cells(F.col("xs1"), F.col("ys1"), BLD_GRID))
     )
     pb = b.select(
         F.col("bld_id").alias("id_b"), F.col("xs").alias("xs2"), F.col("ys").alias("ys2")
-    ).withColumn(
-        "__jcell", F.explode(cell_join.covering_cells(F.col("xs2"), F.col("ys2"), BLD_GRID))
     )
-    pairs = pa.join(pb, "__jcell").drop("__jcell").dropDuplicates(["id_a", "id_b"])
+    pairs = cell_join.cell_pairs(
+        pa, pb, cell_join.covering_cells(F.col("xs1"), F.col("ys1"), BLD_GRID),
+        cell_join.covering_cells(F.col("xs2"), F.col("ys2"), BLD_GRID),
+    )
     area = polygon_intersection_area(
         F.col("xs1"), F.col("ys1"), F.col("xs2"), F.col("ys2")
     )
@@ -380,15 +377,15 @@ def q_poi_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("feature_id").alias("f1"), F.col("s_lon").alias("lon1"),
         F.col("s_lat").alias("lat1"), F.col("s_caption").alias("cap"),
     ).withColumn(
-        "__jcell",
+        "__cell",
         F.explode(GRID_DUP.ring1(GRID_DUP.encode(F.col("lon1"), F.col("lat1")))),
     )
     b = lyr.select(
         F.col("feature_id").alias("f2"), F.col("s_lon").alias("lon2"),
         F.col("s_lat").alias("lat2"), F.col("s_caption").alias("cap"),
-    ).withColumn("__jcell", GRID_DUP.encode(F.col("lon2"), F.col("lat2")))
+    ).withColumn("__cell", GRID_DUP.encode(F.col("lon2"), F.col("lat2")))
     pairs = (
-        a.join(b, ["__jcell", "cap"])
+        a.join(b, ["__cell", "cap"])
         .filter(F.col("f1") < F.col("f2"))
         .withColumn(
             "dist",
@@ -422,9 +419,9 @@ def _sql_poi_dup() -> str:
 # (nearest line feature) when no node matches.
 # ---------------------------------------------------------------------------
 def _nearest(img: DataFrame, feats: DataFrame, kind: str) -> DataFrame:
-    pairs = cell_join.candidate_pairs(
-        img, feats, GRID100, p_key="image_id", s_key="feature_id",
-        secondary_points=True,
+    pairs = cell_join.cell_pairs(
+        img, feats, GRID100.ring1(GRID100.encode(F.col("lon"), F.col("lat"))),
+        GRID100.encode(F.col("s_lon"), F.col("s_lat")),
     ).withColumn(
         "dist",
         geo.haversine_m(F.col("lon"), F.col("lat"), F.col("s_lon"), F.col("s_lat")),
@@ -451,12 +448,8 @@ def q_knn_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     lyr = base.layer_df(spark, sf_dir)
     # "nodes" = even feature ids, "ways" = odd (deterministic split of the
     # derived layer into the two PostGIS views the reference queries)
-    nodes = lyr.filter(F.col("feature_id") % 2 == 0).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
-    ways = lyr.filter(F.col("feature_id") % 2 == 1).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
+    nodes = lyr.filter(F.col("feature_id") % 2 == 0)
+    ways = lyr.filter(F.col("feature_id") % 2 == 1)
     n1 = _nearest(img, nodes, "node")
     w1 = _nearest(img, ways, "way")
     # shuffle_hash: both sides hash-partition on image_id — an SMJ would

@@ -476,9 +476,7 @@ def q_conflate_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = base.images_df(spark, sf_dir).filter(
         (F.col("ikey") % DELTA_MOD) == 1
     )
-    lyr = base.layer_df(spark, sf_dir).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
+    lyr = base.layer_df(spark, sf_dir)
     offs = GRID.ring1_sql_values()
     d9 = (
         img.select(GRID.encode(F.col("lon"), F.col("lat")).alias("c0"))
@@ -493,9 +491,9 @@ def q_conflate_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         GRID.encode(F.col("s_lon"), F.col("s_lat")) == F.col("cell0"),
         "left_semi",
     )
-    pairs = cell_join.candidate_pairs(
-        img, lyr_pruned, GRID, p_key="image_id", s_key="feature_id",
-        secondary_points=True, ring_secondary=True,
+    pairs = cell_join.cell_pairs(
+        img, lyr_pruned, GRID.encode(F.col("lon"), F.col("lat")),
+        GRID.ring1(GRID.encode(F.col("s_lon"), F.col("s_lat"))),
     )
     ref = pairs.withColumn(
         "dist",
@@ -743,8 +741,9 @@ QUERIES["image_dedup_assemble"] = (
 # cos(AOI center lat) so x and y are commensurate — plain degree space would
 # bias the argmin toward north-south segments by ~38% at this latitude).
 # Scale shape (round-4: the r3 broadcast cartesian is GONE): candidates come
-# from the fused cell-ring join (operators/cell_join.candidate_pairs_fused —
-# no broadcast, no driver-side hash build, probe never exploded 9×), in
+# from the cell join (operators/cell_join.cell_pairs: each point keeps its
+# one cell, the segments are ring-1 dilated, so the probe is never exploded
+# 9× and each pair meets once), in
 # geometrically growing radius rounds à la knn_unbounded: a round's best is
 # FINAL only when its distance is inside the round grid's coverage guarantee,
 # so the argmin is exact over ALL segments, not just ring-1 candidates.
@@ -819,9 +818,12 @@ def _snap_round_candidates(remaining: DataFrame, seg_geoms: DataFrame,
 
     grid = CellGrid.for_radius(radius_m, max_abs_lat=60.0)
     accept_m = SNAP_ACCEPT_FACTOR * grid.res_deg * SNAP_LAT0_COS * _M_PER_DEG
-    cand = cell_join.candidate_pairs_fused(
-        remaining, seg_geoms, grid,
-        p_lon="lon", p_lat="lat", s_key="sid", s_xs="sxs", s_ys="sys",
+    # shuffle_hash on the probe: its per-partition hash map stays small
+    # while the dilated segments stream, and no driver-side broadcast build
+    cand = cell_join.cell_pairs(
+        remaining.hint("shuffle_hash"), seg_geoms,
+        grid.encode(F.col("lon"), F.col("lat")),
+        grid.ring1_union(cell_join.covering_cells(F.col("sxs"), F.col("sys"), grid)),
     )
     return cand, accept_m
 

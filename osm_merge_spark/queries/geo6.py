@@ -18,7 +18,7 @@ spatial analytics over the image/layer fixture.
     dist) rows (map-side partial combine — the shuffle carries one row per
     key per map task), one equi-join of the two argmin tables, two anti
     joins to retire matched endpoints. Candidate pairs ride the cell join
-    (ring-1, salted hot cells) exactly like the rest of the conflation
+    (ring-1, AQE-split hot cells) exactly like the rest of the conflation
     ladder; payload columns never enter the rounds.
 """
 
@@ -46,13 +46,11 @@ MNN_GRID = CellGrid.for_radius(MNN_RADIUS_M, max_abs_lat=45.0)
 
 def _mnn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     img = base.images_df(spark, sf_dir).filter(F.col("cls") >= 7)
-    lyr = base.layer_df(spark, sf_dir).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
+    lyr = base.layer_df(spark, sf_dir)
     return (
-        cell_join.candidate_pairs(
-            img, lyr, MNN_GRID, p_key="image_id", s_key="feature_id",
-            secondary_points=True,
+        cell_join.cell_pairs(
+            img, lyr, MNN_GRID.ring1(MNN_GRID.encode(F.col("lon"), F.col("lat"))),
+            MNN_GRID.encode(F.col("s_lon"), F.col("s_lat")),
         )
         .withColumn(
             "dist",
@@ -210,9 +208,9 @@ def q_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.ways_df(spark, sf_dir).select("way_id", "xs", "ys"),
         ["xs", "ys"],
     )
-    cand = cell_join.candidate_pairs(
-        pings, ways, MM_GRID, p_key="pkey", s_key="way_id",
-        dedup_pairs=False,  # the per-ping argmin absorbs multi-cell dupes
+    cand = cell_join.cell_pairs(
+        pings, ways, MM_GRID.encode(F.col("lon"), F.col("lat")),
+        MM_GRID.ring1_union(cell_join.covering_cells(F.col("xs"), F.col("ys"), MM_GRID)),
     )
     # min-over-segments as explode + codegen columns + hash-agg min, NOT
     # array_min(transform(...)): higher-order functions run interpreted —

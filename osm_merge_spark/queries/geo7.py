@@ -24,7 +24,7 @@ Scale shape (the 100 TB story):
     whole-stage codegen; the intersection point itself is computed only on
     the rows that survive.
 No UDFs, no cartesian, no broadcast of a corpus-scale side; hot cells fall
-under the engine's standard salting/AQE-skew doctrine (cell_join.py).
+under AQE's skew-join split (session.py), like every cell join.
 """
 
 from __future__ import annotations
@@ -723,9 +723,9 @@ QUERIES["quadtree_split"] = (q_quadtree_split, _sql_quadtree_split())
 #     a guaranteed cover): per-point fan-out is 9 cells, never quadratic in
 #     the corpus — quadratic cost is confined INSIDE an eps-cell, the same
 #     bound every density method pays, and hot cells fall under the
-#     engine's salting/AQE-skew doctrine (operators/cell_join.py:289);
+#     AQE skew-join split (session.py);
 #   - b-side keeps its single cell → each (a,b) pair meets in EXACTLY one
-#     jcell, so no dedup/distinct is needed before the count;
+#     cell, so no dedup/distinct is needed before the count;
 #   - neighbor counts are one hash agg (map-side combine); core is a
 #     filter on the count; border is one shuffled-hash LEFT SEMI of the
 #     pair stream against the core set (corpus-scale, so never broadcast);
@@ -1102,16 +1102,16 @@ def q_dbscan_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a point's neighbors are wherever they are)
     a = aff3.select(
         "ikey", "lon", "lat",
-        F.explode(grid.ring1(F.col("cell"))).alias("__jcell"),
+        F.explode(grid.ring1(F.col("cell"))).alias("__cell"),
     )
     b = full.select(
         F.col("ikey").alias("bkey"),
         F.col("lon").alias("blon"),
         F.col("lat").alias("blat"),
-        F.col("cell").alias("__jcell"),
+        F.col("cell").alias("__cell"),
     )
     pairs3 = (
-        a.join(b.hint("shuffle_hash"), "__jcell")
+        a.join(b.hint("shuffle_hash"), "__cell")
         .where(F.col("ikey") != F.col("bkey"))
         .where(
             geo.haversine_m(

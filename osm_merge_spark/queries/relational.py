@@ -1084,8 +1084,8 @@ QUERIES["tpch_q5"] = (q_tpch_q5, _sql_tpch_q5())
 
 
 # -- key-skew profiler -------------------------------------------------------------
-# The diagnostic that DRIVES the engine's skew machinery (hot-cell salting,
-# AQE skew-join thresholds): per-key cardinality distribution summarized as
+# The diagnostic behind the engine's skew handling (AQE skew-join
+# thresholds): per-key cardinality distribution summarized as
 # one row — key count, max/p99 per-key multiplicity, and the share of rows
 # held by the single hottest key. The p99 comes from a histogram-of-counts
 # cumsum (counts of counts — tiny), never a sort of the key table. Run it on

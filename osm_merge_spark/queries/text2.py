@@ -307,7 +307,7 @@ def _sql_phash_topk() -> str:
 # containing the document's FIRST token. Plan: one shuffle on lang + an
 # ordered window per lang partition. At 10^12 docs a single window per
 # language is skewed (en ≫ others) — production splits the stream key into
-# (lang, ingest-day) exactly like the hot-cell salting in cell_join; the
+# (lang, ingest-day) — a salted key; the
 # window algebra is unchanged, so the per-lang form is what the oracle pins.
 TOKEN_BUDGET = 2048  # tokens per shard
 

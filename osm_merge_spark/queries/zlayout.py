@@ -131,17 +131,15 @@ def q_zlayout_delta_conflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt = _layer_snapshots(spark, sf_dir)
     old = tables.read_snapshot(spark, tgt, version=1)
     new = tables.read_snapshot(spark, tgt, version=2)
-    delta = new.exceptAll(old).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
+    delta = new.exceptAll(old)
     img = layout.read_bbox(
         spark, _image_layout(spark, sf_dir),
         base.LON_MIN - _PAD_DEG, base.LAT_MIN - _PAD_DEG,
         base.LON_MAX + _PAD_DEG, base.LAT_MAX + _PAD_DEG,
     )
-    pairs = cell_join.candidate_pairs(
-        img, delta, GRID, p_key="image_id", s_key="feature_id",
-        secondary_points=True, ring_secondary=True,
+    pairs = cell_join.cell_pairs(
+        img, delta, GRID.encode(F.col("lon"), F.col("lat")),
+        GRID.ring1(GRID.encode(F.col("s_lon"), F.col("s_lat"))),
     )
     hits = pairs.withColumn(
         "dist",

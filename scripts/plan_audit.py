@@ -4,10 +4,12 @@ For every `queries()` entry, compile the physical plan at a given sf dir and
 flag scale anti-patterns: SortMergeJoin (two needless full sorts on hash
 keys), CartesianProduct, a Python UDF evaluated by two plan nodes over the
 same input attributes (DUP-UDF: an inferred filter pushed below the
-projection re-runs it — functions/barrier.eval_once prevents that), and
-count Exchanges / Sorts / broadcast joins.
+projection re-runs it — functions/barrier.eval_once prevents that), a
+dedup aggregate straight over a cell join (PAIR-DEDUP: cell_join.cell_pairs
+emits each pair once, so the aggregate only costs a shuffle), and count
+Exchanges / Sorts / broadcast joins.
 This is the tool that caught the banded-join SMJ (fixed with shuffle_hash
-hints — BASELINE.md §5.9); run it after adding any join.
+hints); run it after adding any join.
 
 Exits non-zero on any unwaived flag and on any WAIVED entry whose flag no
 longer fires for an audited query.
@@ -59,6 +61,53 @@ def udf_calls(plan: str) -> list[str]:
     return calls
 
 
+def plan_nodes(plan: str) -> list[dict]:
+    """The operators of a plan tree string, each as {name, text, children}
+    (children are indices into the returned list), in line order."""
+    nodes, stack = [], []  # stack: (depth, index)
+    for line in plan.splitlines():
+        m = re.match(r"[\s:+\-|]*(?:\*\(\d+\) )?", line)
+        text = line[m.end():]
+        if not text or text.startswith("=="):
+            continue
+        depth = m.end()
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        nodes.append({"name": text.split(" ")[0].split("(")[0], "text": text,
+                      "children": []})
+        if stack:
+            nodes[stack[-1][1]]["children"].append(len(nodes) - 1)
+        stack.append((depth, len(nodes) - 1))
+    return nodes
+
+
+def pair_dedup(plan: str) -> bool:
+    """A dedup aggregate (no functions, or only first() — what distinct()
+    and dropDuplicates() plan to) keyed on two or more columns (a pair's
+    ids; a distinct over one side's key is not a pair dedup) whose input
+    reaches a join on the cell key `__jcell` through only row-preserving
+    Project/Filter/Generate/Sort nodes: it removes pairs the cell join
+    repeated."""
+    nodes = plan_nodes(plan)
+    for node in nodes:
+        if not node["name"].endswith(("Aggregate", "Deduplicate")):
+            continue
+        keys = re.search(r"keys?=\[([^\]]*)\]", node["text"])
+        funcs = re.search(r"functions=\[(.*?)\], output=", node["text"])
+        if (keys and len(keys.group(1).split(", ")) < 2) or (
+                funcs and re.sub(r"(?:partial_|merge_)?first\([^()]*\)|[\s,]", "",
+                                 funcs.group(1))):
+            continue
+        cur = node
+        while len(cur["children"]) == 1:
+            cur = nodes[cur["children"][0]]
+            if cur["name"] not in ("Project", "Filter", "Generate", "Sort"):
+                break
+        if "Join" in cur["name"] and "__jcell" in cur["text"]:
+            return True
+    return False
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     sf = "/root/testdata/sf0.01"
@@ -93,11 +142,13 @@ def main() -> int:
         n_sort = len(re.findall(r"\bSort \[", plan))
         n_bc = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoop", plan))
         dup_udf = any(n > 1 for n in Counter(udf_calls(plan)).values())
+        dedup = pair_dedup(plan)
         flags = (("SMJ " if smj else "") + ("CARTESIAN " if cart else "")
                  + ("NOPART-WINDOW " if nopart else "")
-                 + ("DUP-UDF" if dup_udf else ""))
+                 + ("DUP-UDF " if dup_udf else "")
+                 + ("PAIR-DEDUP" if dedup else ""))
         waived = flags.strip() and WAIVED.get(name) == flags.strip()
-        if (smj or cart or nopart or dup_udf) and not waived:
+        if (smj or cart or nopart or dup_udf or dedup) and not waived:
             flagged += 1
         if name in WAIVED and not waived:
             dead.append(name)

@@ -1,8 +1,8 @@
 """North-rule scaling benchmark: the conflation job at two parallelism
-levels on the SAME input (BASELINE.md §2 row 4 — the sandbox stand-in for
-N vs 4N executor clusters, per the driver's instruction).
+levels on the SAME input (BASELINE.md §2 row 4 — the single-host stand-in
+for N vs 4N executor clusters).
 
-Protocol (BASELINE.md §4.3, the corrected fresh-plan protocol):
+Protocol (the fresh-plan protocol of the earlier-host runs, BASELINE.md §5):
   - each parallelism level runs in its OWN process, pinned with taskset to
     exactly its core budget (an unpinned local[8] silently borrows the
     other 24 cores for GC/Python workers and inflates the baseline);
@@ -128,7 +128,7 @@ def main() -> int:
     ap.add_argument(
         "--pin-factor", type=int, default=1,
         help="pin local[k] to k*pin_factor cores; 2 = the driver-decoupled"
-             " variant (BASELINE.md §5.4): same k executor threads, but"
+             " variant (BASELINE.md §5): same k executor threads, but"
              " driver, GC, and Python workers get spare cores, like a real"
              " cluster's separate driver node",
     )

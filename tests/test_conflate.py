@@ -227,86 +227,50 @@ def test_suppress_identical_props(spark):
     assert kept == {"b", "c"}  # 'a' adds nothing → suppressed
 
 
-def test_salted_join_balances_hot_cells(spark):
-    """North-rule skew handling: with the hot cluster planted, the salted
-    shuffle join must spread each hot cell's pairs over n_salt sub-keys —
-    verified by per-partition output counts."""
-    from pyspark.sql import functions as F
-
+def test_cell_join_hot_cell_is_split_by_aqe(spark):
+    """Skew handling is AQE's skew-join split: with its thresholds lowered
+    to this fixture's scale and broadcast off, the hot cluster's cell makes
+    a partition that the final plan splits, and the split changes no pair."""
     from osm_merge_spark.data.synth import synth_images, synth_layer
     from osm_merge_spark.functions.cells import CellGrid
-    from osm_merge_spark.operators import cell_join
+    from osm_merge_spark.operators.cell_join import cell_pairs
     from osm_merge_spark.operators.conflate import prepare_images
 
     n = 4000
-    # coarse grid (~100 m cells): the whole hot cluster lands in ONE cell —
-    # the genuine single-hot-key scenario salting exists for. Point-only
-    # layer → the points fast path, whose output partitioning IS the join
-    # exchange (the generic path's pair-dedup would re-shuffle uniformly
-    # and mask the layout under test).
+    # coarse grid (~300 m cells): the whole hot cluster lands in ONE cell
     grid = CellGrid.for_radius(100.0, max_abs_lat=70.0)
     p = prepare_images(synth_images(spark, n)).select("image_id", "lon", "lat")
     s = synth_layer(spark, n).filter(F.size("xs") == 1).select(
-        "feature_id", "xs", "ys"
+        "feature_id", F.element_at("xs", 1).alias("s_lon"),
+        F.element_at("ys", 1).alias("s_lat"),
     )
 
-    def partition_counts(df):
-        return [
-            r["count"]
-            for r in df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-        ]
+    def pairs():
+        return cell_pairs(p, s, grid.encode(F.col("lon"), F.col("lat")),
+                          grid.ring1(grid.encode(F.col("s_lon"), F.col("s_lat"))))
 
-    # AQE's coalescing would merge the (tiny) test shuffle into one
-    # partition and mask the layout; the skew question is about the raw
-    # hash distribution of the join keys.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # ...and force real shuffle joins — static broadcast planning would
-    # bypass the exchange whose layout we're asserting on
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    conf = {
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+    }
+    saved = {k: spark.conf.get(k, None) for k in conf}
     try:
-        unsalted = cell_join.candidate_pairs(
-            p, s, grid, broadcast_secondary=None, secondary_points=True
-        )
-        salted = cell_join.candidate_pairs(
-            p, s, grid, broadcast_secondary=False, n_salt=8, hot_threshold=50,
-            secondary_points=True,
-        )
-        cu = partition_counts(unsalted)
-        cs = partition_counts(salted)
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        qe = pairs()._jdf.queryExecution()
+        n_split = qe.toRdd().count()
+        plan = qe.executedPlan().toString()
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+        n_plain = pairs().count()
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-    assert sum(cu) == sum(cs) > 0  # same pair set either way
-    # the hot cluster concentrates ~90%+ of all pairs into ~9 ring cells →
-    # without salting a couple of shuffle partitions dominate; salting
-    # multiplies the hot keys by n_salt and must flatten the layout.
-    assert max(cs) / sum(cs) < max(cu) / sum(cu)
-    assert max(cs) / sum(cs) < 0.15, (max(cs), sum(cs), cs)
-
-
-def test_salted_join_same_pairs_as_unsalted(spark):
-    """Salting must never change the candidate SET — only its layout."""
-    from osm_merge_spark.data.synth import synth_images, synth_layer
-    from osm_merge_spark.functions.cells import CellGrid
-    from osm_merge_spark.operators import cell_join
-    from osm_merge_spark.operators.conflate import prepare_images
-    from pyspark.sql import functions as F
-
-    n = 1500
-    grid = CellGrid.for_radius(60.0, max_abs_lat=70.0)
-    p = prepare_images(synth_images(spark, n)).select("image_id", "lon", "lat")
-    s = synth_layer(spark, n).filter(F.size("xs") == 1).select(
-        "feature_id", "xs", "ys"
-    )
-    plain = cell_join.candidate_pairs(
-        p, s, grid, broadcast_secondary=True, secondary_points=True
-    )
-    salted = cell_join.candidate_pairs(
-        p, s, grid, broadcast_secondary=False, n_salt=8, hot_threshold=20,
-        secondary_points=True,
-    )
-    a = {(r.image_id, r.feature_id) for r in plain.collect()}
-    b = {(r.image_id, r.feature_id) for r in salted.collect()}
-    assert a == b and len(a) > 0
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "isFinalPlan=true" in plan
+    assert "Join(skew=true)" in plan or "skewed" in plan, plan[:2000]
+    assert n_split == n_plain > 0

@@ -326,9 +326,10 @@ def test_fixture_engine_vs_bruteforce(spark, fixture_files, fixture_inputs):
         F.col("pt.xs").alias("lon"), F.col("pt.ys").alias("lat"),
     )
     grid = CellGrid.for_radius(THRESH_M * 1.05, max_abs_lat=70.0)
-    pairs = cell_join.candidate_pairs(
-        pts, ways.withColumnRenamed("way_id", "feature_id"), grid,
-        p_key="image_id", s_key="feature_id",
+    pairs = cell_join.cell_pairs(
+        pts, ways.withColumnRenamed("way_id", "feature_id"),
+        grid.encode(F.col("lon"), F.col("lat")),
+        grid.ring1_union(cell_join.covering_cells(F.col("xs"), F.col("ys"), grid)),
     )
     refined = refine_distance(pairs).filter(
         F.col("dist_m") <= F.lit(THRESH_M)
@@ -390,10 +391,11 @@ def test_fixture_nearest_way_name_agreement(spark, fixture_inputs):
         F.col("pt.xs").alias("lon"), F.col("pt.ys").alias("lat"),
     )
     grid = CellGrid.for_radius(THRESH_M * 1.05, max_abs_lat=70.0)
-    pairs = cell_join.candidate_pairs(
+    pairs = cell_join.cell_pairs(
         pts.withColumn("image_id", F.col("pid")).drop("pid"),
-        ways.withColumnRenamed("way_id", "feature_id"), grid,
-        p_key="image_id", s_key="feature_id", dedup_pairs=False,
+        ways.withColumnRenamed("way_id", "feature_id"),
+        grid.encode(F.col("lon"), F.col("lat")),
+        grid.ring1_union(cell_join.covering_cells(F.col("xs"), F.col("ys"), grid)),
     )
     refined = refine_distance(pairs).filter(
         F.col("dist_m") <= F.lit(THRESH_M)

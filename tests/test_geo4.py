@@ -128,12 +128,10 @@ def test_conflate_delta_prunes_layer(spark, sf_dir):
     img = base.images_df(spark, sf_dir).filter(
         (F.col("ikey") % DELTA_MOD) == 1
     )
-    lyr = base.layer_df(spark, sf_dir).withColumns(
-        {"xs": F.array("s_lon"), "ys": F.array("s_lat")}
-    )
-    pairs = cell_join.candidate_pairs(
-        img, lyr, GRID, p_key="image_id", s_key="feature_id",
-        secondary_points=True, ring_secondary=True,
+    lyr = base.layer_df(spark, sf_dir)
+    pairs = cell_join.cell_pairs(
+        img, lyr, GRID.encode(F.col("lon"), F.col("lat")),
+        GRID.ring1(GRID.encode(F.col("s_lon"), F.col("s_lat"))),
     )
     ref = pairs.withColumn(
         "dist",

@@ -14,7 +14,7 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 import pytest  # noqa: E402
-from plan_audit import udf_calls  # noqa: E402
+from plan_audit import pair_dedup, udf_calls  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402,F401
 
 
@@ -50,9 +50,10 @@ def test_conflate_plan_has_no_window_or_smj(spark):
 
 def test_multipart_conflate_plan_shape(spark):
     """With explode_multipart the best-part min rides inside the per-image
-    top-5 cap: no aggregate keyed on (image_id, feature_id), at most 3
-    hash exchanges for matched. `new` is the refined pairs' anti-join, so
-    its plan carries no scoring UDF, cap or winner pick."""
+    top-5 cap, and every (image, part) pair leaves the cell join once: no
+    aggregate in matched or new is keyed on pair ids, and matched has at
+    most 3 hash exchanges. `new` is the refined pairs' anti-join, so its
+    plan carries no scoring UDF, cap or winner pick."""
     from osm_merge_spark.data.synth import synth_images, synth_layer
     from osm_merge_spark.operators.conflate import ConflateParams, conflate
 
@@ -62,14 +63,13 @@ def test_multipart_conflate_plan_shape(spark):
                             explode_multipart=True)
     plan = _plan(matched)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3
-    agg_keys = [
-        sorted(re.sub(r"#\d+L?", "", k).split(", "))
-        for k in re.findall(r"Aggregate\(keys?=\[([^\]]*)\]", plan)
-    ]
-    # line pairs dedup on the geometry part
-    assert ["feature_id", "image_id", "part_idx"] in agg_keys, agg_keys
-    assert ["feature_id", "image_id"] not in agg_keys, agg_keys
     new_plan = _plan(new)
+    agg_keys = [
+        set(re.sub(r"#\d+L?", "", k).split(", "))
+        for k in re.findall(r"Aggregate\(keys?=\[([^\]]*)\]", plan + new_plan)
+    ]
+    assert {"image_id"} in agg_keys, agg_keys  # the cap and the winner pick
+    assert not any({"image_id", "feature_id"} <= k for k in agg_keys), agg_keys
     for op in ("ArrowEvalPython", "collect_list", "min_by"):
         assert op not in new_plan, op
 
@@ -100,6 +100,23 @@ def test_udf_calls_finds_a_udf_evaluated_twice():
             ":        +- ArrowEvalPython [_enc(lon#36, lat#37)#76L, f(x#1)#9],"
             " [pythonUDF0#165L, pythonUDF1#167], 200\n")
     assert sorted(udf_calls(plan)) == ["_enc(lon#36, lat#37)"] * 2 + ["f(x#1)"]
+
+
+def test_pair_dedup_finds_a_dedup_over_the_cell_join():
+    """The plan audit's PAIR-DEDUP detector on the shape building_pairs
+    had: dropDuplicates' first()-only aggregate over the cell join. A real
+    aggregate (min) over the same join is not a dedup."""
+    plan = ("SortAggregate(key=[id_a#28L, id_b#35L], functions=[first(xs1#29,"
+            " false)], output=[id_a#28L])\n"
+            "+- Sort [id_a#28L ASC NULLS FIRST], false, 0\n"
+            "   +- Project [id_a#28L, xs1#29, id_b#35L]\n"
+            "      +- BroadcastHashJoin [__jcell#34L], [__jcell#41L], Inner\n"
+            "         :- Generate explode(c#1), [id_a#28L], false, [__jcell#34L]\n"
+            "         +- BroadcastExchange HashedRelationBroadcastMode\n")
+    assert pair_dedup(plan)
+    assert not pair_dedup(plan.replace("first(xs1#29, false)", "min(xs1#29)"))
+    assert not pair_dedup(plan.replace("key=[id_a#28L, id_b#35L]", "key=[id_a#28L]"))
+    assert not pair_dedup(plan.replace("__jcell", "cell"))
 
 
 @pytest.mark.parametrize("name", ["building_pairs", "ivf_search"])

@@ -56,13 +56,15 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     master defaults to local[$SPARK_GRAFT_CPUS] (or local[*]); on a real
-    cluster pass None and let spark-submit own it.
+    cluster pass None and let spark-submit own it. Reusing a live session
+    applies only extra_conf: re-imposing the defaults would undo what the
+    session's creator set (e.g. a smaller shuffle.partitions).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULT_CONF)
+    conf = {} if SparkSession.getActiveSession() is not None else dict(_DEFAULT_CONF)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

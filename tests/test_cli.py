@@ -183,3 +183,12 @@ def test_cli_etl_other_sources(tmp_path, capsys):
         got = json.loads(out.read_text())["features"][0]["properties"]
         for k, v in want.items():
             assert got.get(k) == v, (source, k, got)
+
+
+def test_cli_on_live_session_keeps_its_conf(spark, tmp_path, capsys):
+    """An in-process CLI call reuses the live session; it must not reset
+    the settings its creator chose back to the package defaults."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    _run(capsys, "synth", "--n", "20", "--out", str(tmp_path / "d"))
+    assert spark.conf.get(key) == before

@@ -6,7 +6,8 @@ Spark-first re-expression: give each row its set of grid cells, equi-join
 on the cell key, refine exactly. `cell_pairs` is the one join:
 
   - a point's cell set is its one cell, `grid.encode(lon, lat)`;
-  - a line or ring's is `covering_cells(xs, ys, grid)`;
+  - a line or ring's is `covering_cells(xs, ys, grid)`, a single
+    segment's `segment_cells(x1, y1, x2, y2, grid)`;
   - in a distance join (threshold ≤ cell edge) the side that is not a
     point is ring-1 dilated (`grid.ring1` / `grid.ring1_union`). Ring-1
     is symmetric, so which side carries it changes no candidate pair.
@@ -34,29 +35,39 @@ from pyspark.sql.types import ArrayType
 from ..functions.cells import CellGrid
 
 
-def covering_cells(xs: Column, ys: Column, grid: CellGrid) -> Column:
-    """All grid cells a packed polyline/ring passes through (array<long>).
+def segment_cells(x1: Column, y1: Column, x2: Column, y2: Column,
+                  grid: CellGrid) -> Column:
+    """The grid cells segment (x1, y1)→(x2, y2) passes through
+    (array<long>, may repeat a cell).
 
-    Segments are densified at half-cell spacing — vertex cells alone would
-    miss cells crossed mid-segment (a 60 m segment spans several 10 m
-    cells). Pure Catalyst: nested sequence/transform, no UDF.
+    The segment is densified at half-cell spacing — its end cells alone
+    would miss cells crossed mid-segment (a 60 m segment spans several
+    10 m cells).
     """
     res = grid.res_deg
+    span = F.greatest(F.abs(x2 - x1), F.abs(y2 - y1))
+    nsteps = F.greatest(F.ceil(span / F.lit(res / 2.0)), F.lit(1)).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), nsteps),
+        lambda j: grid.encode(
+            x1 + (x2 - x1) * (j.cast("double") / nsteps.cast("double")),
+            y1 + (y2 - y1) * (j.cast("double") / nsteps.cast("double")),
+        ),
+    )
+
+
+def covering_cells(xs: Column, ys: Column, grid: CellGrid) -> Column:
+    """All grid cells a packed polyline/ring passes through (array<long>):
+    the distinct union of segment_cells over its segments. Pure Catalyst:
+    nested sequence/transform, no UDF.
+    """
 
     def seg_cells(k: Column) -> Column:
         x1, y1 = F.element_at(xs, k), F.element_at(ys, k)
         # try_element_at: a 1-point geometry has no k+1 vertex (ANSI mode)
         x2 = F.coalesce(F.try_element_at(xs, k + 1), x1)
         y2 = F.coalesce(F.try_element_at(ys, k + 1), y1)
-        span = F.greatest(F.abs(x2 - x1), F.abs(y2 - y1))
-        nsteps = F.greatest(F.ceil(span / F.lit(res / 2.0)), F.lit(1)).cast("int")
-        return F.transform(
-            F.sequence(F.lit(0), nsteps),
-            lambda j: grid.encode(
-                x1 + (x2 - x1) * (j.cast("double") / nsteps.cast("double")),
-                y1 + (y2 - y1) * (j.cast("double") / nsteps.cast("double")),
-            ),
-        )
+        return segment_cells(x1, y1, x2, y2, grid)
 
     nseg = F.greatest(F.size(xs) - 1, F.lit(1))
     return F.array_distinct(F.flatten(F.transform(F.sequence(F.lit(1), nseg), seg_cells)))

@@ -11,7 +11,9 @@ Spark-first plan (one lazy DataFrame graph, no driver loops):
     scan → cell encode → cell_pairs (each image keeps its one cell, the
     layer is ring-1 dilated; points and lines split by geometry; every
     pair meets in exactly one cell, so no pair dedup; AQE picks broadcast
-    or shuffle) → exact distance refine (haversine / point→polyline) →
+    or shuffle; lines join as one row per segment) → exact distance
+    refine in codegen (haversine / point→segment, min over a feature's
+    segments and parts taken in the cap) →
     then two outputs off the refined pairs:
       new:     images with no refined pair (one anti-join);
       matched: top-5 cap with the best-part min folded in (one hash
@@ -52,38 +54,53 @@ class ConflateParams:
     hot_threshold: int = 5_000
 
 
+def point_segment_dist(px, py, ax, ay, bx, by) -> F.Column:
+    """Planar point→segment distance: clamped projection of p onto ab (a
+    zero-length segment is its point a). Plain column math, so whole-stage
+    codegen compiles it. The one copy of the formula: the per-segment line
+    refine in conflate() and point_polyline_dist_native both call it."""
+    dx, dy = bx - ax, by - ay
+    seg2 = dx * dx + dy * dy
+    t_raw = ((px - ax) * dx + (py - ay) * dy) / seg2
+    t = F.when(seg2 == F.lit(0.0), F.lit(0.0)).otherwise(
+        F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
+    )
+    cx, cy = ax + t * dx, ay + t * dy
+    return F.sqrt((px - cx) * (px - cx) + (py - cy) * (py - cy))
+
+
 def point_polyline_dist_native(px, py, xs, ys) -> F.Column:
-    """Min point→segment distance over a packed polyline as a PURE Catalyst
-    expression: clamped projection onto each segment, array_min over
-    segments. Same math as the Arrow row-loop oracle
-    tests/ref_kernels.point_polyline_dist, but runs inside codegen — at
-    18M candidate pairs the per-row Python loop was the single hottest
-    spot in the whole engine. Inputs must be planar (pre-projected) coordinates."""
+    """Min point→segment distance over a packed polyline as one Catalyst
+    expression: point_segment_dist per segment, array_min over segments.
+    Same math as the Arrow row-loop oracle tests/ref_kernels.point_polyline_dist.
+    Inputs must be planar (pre-projected) coordinates.
+
+    Not a production path: array_min(transform(...)) is a higher-order
+    function, which Spark runs interpreted. conflate() refines lines per
+    exploded segment instead; this form serves refine_distance (perfbench's
+    `--trace 1` chain) and tests as the per-polyline reference."""
 
     def seg(k):
         ax, ay = F.element_at(xs, k), F.element_at(ys, k)
         # try_element_at: a 1-point geometry has no k+1 vertex (ANSI mode)
         bx = F.coalesce(F.try_element_at(xs, k + 1), ax)
         by = F.coalesce(F.try_element_at(ys, k + 1), ay)
-        dx, dy = bx - ax, by - ay
-        seg2 = dx * dx + dy * dy
-        t_raw = ((px - ax) * dx + (py - ay) * dy) / seg2
-        t = F.when(seg2 == F.lit(0.0), F.lit(0.0)).otherwise(
-            F.least(F.greatest(t_raw, F.lit(0.0)), F.lit(1.0))
-        )
-        cx, cy = ax + t * dx, ay + t * dy
-        return F.sqrt((px - cx) * (px - cx) + (py - cy) * (py - cy))
+        return point_segment_dist(px, py, ax, ay, bx, by)
 
     nseg = F.greatest(F.size(xs) - 1, F.lit(1))
     return F.array_min(F.transform(F.sequence(F.lit(1), nseg), seg))
 
 
 def refine_distance(pairs: DataFrame, p_lon: str = "lon", p_lat: str = "lat") -> DataFrame:
-    """Exact distance in meters for candidate pairs (X2/X3).
+    """Exact distance in meters for candidate pairs (X2/X3), one row per
+    (image, whole geometry) pair.
 
     Points: haversine. Lines/rings: planar point→polyline in mercator
-    meters × cos(lat) local-scale correction. All native column math —
-    no Python anywhere in the refine stage.
+    meters × cos(lat) local-scale correction (point_polyline_dist_native).
+
+    Not the production path: conflate() refines lines per exploded segment
+    with scalar codegen math and takes the min in its cap. This form stays
+    for perfbench's `--trace 1` chain and for tests.
 
     The projected arrays go through an eval_once barrier: without it,
     Catalyst's CollapseProject inlines `transform(xs, mercator)` into every
@@ -307,18 +324,52 @@ def conflate(images: DataFrame, layer: DataFrame,
         )
 
     def lines_refined(s_part: DataFrame) -> DataFrame:
+        # one build row per segment: scalar endpoints, their mercator
+        # projections and the segment's own ring-1 cells (the union over a
+        # line's segments is the line's set). The per-pair bbox and
+        # distance are then plain column math that codegen compiles; an
+        # array_min(transform(...)) over the polyline per pair runs
+        # interpreted. The cap below keeps each feature's nearest segment,
+        # as it keeps its nearest part. Segments touching a NaN or null
+        # part separator are dropped: they belong to no part.
+        k = F.col("__k")
+        seg = s_part.select(
+            "feature_id", "xs", "ys",
+            F.explode(F.sequence(F.lit(1), F.size("xs") - 1)).alias("__k"),
+        ).select(
+            "feature_id",
+            F.element_at("xs", k).alias("ax"), F.element_at("ys", k).alias("ay"),
+            F.element_at("xs", k + 1).alias("bx"), F.element_at("ys", k + 1).alias("by"),
+        )
+        ax, ay, bx, by = (F.col(c) for c in ("ax", "ay", "bx", "by"))
+        for c in (ax, ay, bx, by):
+            seg = seg.filter(c.isNotNull() & ~F.isnan(c))
+        seg = seg.select(
+            "feature_id", "ax", "ay", "bx", "by",
+            geo.mercator_x(ax).alias("__mxa"), geo.mercator_y(ay).alias("__mya"),
+            geo.mercator_x(bx).alias("__mxb"), geo.mercator_y(by).alias("__myb"),
+        )
+        # the image's projection too rides as columns, computed once per
+        # image rather than inlined per pair into the distance
+        p_merc = p_slim.select(
+            "*", geo.mercator_x(F.col("lon")).alias("__mpx"),
+            geo.mercator_y(F.col("lat")).alias("__mpy"),
+        )
         lp = cell_join.cell_pairs(
-            p_slim, s_part, p_cell,
-            grid.ring1_union(cell_join.covering_cells(F.col("xs"), F.col("ys"), grid)),
+            p_merc, seg, p_cell,
+            grid.ring1_union(cell_join.segment_cells(ax, ay, bx, by, grid)),
         )
         lp = lp.filter(
-            (F.col("lat") >= F.array_min("ys") - F.lit(deg))
-            & (F.col("lat") <= F.array_max("ys") + F.lit(deg))
-            & (F.col("lon") >= F.array_min("xs") - deg_lon)
-            & (F.col("lon") <= F.array_max("xs") + deg_lon)
+            (F.col("lat") >= F.least(ay, by) - F.lit(deg))
+            & (F.col("lat") <= F.greatest(ay, by) + F.lit(deg))
+            & (F.col("lon") >= F.least(ax, bx) - deg_lon)
+            & (F.col("lon") <= F.greatest(ax, bx) + deg_lon)
         )
+        d = point_segment_dist(
+            *(F.col(c) for c in ("__mpx", "__mpy", "__mxa", "__mya", "__mxb", "__myb")),
+        ) * F.cos(F.radians(F.col("lat")))
         return (
-            refine_distance(lp)
+            lp.withColumn("dist_m", d)
             .filter(F.col("dist_m") <= F.lit(params.threshold_m))
             .select(*slim_cols)
         )
@@ -328,8 +379,7 @@ def conflate(images: DataFrame, layer: DataFrame,
     else:
         # mixed layers split by geometry: point features (the vast
         # majority in real layers) take the scalar fast path; only
-        # line/ring features pay the covering-cells explode + polyline
-        # refine.
+        # line/ring features pay the segment explode + covering cells.
         refined = points_refined(s_slim.filter(F.size("xs") == 1)).unionByName(
             lines_refined(s_slim.filter(F.size("xs") > 1))
         )
@@ -338,8 +388,8 @@ def conflate(images: DataFrame, layer: DataFrame,
     new = new_features(p, refined)
 
     # top-5 cap in one hash aggregation per image (collect_list, no window
-    # sort): sort the (dist, feature) pairs; each
-    # feature's first entry is its nearest part (the best-part min), and
+    # sort): sort the (dist, feature) pairs; each feature's first entry is
+    # its nearest segment or part (the best-part min), and
     # the first k distinct features are the cap. array_position finds each
     # first entry, so the per-image work is O(k·n), not O(n²).
     const_cols = ["lon", "lat"] if p_has_tags else ["lon", "lat", "caption"]

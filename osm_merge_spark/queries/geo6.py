@@ -202,8 +202,9 @@ def q_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     pings = _trace_pings(spark, sf_dir)
     # barrier the synthesized geometry arrays: without it CollapseProject
     # inlines ways_df's giant CASE array expressions into EVERY element_at
-    # of the per-segment distance HOF (refine_distance's documented
-    # pathology) — measured 76 s → 2.9 s on the 5.4M-candidate refine
+    # of the per-segment math below (the inlining refine_distance's
+    # eval_once guards against) — measured 76 s → 2.9 s on the
+    # 5.4M-candidate refine
     ways = eval_once(
         base.ways_df(spark, sf_dir).select("way_id", "xs", "ys"),
         ["xs", "ys"],

@@ -6,8 +6,10 @@ keys), CartesianProduct, a Python UDF evaluated by two plan nodes over the
 same input attributes (DUP-UDF: an inferred filter pushed below the
 projection re-runs it — functions/barrier.eval_once prevents that), a
 dedup aggregate straight over a cell join (PAIR-DEDUP: cell_join.cell_pairs
-emits each pair once, so the aggregate only costs a shuffle), and count
-Exchanges / Sorts / broadcast joins.
+emits each pair once, so the aggregate only costs a shuffle), a
+higher-order function evaluated per pair over a cell join's output
+(PAIR-HOF: HOFs run interpreted; explode the geometry into scalar pieces
+before the join instead), and count Exchanges / Sorts / broadcast joins.
 This is the tool that caught the banded-join SMJ (fixed with shuffle_hash
 hints); run it after adding any join.
 
@@ -81,6 +83,32 @@ def plan_nodes(plan: str) -> list[dict]:
     return nodes
 
 
+def reaches_cell_join(nodes: list[dict], node: dict) -> bool:
+    """node's input reaches a join on the cell key `__jcell` through only
+    row-preserving Project/Filter/Generate/Sort nodes."""
+    cur = node
+    while len(cur["children"]) == 1:
+        cur = nodes[cur["children"][0]]
+        if cur["name"] not in ("Project", "Filter", "Generate", "Sort"):
+            break
+    return "Join" in cur["name"] and "__jcell" in cur["text"]
+
+
+def pair_hof(plan: str) -> bool:
+    """A Project or Filter holding a higher-order function (a
+    `lambdafunction`) over a cell join's output: Spark runs HOFs
+    interpreted, so a per-pair refine over geometry arrays there costs
+    interpreted work for every candidate pair. Exploding the build side
+    into scalar pieces (one row per segment) before the join keeps the
+    per-pair math in codegen."""
+    nodes = plan_nodes(plan)
+    return any(
+        node["name"] in ("Project", "Filter") and "lambdafunction" in node["text"]
+        and reaches_cell_join(nodes, node)
+        for node in nodes
+    )
+
+
 def pair_dedup(plan: str) -> bool:
     """A dedup aggregate (no functions, or only first() — what distinct()
     and dropDuplicates() plan to) keyed on two or more columns (a pair's
@@ -98,12 +126,7 @@ def pair_dedup(plan: str) -> bool:
                 funcs and re.sub(r"(?:partial_|merge_)?first\([^()]*\)|[\s,]", "",
                                  funcs.group(1))):
             continue
-        cur = node
-        while len(cur["children"]) == 1:
-            cur = nodes[cur["children"][0]]
-            if cur["name"] not in ("Project", "Filter", "Generate", "Sort"):
-                break
-        if "Join" in cur["name"] and "__jcell" in cur["text"]:
+        if reaches_cell_join(nodes, node):
             return True
     return False
 
@@ -143,12 +166,14 @@ def main() -> int:
         n_bc = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoop", plan))
         dup_udf = any(n > 1 for n in Counter(udf_calls(plan)).values())
         dedup = pair_dedup(plan)
+        hof = pair_hof(plan)
         flags = (("SMJ " if smj else "") + ("CARTESIAN " if cart else "")
                  + ("NOPART-WINDOW " if nopart else "")
                  + ("DUP-UDF " if dup_udf else "")
-                 + ("PAIR-DEDUP" if dedup else ""))
+                 + ("PAIR-DEDUP " if dedup else "")
+                 + ("PAIR-HOF" if hof else ""))
         waived = flags.strip() and WAIVED.get(name) == flags.strip()
-        if (smj or cart or nopart or dup_udf or dedup) and not waived:
+        if (smj or cart or nopart or dup_udf or dedup or hof) and not waived:
             flagged += 1
         if name in WAIVED and not waived:
             dead.append(name)

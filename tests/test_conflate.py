@@ -274,3 +274,143 @@ def test_cell_join_hot_cell_is_split_by_aqe(spark):
     assert "isFinalPlan=true" in plan
     assert "Join(skew=true)" in plan or "skewed" in plan, plan[:2000]
     assert n_split == n_plain > 0
+
+
+# -- per-segment line refine parity -------------------------------------------
+
+_M_LAT = 1.0 / 110_574.0  # degrees of latitude per meter (about)
+_LAYER_DDL = ("feature_id long, version int, geom_type string,"
+              " xs array<double>, ys array<double>,"
+              " tags map<string,string>, caption string")
+
+
+def _walk(rng, lon0, lat0, n):
+    """A random polyline of n vertices, steps of 3-25 m; about one step in
+    six repeats its vertex (a zero-length segment)."""
+    xs, ys = [lon0], [lat0]
+    kx = 1.0 / math.cos(math.radians(lat0))
+    for _ in range(n - 1):
+        if rng.random() < 0.17:
+            xs.append(xs[-1])
+            ys.append(ys[-1])
+            continue
+        a, d = rng.uniform(0, 2 * math.pi), rng.uniform(3.0, 25.0)
+        xs.append(xs[-1] + d * math.cos(a) * _M_LAT * kx)
+        ys.append(ys[-1] + d * math.sin(a) * _M_LAT)
+    return xs, ys
+
+
+def _near(rng, xs, ys, k, at_vertex, lat0):
+    """A point a few meters off segment k's midpoint, or off vertex k."""
+    kx = 1.0 / math.cos(math.radians(lat0))
+    if at_vertex:
+        x, y = xs[k], ys[k]
+    else:
+        x, y = (xs[k] + xs[k + 1]) / 2, (ys[k] + ys[k + 1]) / 2
+    a, d = rng.uniform(0, 2 * math.pi), rng.choice([0.0, 0.5, 2.0, 4.5, 9.0, 14.0])
+    return x + d * math.cos(a) * _M_LAT * kx, y + d * math.sin(a) * _M_LAT
+
+
+def _segment_fixture():
+    """Lines of 2-40 vertices (zero-length segments, repeated vertices)
+    and images near interior segments and near vertices shared by two
+    segments, at 0-14 m."""
+    import random
+
+    rng = random.Random(11)
+    lat0 = 44.0
+    lines, images = [], []
+    for f in range(60):
+        n = 2 if f < 6 else rng.randint(3, 40)
+        xs, ys = _walk(rng, -110.0 + f * 0.004, lat0 + (f % 7) * 0.0005, n)
+        if f % 5 == 0 and n >= 4:
+            xs[2], ys[2] = xs[1], ys[1]  # a repeated vertex
+        lines.append((xs, ys))
+        for j in range(4):
+            at_vertex = j % 2 == 1 and n >= 3
+            k = rng.randint(1, n - 2) if at_vertex else rng.randint(0, n - 2)
+            lon, lat = _near(rng, xs, ys, k, at_vertex, lat0)
+            images.append((f"s{f:02d}-{j}", f"Road {f % 9}", lon, lat))
+    return lines, images
+
+
+def _layer_rows(lines):
+    return [(i + 1, 1, "LineString", xs, ys, {"name": f"Road {i % 9}"}, f"Road {i % 9}")
+            for i, (xs, ys) in enumerate(lines)]
+
+
+def _np_dist_m(lon, lat, xs, ys):
+    """NumPy brute force: min point→segment distance in mercator meters ×
+    cos(lat) over every segment of a NaN/None-separated polyline."""
+    r = 6378137.0
+    x = np.array([np.nan if v is None else v for v in xs], dtype=float)
+    y = np.array([np.nan if v is None else v for v in ys], dtype=float)
+    mx, my = r * np.radians(x), r * np.log(np.tan(np.pi / 4 + np.radians(y) / 2))
+    px, py = r * math.radians(lon), r * math.log(math.tan(math.pi / 4 + math.radians(lat) / 2))
+    ax, ay, bx, by = mx[:-1], my[:-1], mx[1:], my[1:]
+    ok = ~(np.isnan(ax) | np.isnan(ay) | np.isnan(bx) | np.isnan(by))
+    ax, ay, bx, by = ax[ok], ay[ok], bx[ok], by[ok]
+    dx, dy = bx - ax, by - ay
+    seg2 = dx * dx + dy * dy
+    with np.errstate(invalid="ignore", divide="ignore"):
+        t = np.where(seg2 == 0, 0.0, np.clip(((px - ax) * dx + (py - ay) * dy) / seg2, 0, 1))
+    return float(np.min(np.hypot(px - (ax + t * dx), py - (ay + t * dy)))) * math.cos(math.radians(lat))
+
+
+def test_segment_refine_matches_polyline_refine(spark):
+    """conflate() refines lines per exploded segment; each winner's dist_m
+    is bit-identical to the per-polyline point_polyline_dist_native ×
+    cos(lat) form, and `new` is the NumPy brute force's set of images with
+    no line within the threshold."""
+    from osm_merge_spark.functions import geo
+    from osm_merge_spark.operators.conflate import point_polyline_dist_native
+
+    lines, images = _segment_fixture()
+    brute = {iid: min(_np_dist_m(lon, lat, xs, ys) for xs, ys in lines)
+             for iid, _c, lon, lat in images}
+    # the fixture keeps clear of the threshold, where NumPy's and the JVM's
+    # transcendentals could round a distance to opposite sides
+    assert all(abs(d - PARAMS.threshold_m) > 1e-6 for d in brute.values())
+    img_df = spark.createDataFrame(images, "image_id string, caption string, lon double, lat double")
+    layer_df = spark.createDataFrame(_layer_rows(lines), _LAYER_DDL)
+    matched, new = conflate(img_df, layer_df, PARAMS)
+
+    assert {r["image_id"] for r in new.collect()} == {
+        i for i, d in brute.items() if d > PARAMS.threshold_m}
+    merc = layer_df.select(
+        "feature_id",
+        F.transform("xs", geo.mercator_x).alias("mxs"),
+        F.transform("ys", geo.mercator_y).alias("mys"),
+    )
+    ref = F.round(point_polyline_dist_native(
+        geo.mercator_x(F.col("lon")), geo.mercator_y(F.col("lat")), F.col("mxs"), F.col("mys"),
+    ) * F.cos(F.radians(F.col("lat"))), 9)
+    rows = matched.join(merc, "feature_id").select("image_id", "dist_m", ref.alias("ref")).collect()
+    assert len(rows) == sum(d <= PARAMS.threshold_m for d in brute.values()) > 100
+    for r in rows:
+        assert r["dist_m"] == r["ref"], (r["image_id"], r["dist_m"], r["ref"])
+
+
+@pytest.mark.parametrize("sep", [float("nan"), None], ids=["nan", "null"])
+def test_separated_multiline_refines_like_its_parts(spark, sep):
+    """A two-part MultiLineString packed with a NaN or a null separator
+    gives the same matched and new without explode_multipart (segments
+    touching the separator are dropped) as with it (one row per part)."""
+    lines, images = _segment_fixture()
+    multi = []
+    for i in range(0, len(lines), 2):
+        (x1, y1), (x2, y2) = lines[i], lines[i + 1]
+        multi.append((x1 + [sep] + x2, y1 + [sep] + y2))
+    rows = [(fid, v, "MultiLineString", xs, ys, t, c)
+            for fid, v, _g, xs, ys, t, c in _layer_rows(multi)]
+    img_df = spark.createDataFrame(images, "image_id string, caption string, lon double, lat double")
+    layer_df = spark.createDataFrame(rows, _LAYER_DDL)
+
+    def run(explode):
+        m, n = conflate(img_df, layer_df, PARAMS, explode_multipart=explode)
+        return (sorted(m.collect(), key=lambda r: r["image_id"]),
+                sorted(r["image_id"] for r in n.collect()))
+
+    whole, parts = run(False), run(True)
+    assert len(whole[0]) > 50 and len(whole[1]) > 10
+    assert whole == parts

@@ -14,7 +14,8 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "scripts"))
 
 import pytest  # noqa: E402
-from plan_audit import pair_dedup, udf_calls  # noqa: E402
+from plan_audit import (  # noqa: E402
+    pair_dedup, pair_hof, plan_nodes, reaches_cell_join, udf_calls)
 from pyspark.sql import functions as F  # noqa: E402,F401
 
 
@@ -72,6 +73,13 @@ def test_multipart_conflate_plan_shape(spark):
     assert not any({"image_id", "feature_id"} <= k for k in agg_keys), agg_keys
     for op in ("ArrowEvalPython", "collect_list", "min_by"):
         assert op not in new_plan, op
+    # lines refine per exploded segment: no interpreted higher-order
+    # function and no eval_once barrier (`__pt`) runs per candidate pair
+    for pl in (plan, new_plan):
+        assert not pair_hof(pl)
+        nodes = plan_nodes(pl)
+        assert not any(n["name"] == "Generate" and "__pt" in n["text"]
+                       and reaches_cell_join(nodes, n) for n in nodes)
 
 
 def test_dedup_ngram_plan_broadcasts_stop_shingles(spark):
@@ -117,6 +125,34 @@ def test_pair_dedup_finds_a_dedup_over_the_cell_join():
     assert not pair_dedup(plan.replace("first(xs1#29, false)", "min(xs1#29)"))
     assert not pair_dedup(plan.replace("key=[id_a#28L, id_b#35L]", "key=[id_a#28L]"))
     assert not pair_dedup(plan.replace("__jcell", "cell"))
+
+
+def test_pair_hof_finds_a_polyline_refine_over_the_cell_join(spark):
+    """The plan audit's PAIR-HOF detector on conflate's `new`: it fires on
+    the per-polyline refine (refine_distance's transform/array_min over
+    each candidate pair's arrays) and not on conflate()'s per-segment
+    refine."""
+    from osm_merge_spark.data.synth import synth_images, synth_layer
+    from osm_merge_spark.functions.cells import CellGrid
+    from osm_merge_spark.operators import cell_join
+    from osm_merge_spark.operators.conflate import (
+        ConflateParams, conflate, new_features, prepare_images, refine_distance)
+
+    images, layer = synth_images(spark, 2000), synth_layer(spark, 2000)
+    prm = ConflateParams()
+    _, new = conflate(images, layer, prm)
+    assert not pair_hof(_plan(new))
+
+    grid = CellGrid.for_radius(prm.threshold_m * 1.05, max_abs_lat=70.0)
+    p = prepare_images(images)
+    lines = layer.filter(F.size("xs") > 1).select("feature_id", "xs", "ys")
+    pairs = cell_join.cell_pairs(
+        p.select("image_id", "lon", "lat"), lines,
+        grid.encode(F.col("lon"), F.col("lat")),
+        grid.ring1_union(cell_join.covering_cells(F.col("xs"), F.col("ys"), grid)),
+    )
+    refined = refine_distance(pairs).filter(F.col("dist_m") <= prm.threshold_m)
+    assert pair_hof(_plan(new_features(p, refined)))
 
 
 @pytest.mark.parametrize("name", ["building_pairs", "ivf_search"])

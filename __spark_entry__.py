@@ -99,9 +99,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("s_caption").alias("caption"),
     )
     lyr = pts.unionByName(lines)
-    matched, _new = conflate(
-        img, lyr, ConflateParams(), explode_multipart=True
-    )
+    matched, _new = conflate(img, lyr, ConflateParams())
     return matched.select(
         "image_id", "feature_id", "dist_m", "ratio", "hits", "version"
     )

@@ -1,9 +1,10 @@
 """Benchmark harness: the headline query suite.
 
 Run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line:
+/root/testdata/sf0.1) on get_spark's default master, local[$SPARK_GRAFT_CPUS]
+(local[*] when unset); print ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-   "sf": ..., "rows": {...}}
+   "sf": ..., "rows": {...}, "master": ...}
 
 Conflation scaling across core counts is scripts/scaling_bench.py.
 """
@@ -52,7 +53,7 @@ def _sf_label(sf_dir: str) -> float:
         return -1.0
 
 
-def run_once(sf_dir: str, cpus: str) -> dict:
+def run_once(sf_dir: str) -> dict:
     """Pinned protocol (round-3 fix for the r2 16.5→18.3 s phantom
     regression): per query, one UNTIMED warmup pass (JIT, codegen cache,
     parquet footer/page cache), then min of SPARK_GRAFT_BENCH_REPS
@@ -64,7 +65,7 @@ def run_once(sf_dir: str, cpus: str) -> dict:
 
     import __spark_entry__ as contract
 
-    spark = get_spark("osm-merge-spark-bench", master=f"local[{cpus}]")
+    spark = get_spark("osm-merge-spark-bench")
     qs = contract.queries()
     # Adaptive reps: C2 JIT + the Arrow fuzzy worker pool converge over a
     # variable number of executions depending on co-tenant load (measured
@@ -106,7 +107,7 @@ def run_once(sf_dir: str, cpus: str) -> dict:
         "queries": timings,
         "sf": _sf_label(sf_dir),
         "rows": rows,
-        "cpus": cpus,
+        "master": spark.sparkContext.master,
         "reps": reps_used,
         "protocol": "per-query warmup + fresh-plan reps to convergence "
                     f"(min {min_reps}, cap {max_reps}, stop after 2 non-improving)",
@@ -115,5 +116,4 @@ def run_once(sf_dir: str, cpus: str) -> dict:
 
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    print(json.dumps(run_once(sf_dir, cpus)))
+    print(json.dumps(run_once(sf_dir)))

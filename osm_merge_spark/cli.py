@@ -81,7 +81,7 @@ def cmd_poi(args) -> int:
     images = spark.read.parquet(args.images)
     layer = spark.read.parquet(args.layer)
     params = ConflateParams(threshold_m=args.threshold_m, fuzz_min=80.0)
-    matched, new = conflate(images, layer, params, layer_is_points=True)
+    matched, new = conflate(images, layer, params)
     matched.write.mode("overwrite").parquet(f"{args.out}/matched")
     new.write.mode("overwrite").parquet(f"{args.out}/new")
     print(json.dumps({

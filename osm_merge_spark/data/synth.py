@@ -179,16 +179,6 @@ def synth_layer(spark: SparkSession, n_images: int, threshold_m: float = DEFAULT
     return planted.unionByName(decoys)
 
 
-def expected_match_class(i: int) -> str:
-    """Ground-truth outcome for image i (tests only)."""
-    c = i % 10
-    if c in (0, 1, 2, 3, 4):
-        return "match_tags"
-    if c == 5:
-        return "match_dist_only"
-    return "new"
-
-
 # -- audio (pcm16, third modality) --------------------------------------------
 AUDIO_SEED_SALT = 7       # distinct splitmix stream from the pixel salt (+1)
 AUDIO_BASE_SAMPLES = 1024

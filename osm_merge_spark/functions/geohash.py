@@ -112,7 +112,3 @@ def geohash_chars_sql(v: str, precision: int = PRECISION) -> str:
         for c in range(precision)
     ]
     return "(" + " || ".join(chars) + ")"
-
-
-def geohash_sql(lon: str, lat: str, precision: int = PRECISION) -> str:
-    return geohash_chars_sql(_interleaved_sql(lon, lat, precision), precision)

@@ -16,18 +16,19 @@ s2cell_id.cc — public Apache-2.0 documentation of the curve):
   s = u≥0 ? √(1+3u)/2 : 1−√(1−3u)/2 → discrete (i,j) → Hilbert-curve
   position → 64-bit id  face(3b) ‖ pos(2·level b) ‖ 1 ‖ 0…
 
-Three independent implementations, cross-checked by tests/test_s2.py:
+Two independent implementations, cross-checked by tests/test_s2.py:
 
-  1. `with_s2_cell`   — pure Catalyst: whole-stage-codegen trig + a
-     2-bit-per-level Hilbert automaton folded with `F.aggregate` over
-     `F.sequence(1, level)` (linear-size expression; a naive unrolled
-     expression tree doubles per level → 2^13 nodes, the fold stays
-     iterative at runtime).
-  2. `s2_cell_udf`    — the vectorized Arrow path the north star names:
-     numpy batch kernel using the same 4-bits-at-a-time `lookup_pos`
-     table the C++ library builds (1024 entries, generated at import).
-  3. `s2_sql_ctes`    — DuckDB oracle mirror: the same automaton as (1)
-     unrolled as a chain of per-level CTEs (linear-size SQL text).
+  1. `s2_cell_udf` / `s2_cells_ring1_udf` — the engine's encoder, the
+     vectorized Arrow path the north star names: a numpy batch kernel
+     using the same 4-bits-at-a-time `lookup_pos` table the C++ library
+     builds (1024 entries, generated at import).
+  2. `s2_sql_ctes` / `s2_sql_ctes_ring1` — the DuckDB oracle mirror: a
+     2-bit-per-level Hilbert automaton (`STEP`) unrolled as a chain of
+     per-level CTEs (linear-size SQL text).
+
+There is no Catalyst form: Spark interprets higher-order functions, and
+an `F.aggregate` fold of the automaton measured 54.7 s against 1.7 s for
+the Arrow kernel at level 19 (queries/geo.py).
 
 Ids are emitted as signed int64 (two's-complement view of the uint64 id,
 faces 4–5 therefore negative) — the natural representation in both Spark
@@ -41,9 +42,6 @@ replacement that makes the join an equi-join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
 # --- published curve tables (s2coords.cc) ----------------------------------
 # kPosToIJ[orientation][position] = ij  (ij = i·2 + j within the parent)
 K_POS_TO_IJ = (
@@ -56,7 +54,7 @@ K_POS_TO_IJ = (
 K_POS_TO_ORIENTATION = (1, 0, 0, 3)  # (kSwapMask, 0, 0, kInvert|kSwap)
 
 # Inverted per-level automaton: STEP[orient·4 + ij] = pos·4 + next_orient.
-# One table drives all three implementations.
+# Drives the SQL mirror; the numpy kernel builds its own 4-bit table.
 _IJ_TO_POS = [[0] * 4 for _ in range(4)]
 for _r in range(4):
     for _pos in range(4):
@@ -68,12 +66,11 @@ STEP = tuple(
 )
 
 
-# --- shared scalar formulas (generated once, rendered per engine) ----------
+# --- SQL mirror: scalar formulas and the per-level CTE chain ---------------
 def _face_uv_exprs(lon: str, lat: str) -> tuple[str, str, str]:
-    """(face, u, v) as SQL-dialect-neutral expression strings over radians.
+    """(face, u, v) as SQL expression strings over radians.
 
-    Both engines parse the identical text (Spark via F.expr, DuckDB
-    directly), so the trig trees are structurally identical and the only
+    The trig tree mirrors _faceij30_numpy term for term, so the only
     cross-engine risk is libm ulp drift — the same (accepted, measured-
     zero-at-test-sf) risk every haversine oracle in this repo carries.
     """
@@ -142,124 +139,6 @@ def _signed_face_term(level: int) -> tuple[int, int, int]:
     return 1 << (lsb_shift + 1), 1 << lsb_shift, 1 << 61
 
 
-def with_s2_faceij(
-    df: DataFrame, lon: str = "lon", lat: str = "lat", level: int = 13,
-    face: str = "__s2f", i: str = "__s2i", j: str = "__s2j",
-) -> DataFrame:
-    """Append (face, i, j) discrete cube coordinates at `level`, behind an
-    eval_once barrier (each feeds the Hilbert fold 2·level times —
-    materialize the trig once instead of letting CollapseProject inline
-    the tree per bit)."""
-    from .barrier import eval_once
-
-    face_s, u_s, v_s = _face_uv_exprs(lon, lat)
-    tmp = {
-        face: F.expr(face_s),
-        i: F.expr(_ij_expr(_st_expr(u_s), level)),
-        j: F.expr(_ij_expr(_st_expr(v_s), level)),
-    }
-    return eval_once(df.withColumns(tmp), list(tmp))
-
-
-def hilbert_cell(fc: Column, ic: Column, jc: Column, level: int) -> Column:
-    """(face, i, j) → canonical signed-int64 S2 id: the Hilbert position
-    fold (`aggregate` over sequence — linear expression, iterative eval)
-    plus face/lsb assembly. Inputs should be cheap column refs (see
-    with_s2_faceij's barrier)."""
-    # per-level ij crumbs (literal shifts — shiftright needs int amounts)
-    ij_bits = F.array(
-        *[
-            (
-                F.shiftright(ic, level - k).bitwiseAND(F.lit(1)) * F.lit(2)
-                + F.shiftright(jc, level - k).bitwiseAND(F.lit(1))
-            ).cast("int")
-            for k in range(1, level + 1)
-        ]
-    )
-    step = F.array(*[F.lit(s) for s in STEP])
-    init = F.struct(
-        F.lit(0).cast("long").alias("pos"),
-        fc.bitwiseAND(F.lit(1)).cast("int").alias("orient"),
-    )
-
-    def _fold(acc: Column, k: Column) -> Column:
-        st = F.element_at(step, (acc["orient"] * F.lit(4) + F.element_at(ij_bits, k) + F.lit(1)).cast("int"))
-        return F.struct(
-            (acc["pos"] * F.lit(4) + F.shiftright(st, 2).cast("long")).alias("pos"),
-            st.bitwiseAND(F.lit(3)).cast("int").alias("orient"),
-        )
-
-    pos = F.aggregate(
-        F.sequence(F.lit(1), F.lit(level)), init, _fold, lambda a: a["pos"]
-    )
-    pos_scale, lsb, _ = _signed_face_term(level)
-    signed_face = F.when(fc < 4, fc.cast("long")).otherwise(fc.cast("long") - 8)
-    return (
-        signed_face * F.lit(1 << 61) + pos * F.lit(pos_scale) + F.lit(lsb)
-    ).cast("long")
-
-
-def with_s2_cell(
-    df: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    level: int = 13,
-    out: str = "s2_cell",
-) -> DataFrame:
-    """Append canonical S2 cell id (signed int64) as a pure Catalyst
-    expression — no Python in the plan; the Hilbert fold runs inside the
-    JVM via `aggregate` (higher-order function, linear expression size).
-    """
-    work = with_s2_faceij(df, lon, lat, level)
-    cell = hilbert_cell(F.col("__s2f"), F.col("__s2i"), F.col("__s2j"), level)
-    return work.withColumn(out, cell).drop("__s2f", "__s2i", "__s2j")
-
-
-def with_s2_cells_ring1(
-    df: DataFrame,
-    lon: str = "lon",
-    lat: str = "lat",
-    level: int = 19,
-    out: str = "s2_cell",
-) -> DataFrame:
-    """Dilate each row to its cell + the 8 ij-neighbors (one output row
-    per distinct neighbor id) — the build-side preparation for an
-    S2-cell-keyed distance equi-join, exactly like CellGrid ring-1 but on
-    canonical ids.
-
-    Neighbors are taken in (face, i, j) space, clamped to the face
-    ([0, 2^level−1]); clamp-duplicates collapse via array_distinct before
-    the explode. Cross-face adjacency is NOT generated — a probe within
-    the threshold of a build point across a cube-face edge lands in a
-    cell this dilation misses. Joins must therefore use a level whose
-    min cell width exceeds the distance threshold AND an AOI that does
-    not straddle a face edge (the engine's default CellGrid join has no
-    such caveat and remains the general-case operator; this variant
-    exists for canonical-id interop per the north rule).
-    """
-    work = with_s2_faceij(df, lon, lat, level)
-    lim = (1 << level) - 1
-    fc = F.col("__s2f")
-    cells = F.array_distinct(
-        F.array(
-            *[
-                hilbert_cell(
-                    fc,
-                    F.greatest(F.lit(0), F.least(F.lit(lim), F.col("__s2i") + F.lit(di))).cast("long"),
-                    F.greatest(F.lit(0), F.least(F.lit(lim), F.col("__s2j") + F.lit(dj))).cast("long"),
-                    level,
-                )
-                for di in (-1, 0, 1)
-                for dj in (-1, 0, 1)
-            ]
-        )
-    )
-    return (
-        work.withColumn(out, F.explode(cells))
-        .drop("__s2f", "__s2i", "__s2j")
-    )
-
-
 def s2_sql_ctes(
     src: str,
     lon: str = "lon",
@@ -319,7 +198,7 @@ def s2_sql_ctes_ring1(
     keep: str = "*",
     prefix: str = "s2r",
 ) -> tuple[str, str]:
-    """Oracle mirror of `with_s2_cells_ring1`: dilate in (face,i,j) space
+    """Oracle mirror of `s2_cells_ring1_udf`: dilate in (face,i,j) space
     (3×3, clamped to the face), dedup, then the Hilbert chain. `keep`
     must uniquely identify source rows (the DISTINCT stands in for the
     engine's per-row array_distinct)."""
@@ -434,12 +313,20 @@ def _fold30_numpy(face, i, j, level: int):
 
 
 def s2_cells_ring1_numpy(lon, lat, level: int):
-    """Batch twin of with_s2_cells_ring1's per-row cell set: the (n, 9)
-    int64 array of the row's cell + its 8 ij-neighbors at `level`, clamped
-    to the face (clamp duplicates left in — callers array_distinct).
-    Neighbor arithmetic happens in level-`level` ij space exactly like the
-    Catalyst version; shifting back to level-30 space feeds the shared
-    fold (any leaf inside a cell folds to the same parent id)."""
+    """Ring-1 cell set per row: the (n, 9) int64 array of the row's cell +
+    its 8 ij-neighbors at `level`, clamped to the face (clamp duplicates
+    left in — callers array_distinct). Neighbor arithmetic happens in
+    level-`level` ij space, like s2_sql_ctes_ring1; shifting back to
+    level-30 space feeds the shared fold (any leaf inside a cell folds to
+    the same parent id).
+
+    Cross-face adjacency is NOT generated: a probe within the threshold
+    of a build point across a cube-face edge lands in a cell this
+    dilation misses. Joins must therefore use a level whose min cell
+    width exceeds the distance threshold AND an AOI that does not
+    straddle a face edge (the engine's default CellGrid join has no such
+    caveat and remains the general-case operator; the S2 variant exists
+    for canonical-id interop per the north rule)."""
     import numpy as np
 
     face, i30, j30 = _faceij30_numpy(lon, lat)
@@ -458,9 +345,9 @@ def s2_cells_ring1_numpy(lon, lat, level: int):
 def s2_cells_ring1_udf(level: int = 19):
     """Arrow-batched pandas UDF: (lon, lat) -> array<long> of 9 ring-1
     cell ids (with clamp duplicates) — the vectorized build-side encoder
-    for the S2-keyed distance join. ~100× the HOF-aggregate expression
-    tree's throughput at level 19 (9 Hilbert folds per row interpret
-    poorly; the numpy fold is 8 table lookups over the whole batch)."""
+    for the S2-keyed distance join (the numpy fold is 8 table lookups
+    over the whole batch). Same cross-face caveat as
+    s2_cells_ring1_numpy: no neighbors across a cube-face edge."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

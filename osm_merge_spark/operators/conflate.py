@@ -8,10 +8,11 @@ version; primaries with no candidate become "new" features
 (conflator.py:318-325).
 
 Spark-first plan (one lazy DataFrame graph, no driver loops):
-    scan → cell encode → cell_pairs (each image keeps its one cell, the
-    layer is ring-1 dilated; points and lines split by geometry; every
-    pair meets in exactly one cell, so no pair dedup; AQE picks broadcast
-    or shuffle; lines join as one row per segment) → exact distance
+    scan → layer rows split into parts → cell encode → cell_pairs (each
+    image keeps its one cell, the layer is ring-1 dilated; parts split by
+    vertex count into points and lines; every pair meets in exactly one
+    cell, so no pair dedup; AQE picks broadcast or shuffle; lines join as
+    one row per segment) → exact distance
     refine in codegen (haversine / point→segment, min over a feature's
     segments and parts taken in the cap) →
     then two outputs off the refined pairs:
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 from ..functions import fuzzy, geo
 from ..functions.cells import CellGrid
 from . import cell_join, knn
+from .multipart import explode_parts
 
 
 @dataclass(frozen=True)
@@ -222,9 +224,9 @@ def suppress_identical(matched: DataFrame) -> DataFrame:
 
 
 def conflate(images: DataFrame, layer: DataFrame,
-             params: ConflateParams = ConflateParams(),
-             layer_is_points: bool = False,
-             explode_multipart: bool = False) -> tuple[DataFrame, DataFrame]:
+             params: ConflateParams = ConflateParams(), *,
+             # ignored: perfbench/workloads.py still passes it
+             explode_multipart: bool = True) -> tuple[DataFrame, DataFrame]:
     """Run the full ladder. Returns (matched, new).
 
     images: (image_id, caption, lon, lat, [p_tags map], ...payload excluded
@@ -235,6 +237,11 @@ def conflate(images: DataFrame, layer: DataFrame,
              tags (merged + debug counters like conflator.py:250-253)
     new:     image_id, caption, lon, lat, version=1, tags with
              informal=yes + fixme (conflator.py:318-325)
+
+    Multi-part layer rows (NaN- or null-separated xs/ys) are split into
+    parts first; each part is routed by its vertex count (1 → point
+    refine, more → segment refine) and the cap keeps each feature's
+    nearest part (min over sub-geometries, conflator.py:485-528).
     """
     grid = CellGrid.for_radius(params.threshold_m * 1.05,
                                max_abs_lat=70.0)
@@ -268,18 +275,9 @@ def conflate(images: DataFrame, layer: DataFrame,
     # a null feature_id would be a refined pair that no enrich join can
     # pick as a winner — dropping it here keeps "has a refined pair" and
     # "has a winner" the same image set, which `new` relies on
-    s_slim = s.select("feature_id", "xs", "ys").filter(
-        F.col("feature_id").isNotNull()
+    s_slim = explode_parts(
+        s.select("feature_id", "xs", "ys").filter(F.col("feature_id").isNotNull())
     )
-    if explode_multipart:
-        # multi-part geometries ride as NaN-separated packed arrays
-        # (sources/geojson); per-part rows join/refine independently and
-        # the cap below keeps each feature's nearest part
-        # (min-over-sub-geometries, conflator.py:485-528)
-        from .multipart import explode_parts
-
-        s_slim = explode_parts(s_slim)
-
     # Planar bbox prefilter bound — cheap compares per candidate BEFORE
     # the transcendental refine. A point within threshold_m of a geometry
     # is within threshold of its bbox; 110574 m/deg is the MINIMUM
@@ -330,8 +328,7 @@ def conflate(images: DataFrame, layer: DataFrame,
         # distance are then plain column math that codegen compiles; an
         # array_min(transform(...)) over the polyline per pair runs
         # interpreted. The cap below keeps each feature's nearest segment,
-        # as it keeps its nearest part. Segments touching a NaN or null
-        # part separator are dropped: they belong to no part.
+        # as it keeps its nearest part.
         k = F.col("__k")
         seg = s_part.select(
             "feature_id", "xs", "ys",
@@ -342,8 +339,6 @@ def conflate(images: DataFrame, layer: DataFrame,
             F.element_at("xs", k + 1).alias("bx"), F.element_at("ys", k + 1).alias("by"),
         )
         ax, ay, bx, by = (F.col(c) for c in ("ax", "ay", "bx", "by"))
-        for c in (ax, ay, bx, by):
-            seg = seg.filter(c.isNotNull() & ~F.isnan(c))
         seg = seg.select(
             "feature_id", "ax", "ay", "bx", "by",
             geo.mercator_x(ax).alias("__mxa"), geo.mercator_y(ay).alias("__mya"),
@@ -374,15 +369,13 @@ def conflate(images: DataFrame, layer: DataFrame,
             .select(*slim_cols)
         )
 
-    if layer_is_points:
-        refined = points_refined(s_slim)
-    else:
-        # mixed layers split by geometry: point features (the vast
-        # majority in real layers) take the scalar fast path; only
-        # line/ring features pay the segment explode + covering cells.
-        refined = points_refined(s_slim.filter(F.size("xs") == 1)).unionByName(
-            lines_refined(s_slim.filter(F.size("xs") > 1))
-        )
+    # parts split by vertex count: point parts (the vast majority in real
+    # layers) take the scalar fast path; only line/ring parts pay the
+    # segment explode + covering cells. On an all-point layer the lines
+    # branch plans but carries no rows.
+    refined = points_refined(s_slim.filter(F.size("xs") == 1)).unionByName(
+        lines_refined(s_slim.filter(F.size("xs") > 1))
+    )
     # J7: "new" means no feature within the threshold — an anti-join
     # against the refined pairs, so its plan stops at the refine
     new = new_features(p, refined)

@@ -16,8 +16,7 @@ from pyspark.sql import functions as F
 
 def top_k_agg(pairs: DataFrame, partition_key: str, dist_col: str,
               tie_col: str, k: int, const_cols: list[str] = (),
-              payload_cols: list[str] = (),
-              n_salt: int | None = None) -> DataFrame:
+              payload_cols: list[str] = ()) -> DataFrame:
     """Aggregation-based top-k: keep the k (dist, tie)-smallest rows per
     partition_key WITHOUT the row_number window's global sort.
 
@@ -44,32 +43,15 @@ def top_k_agg(pairs: DataFrame, partition_key: str, dist_col: str,
     comparison, but they must be orderable types (no maps — re-join those by
     tie_col post-cap instead).
 
-    n_salt: optional two-level variant for EXTREME per-key skew (a key with
-    millions of in-threshold candidates): level 1 caps per (key, salt
-    bucket) so no aggregation buffer exceeds ~df/n_salt elements, level 2
-    merges n_salt k-lists per key. The default single-level is right when
-    per-key candidate counts are bounded (threshold-refined pairs)."""
+    Each key's buffer holds all its candidates before the slice: right
+    when per-key candidate counts are bounded (threshold-refined pairs)."""
     sort_struct = F.struct(
         F.col(dist_col), F.col(tie_col), *[F.col(c) for c in payload_cols]
     )
-    firsts = [F.first(c).alias(c) for c in const_cols]
-    if n_salt and n_salt > 1:
-        salt = F.pmod(F.xxhash64(F.col(tie_col)), F.lit(n_salt)).alias("__salt")
-        l1 = pairs.groupBy(F.col(partition_key), salt).agg(
-            F.slice(F.array_sort(F.collect_list(sort_struct)), 1, k).alias("__top"),
-            *firsts,
-        )
-        agg = l1.groupBy(partition_key).agg(
-            F.slice(
-                F.array_sort(F.flatten(F.collect_list("__top"))), 1, k
-            ).alias("__top"),
-            *[F.first(c).alias(c) for c in const_cols],
-        )
-    else:
-        agg = pairs.groupBy(partition_key).agg(
-            F.slice(F.array_sort(F.collect_list(sort_struct)), 1, k).alias("__top"),
-            *firsts,
-        )
+    agg = pairs.groupBy(partition_key).agg(
+        F.slice(F.array_sort(F.collect_list(sort_struct)), 1, k).alias("__top"),
+        *[F.first(c).alias(c) for c in const_cols],
+    )
     return agg.select(
         partition_key, *const_cols, F.explode("__top").alias("__t")
     ).select(

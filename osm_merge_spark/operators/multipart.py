@@ -13,7 +13,7 @@ reference's min-over-sub-geometries exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -51,8 +51,3 @@ def explode_parts(df: DataFrame, xs: str = "xs", ys: str = "ys",
         F.slice(F.col("__xs"), F.col("__r.s") + 1, length).alias(xs),
         F.slice(F.col("__ys"), F.col("__r.s") + 1, length).alias(ys),
     ).filter(F.size(F.col(xs)) > 0)
-
-
-def has_multipart(geom_type: Column) -> Column:
-    return geom_type.isin("MultiLineString", "MultiPolygon",
-                          "GeometryCollection")

@@ -5,9 +5,10 @@ Two paths, mirroring a real ANN stack:
     set, JVM-side zip_with/aggregate dot products (no Python), window
     top-k. O(Q·N) but Q is small; at 100 TB this is the re-rank stage.
   - random-hyperplane LSH — the scale path: 1-bit signatures per
-    hyperplane, bucket equi-join on the full signature, cosine refine only
-    inside buckets. Hyperplane components are deterministic literals so
-    the DuckDB oracle reproduces signatures exactly.
+    hyperplane, banded bucket equi-join (a pair is a candidate when it
+    agrees on one full band), cosine refine only inside buckets.
+    Hyperplane components are deterministic literals so the DuckDB oracle
+    reproduces signatures exactly.
 
 Dot products fold left-to-right in BOTH engines (Spark aggregate() and
 DuckDB list_reduce with a prepended 0.0) so doubles are bit-identical.
@@ -22,10 +23,9 @@ from pyspark.sql import functions as F
 
 from ..functions.geo import dlit
 
-LSH_BITS = 8
 # banded configuration (b bands × r bits): a pair is a candidate when it
-# agrees on ≥1 FULL band. Bucket count per band = 2^r (2^16 ≈ 65k vs the
-# old single-signature 2^8=256), so the intra-bucket refine shrinks
+# agrees on ≥1 FULL band. Bucket count per band = 2^r (2^16 ≈ 65k vs 256
+# for one 8-bit signature), so the intra-bucket refine shrinks
 # ~b·2^r/2^8-fold while the b-band union keeps recall at high cosine —
 # exactly the banding dedup.lsh_candidate_pairs already uses for MinHash.
 LSH_BANDS = 4
@@ -131,7 +131,7 @@ def _topk_by_cos(scored: DataFrame, k: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 # random-hyperplane LSH
 # ---------------------------------------------------------------------------
-def hyperplanes(dim: int, bits: int = LSH_BITS) -> list[list[float]]:
+def hyperplanes(dim: int, bits: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplane components in [-1, 1] —
     plain literals in both engines (no runtime RNG)."""
     import hashlib
@@ -144,15 +144,6 @@ def hyperplanes(dim: int, bits: int = LSH_BITS) -> list[list[float]]:
             row.append((h % 2001 - 1000) / 1000.0)
         out.append(row)
     return out
-
-
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    sig: Column = F.lit(0).cast("long")
-    for b, row in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in row])
-        d = _dot(vec, arr)
-        sig = sig + F.when(d >= F.lit(0.0), F.lit(1 << b)).otherwise(F.lit(0))
-    return sig
 
 
 # ---------------------------------------------------------------------------
@@ -371,30 +362,6 @@ def lsh_banded_pairs_sql(table: str, planes: list[list[float]],
         f"SELECT v1, v2, round({cos}, 6) AS cos FROM cand"
         f" JOIN {table} e1 ON v1 = e1.{id_col}"
         f" JOIN {table} e2 ON v2 = e2.{id_col}"
-    )
-
-
-def lsh_candidate_pairs(emb: DataFrame, planes: list[list[float]],
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding") -> DataFrame:
-    """Single full-signature bucket join (2^bits buckets) — the
-    high-recall SMALL-N configuration. At scale the intra-bucket refine is
-    O(N²/2^bits); use lsh_banded_pairs (b×r banding) as the
-    candidate-generation stage instead."""
-    sigs = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_signature(F.col(vec_col), planes).alias("sig"),
-    )
-    a = sigs.select(F.col("vid").alias("v1"), F.col("vec").alias("vec1"), "sig")
-    b = sigs.select(F.col("vid").alias("v2"), F.col("vec").alias("vec2"), "sig")
-    return (
-        a.join(b, "sig")
-        .filter(F.col("v1") < F.col("v2"))
-        .select(
-            "v1", "v2",
-            F.round(cosine(F.col("vec1"), F.col("vec2")), 6).alias("cos"),
-        )
     )
 
 

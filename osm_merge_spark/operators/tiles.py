@@ -77,12 +77,3 @@ def assign_tiles(records: DataFrame, grid: TileGrid,
     `output partitioned by tile_id` instead of N clipped files.
     """
     return records.withColumn("tile_id", grid.tile_id(F.col(lon), F.col(lat)))
-
-
-def assign_and_clip(records: DataFrame, tiles: DataFrame, grid: TileGrid,
-                    lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """Assignment restricted to AOI tiles: broadcast semi-join on tile_id
-    (tiles table ≈ thousands of rows → always broadcast)."""
-    return assign_tiles(records, grid, lon, lat).join(
-        F.broadcast(tiles.select("tile_id")), "tile_id", "left_semi"
-    )

@@ -206,10 +206,7 @@ def conflation_pipeline(
         )
         images = clipped
 
-    img_n = run_stage(
-        ctx, "images_normalized", lambda s: images,
-        observe_metrics={"rows": F.count(F.lit(1))},
-    )
+    img_n = run_stage(ctx, "images_normalized", lambda s: images)
     layer_n = run_stage(ctx, "layer_normalized", lambda s: layer)
 
     def build_matched(s):

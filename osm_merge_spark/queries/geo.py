@@ -11,7 +11,7 @@ join, J10/A6 tiling, F6 PIP clip, X1 fuzzy ratio, X3 haversine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import fuzzy, geo
@@ -349,10 +349,10 @@ def _sql_aoi_clip() -> str:
 # S2-indexed dataset. Oracle mirrors the Hilbert automaton as a CTE chain.
 # ---------------------------------------------------------------------------
 def q_s2_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Arrow-batched encoder on the corpus side (same ids as the Catalyst
-    # fold — pinned by tests; 3.5× here, the fold is interpreted); the
-    # pure-Catalyst with_s2_cell stays the no-Python-workers option and
-    # the oracle mirrors its CTE chain unchanged.
+    # Arrow-batched encoder (a Catalyst aggregate fold of the same
+    # automaton measured 3.5× slower here: Spark interprets it); the
+    # oracle runs the automaton as a DuckDB CTE chain, and tests pin the
+    # two to the same ids.
     from ..functions import s2
 
     img = base.images_df(spark, sf_dir).select("image_id", "lon", "lat")
@@ -392,11 +392,11 @@ _S2_JOIN_LEVEL = 19
 
 def q_s2_dist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Encoders are the vectorized Arrow kernels (the north rule's own
-    # wording), not the Catalyst HOF fold: at level 19 the probe fold is 19
-    # chained struct steps and the build side folds 9 neighbors per row —
-    # interpreted expression cost that measured 54.7 s at sf0.1 vs 1.7 s
-    # for the numpy fold (8 whole-batch table lookups) — 33×, identical
-    # ids (tests pin catalyst == udf == numpy; ring-1 sets match per row).
+    # wording): a Catalyst HOF fold of the automaton (19 chained struct
+    # steps per probe, 9 folds per build row) runs interpreted and
+    # measured 54.7 s at sf0.1 vs 1.7 s for the numpy fold (8 whole-batch
+    # table lookups). Tests pin udf == numpy == the DuckDB CTE mirror,
+    # ring-1 sets per row included.
     from ..functions import s2
     from ..functions.barrier import eval_once
 

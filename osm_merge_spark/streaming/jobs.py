@@ -68,8 +68,7 @@ def session_events(events: DataFrame, gap: str = "30 minutes",
 
 
 def conflate_stream(images_stream: DataFrame, layer: DataFrame,
-                    out_dir: str, checkpoint_dir: str,
-                    layer_is_points: bool = False):
+                    out_dir: str, checkpoint_dir: str):
     """Streaming conflation of an image firehose against the static layer.
 
     Stream-static: each micro-batch of images runs the full batch
@@ -92,9 +91,7 @@ def conflate_stream(images_stream: DataFrame, layer: DataFrame,
     layer = layer.persist()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matched, new = conflate(
-            batch_df, layer, ConflateParams(), layer_is_points=layer_is_points
-        )
+        matched, new = conflate(batch_df, layer, ConflateParams())
         matched.write.mode("overwrite").parquet(
             f"{out_dir}/matched/batch={batch_id}"
         )

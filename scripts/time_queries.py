@@ -1,7 +1,8 @@
 """Time registry queries at a given sf dir — the quick pathological-plan
 sweep bench.py's curated suite doesn't cover.
 
-One shared local[32] session, one warm-up collect of a tiny query, then
+One shared session on get_spark's default master (local[$SPARK_GRAFT_CPUS],
+local[*] when unset), one warm-up collect of a tiny query, then
 each named query (default: all) is built fresh and timed over `--reps`
 runs (min taken). Prints `name  best_s  rows`, slowest first.
 
@@ -42,7 +43,6 @@ def main() -> int:
 
     spark = get_spark(
         "time-queries",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         extra_conf={"spark.sql.shuffle.partitions": "32"},
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -16,7 +16,7 @@ from osm_merge_spark.functions.fuzzy import indel_ratio_oracle
 from osm_merge_spark.operators.conflate import ConflateParams, conflate
 
 N_IMAGES = 400
-PARAMS = ConflateParams(threshold_m=7.0, hot_threshold=100, n_salt=4)
+PARAMS = ConflateParams(threshold_m=7.0)
 
 
 def _haversine(lon1, lat1, lon2, lat2):
@@ -155,7 +155,7 @@ def _with_second_parts(images, layer):
 
 
 def test_multipart_conflate_matches_bruteforce_oracle(spark, data):
-    """conflate(explode_multipart=True) against the oracle's
+    """conflate() against the oracle's
     min-over-parts distance, on a layer where some features have a second
     part near another image and some images have both parts in range."""
     images, layer = data
@@ -168,8 +168,7 @@ def test_multipart_conflate_matches_bruteforce_oracle(spark, data):
         " xs array<double>, ys array<double>,"
         " tags map<string,string>, caption string",
     )
-    matched, new = conflate(synth.synth_images(spark, N_IMAGES), layer_df,
-                            PARAMS, explode_multipart=True)
+    matched, new = conflate(synth.synth_images(spark, N_IMAGES), layer_df, PARAMS)
     rows = matched.collect()
     got_m = {r["image_id"]: (r["feature_id"], r["hits"]) for r in rows}
     assert {r["image_id"] for r in new.collect()} == want_new
@@ -394,23 +393,31 @@ def test_segment_refine_matches_polyline_refine(spark):
 @pytest.mark.parametrize("sep", [float("nan"), None], ids=["nan", "null"])
 def test_separated_multiline_refines_like_its_parts(spark, sep):
     """A two-part MultiLineString packed with a NaN or a null separator
-    gives the same matched and new without explode_multipart (segments
-    touching the separator are dropped) as with it (one row per part)."""
+    refines part by part: both packings give the same matched and new, and
+    each matches the per-part NumPy brute force (segments touching the
+    separator belong to no part)."""
     lines, images = _segment_fixture()
-    multi = []
-    for i in range(0, len(lines), 2):
-        (x1, y1), (x2, y2) = lines[i], lines[i + 1]
-        multi.append((x1 + [sep] + x2, y1 + [sep] + y2))
-    rows = [(fid, v, "MultiLineString", xs, ys, t, c)
-            for fid, v, _g, xs, ys, t, c in _layer_rows(multi)]
     img_df = spark.createDataFrame(images, "image_id string, caption string, lon double, lat double")
-    layer_df = spark.createDataFrame(rows, _LAYER_DDL)
 
-    def run(explode):
-        m, n = conflate(img_df, layer_df, PARAMS, explode_multipart=explode)
+    def packed(s):
+        return [(x1 + [s] + x2, y1 + [s] + y2)
+                for (x1, y1), (x2, y2) in zip(lines[0::2], lines[1::2])]
+
+    def run(s):
+        rows = [(fid, v, "MultiLineString", xs, ys, t, c)
+                for fid, v, _g, xs, ys, t, c in _layer_rows(packed(s))]
+        m, n = conflate(img_df, spark.createDataFrame(rows, _LAYER_DDL), PARAMS)
         return (sorted(m.collect(), key=lambda r: r["image_id"]),
                 sorted(r["image_id"] for r in n.collect()))
 
-    whole, parts = run(False), run(True)
-    assert len(whole[0]) > 50 and len(whole[1]) > 10
-    assert whole == parts
+    matched, new = run(sep)
+    assert (matched, new) == run(None if sep is not None else float("nan"))
+
+    multi = packed(sep)
+    brute = {iid: [_np_dist_m(lon, lat, xs, ys) for xs, ys in multi]
+             for iid, _c, lon, lat in images}
+    assert new == sorted(i for i, d in brute.items() if min(d) > PARAMS.threshold_m)
+    assert len(matched) > 50 and len(new) > 10
+    assert len(matched) + len(new) == len(images)
+    for r in matched:
+        assert abs(r["dist_m"] - brute[r["image_id"]][r["feature_id"] - 1]) < 1e-6

@@ -80,9 +80,9 @@ def _haversine(lon1, lat1, lon2, lat2):
 def test_multipart_conflation_matches_bruteforce(spark):
     """Images sit near the SECOND part of a two-part feature whose parts
     are far apart: without part dispatch the packed representation would
-    either miss the match or invent a phantom bridge segment; with
-    explode_multipart the (image, feature) distance equals the per-part
-    brute-force minimum."""
+    either miss the match or invent a phantom bridge segment; with part
+    dispatch the (image, feature) distance equals the per-part brute-force
+    minimum."""
     from osm_merge_spark.operators.conflate import ConflateParams, conflate
 
     m = 1.0 / 110_574.0  # ≈ one meter in degrees latitude
@@ -106,8 +106,7 @@ def test_multipart_conflation_matches_bruteforce(spark):
         ],
         "image_id string, caption string, lon double, lat double",
     )
-    matched, new = conflate(images, layer, ConflateParams(threshold_m=7.0),
-                            explode_multipart=True)
+    matched, new = conflate(images, layer, ConflateParams(threshold_m=7.0))
     rows = {r.image_id: r for r in matched.collect()}
     assert set(rows) == {"imgA"}
     assert {r.image_id for r in new.collect()} == {"imgB"}
@@ -191,8 +190,7 @@ def test_multipart_match_does_not_depend_on_part_order(spark):
             " xs array<double>, ys array<double>,"
             " tags map<string,string>, caption string",
         )
-        matched, new = conflate(images, layer, ConflateParams(),
-                                explode_multipart=True)
+        matched, new = conflate(images, layer, ConflateParams())
         rows = matched.collect()
         assert new.count() == 0
         assert [(r.image_id, r.feature_id) for r in rows] == [("img", 1)]

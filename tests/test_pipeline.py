@@ -169,6 +169,38 @@ def test_conflation_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert out2["matched"].count() == n_matched
 
 
+def test_conflation_pipeline_matches_a_collections_point_member(spark, tmp_path):
+    """A GeometryCollection(Point, LineString) reads as one NaN-separated
+    packed row. An image 2 m from the Point member and far from the
+    LineString is matched, not new: the point part takes the point refine
+    instead of vanishing with the segments that touch the separator."""
+    import json
+
+    from osm_merge_spark.sources.geojson import read_feature_collection
+
+    lon0, lat0 = -108.5, 43.5
+    gc = {"type": "GeometryCollection", "geometries": [
+        {"type": "Point", "coordinates": [lon0, lat0]},
+        {"type": "LineString", "coordinates": [[lon0 + 0.01, lat0], [lon0 + 0.02, lat0]]},
+    ]}
+    path = tmp_path / "layer.geojson"
+    path.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "geometry": gc, "properties": {"name": "Bear Lake Trailhead"}},
+    ]}))
+    layer = read_feature_collection(spark, str(path)).select(
+        F.lit(1).cast("long").alias("feature_id"), F.lit(1).alias("version"),
+        "geom_type", "xs", "ys", "tags", F.col("tags")["name"].alias("caption"),
+    )
+    images = spark.createDataFrame(
+        [("near-point", "Bear Lake Trailhead", lon0, lat0 + 2.0 / 110_574.0),
+         ("far", "Bear Lake Trailhead", lon0, lat0 + 0.01)],
+        "image_id string, caption string, lon double, lat double",
+    )
+    out = conflation_pipeline(_ctx(spark, tmp_path, "gc"), images, layer, tile_m=5000.0)
+    assert [(r.image_id, r.feature_id) for r in out["matched"].collect()] == [("near-point", 1)]
+    assert [r.image_id for r in out["new"].collect()] == ["far"]
+
+
 def test_pipeline_with_aoi_clip(spark, tmp_path):
     """aoi_ring clips the image stream before conflation (boundary-clip
     stage, geosupport.py:139-173 semantics)."""

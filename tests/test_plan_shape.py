@@ -50,18 +50,17 @@ def test_conflate_plan_has_no_window_or_smj(spark):
 
 
 def test_multipart_conflate_plan_shape(spark):
-    """With explode_multipart the best-part min rides inside the per-image
-    top-5 cap, and every (image, part) pair leaves the cell join once: no
-    aggregate in matched or new is keyed on pair ids, and matched has at
-    most 3 hash exchanges. `new` is the refined pairs' anti-join, so its
+    """Layer rows split into parts; the best-part min rides inside the
+    per-image top-5 cap, and every (image, part) pair leaves the cell join
+    once: no aggregate in matched or new is keyed on pair ids, and matched
+    has at most 3 hash exchanges. `new` is the refined pairs' anti-join, so its
     plan carries no scoring UDF, cap or winner pick."""
     from osm_merge_spark.data.synth import synth_images, synth_layer
     from osm_merge_spark.operators.conflate import ConflateParams, conflate
 
     images = synth_images(spark, 2000)
     layer = synth_layer(spark, 2000)
-    matched, new = conflate(images, layer, ConflateParams(),
-                            explode_multipart=True)
+    matched, new = conflate(images, layer, ConflateParams())
     plan = _plan(matched)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3
     new_plan = _plan(new)

@@ -1,6 +1,7 @@
 """Banded ANN LSH (VERDICT #5): on planted near-duplicates the b×r banded
-configuration must BEAT the old single 8-bit signature on recall while
-generating far fewer candidate pairs (smaller buckets → cheaper refine)."""
+configuration must BEAT a single 8-bit signature (the same primitive with
+one band of 8 bits) on recall while generating far fewer candidate pairs
+(smaller buckets → cheaper refine)."""
 
 from __future__ import annotations
 
@@ -43,10 +44,10 @@ def test_banded_beats_single_signature_on_planted_dups(spark):
     planes_banded = similarity.hyperplanes(
         DIM, similarity.LSH_BANDS * similarity.LSH_BAND_BITS
     )
-    planes_single = similarity.hyperplanes(DIM, similarity.LSH_BITS)
-
     banded = similarity.lsh_banded_pairs(df, planes_banded)
-    single = similarity.lsh_candidate_pairs(df, planes_single)
+    single = similarity.lsh_banded_pairs(
+        df, similarity.hyperplanes(DIM, 8), n_bands=1, band_bits=8
+    )
     r_banded, n_banded = _recall(banded, truth)
     r_single, n_single = _recall(single, truth)
 
@@ -64,8 +65,6 @@ def test_banded_bucket_sizes_shrink(spark):
     planes_banded = similarity.hyperplanes(
         DIM, similarity.LSH_BANDS * similarity.LSH_BAND_BITS
     )
-    planes_single = similarity.hyperplanes(DIM, similarity.LSH_BITS)
-
     from osm_merge_spark.functions.barrier import eval_once
 
     sigs = eval_once(
@@ -80,11 +79,10 @@ def test_banded_bucket_sizes_shrink(spark):
         )).alias("bk"))
         .groupBy("bk").count()
     )
+    # one band over the first 8 bits: the single 8-bit signature
     single_sizes = (
-        df.select(
-            similarity.lsh_signature(F.col("embedding"), planes_single)
-            .alias("sig")
-        ).groupBy("sig").count()
+        sigs.select(similarity.lsh_band_keys(F.col("bits"), 1, 8)[0].alias("sig"))
+        .groupBy("sig").count()
     )
     max_band = band_sizes.agg(F.max("count")).collect()[0][0]
     max_single = single_sizes.agg(F.max("count")).collect()[0][0]

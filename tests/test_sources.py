@@ -223,9 +223,7 @@ def test_odk_csv_ingest_to_conflation(spark, tmp_path):
         " xs array<double>, ys array<double>,"
         " tags map<string,string>, caption string",
     )
-    matched, new = conflate(
-        pois, layer, ConflateParams(threshold_m=10.0), layer_is_points=True
-    )
+    matched, new = conflate(pois, layer, ConflateParams(threshold_m=10.0))
     m = matched.collect()
     assert {r.image_id for r in m} == {"uuid:1"}
     assert {r.image_id for r in new.collect()} == {"uuid:2"}

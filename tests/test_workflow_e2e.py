@@ -59,8 +59,7 @@ def test_convert_conflate_emit_josm(spark, tmp_path, capsys):
         " xs array<double>, ys array<double>,"
         " tags map<string,string>, caption string",
     )
-    matched, new = conflate(primary, layer, ConflateParams(),
-                            layer_is_points=True)
+    matched, new = conflate(primary, layer, ConflateParams())
     m = matched.collect()
     assert len(m) == 5 and {r.image_id for r in m} == {
         f"FR {500 + i}" for i in range(5)}

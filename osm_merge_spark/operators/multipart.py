@@ -20,12 +20,16 @@ from pyspark.sql import functions as F
 def explode_parts(df: DataFrame, xs: str = "xs", ys: str = "ys",
                   part_col: str = "part_idx") -> DataFrame:
     """One row per NaN-separated part; single-part rows pass through with
-    part_idx=0 (and no slicing cost beyond the boundary scan).
+    part_idx=0 (and no slicing cost beyond the boundary scan). Rows with
+    an empty or null xs carry no part and are dropped before the scan:
+    the reader packs a MultiPoint, an unknown type or an empty
+    collection that way, and element_at over an empty array fails.
 
     Plan shape: boundary positions via filter(sequence) over the array,
     posexplode of the (start, end) ranges, slice per part — all inside
     whole-stage codegen; the explode factor equals the true part count.
     """
+    df = df.filter(F.size(F.col(xs)) > 0)
     n = F.size(F.col(xs))
     # separators survive as NaN OR null depending on the ingest path
     # (Arrow list conversion can surface NaN as null) — accept both

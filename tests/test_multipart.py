@@ -25,6 +25,8 @@ def test_explode_parts_basic(spark):
             (1, [0.0, 1.0, NAN, 5.0, 6.0, 7.0], [0.0, 1.0, NAN, 5.0, 6.0, 7.0]),
             (2, [9.0], [9.0]),                      # single part passthrough
             (3, [1.0, 2.0], [1.0, 2.0]),
+            (4, [], []),                            # no part: dropped
+            (5, None, None),
         ],
         "feature_id long, xs array<double>, ys array<double>",
     )

@@ -201,6 +201,45 @@ def test_conflation_pipeline_matches_a_collections_point_member(spark, tmp_path)
     assert [r.image_id for r in out["new"].collect()] == ["far"]
 
 
+def test_conflation_pipeline_skips_empty_geometry_rows(spark, tmp_path):
+    """The reader packs a MultiPoint, an unknown type and an empty
+    GeometryCollection as empty xs/ys arrays. Those rows carry no part:
+    they match nothing and do not fail the layer, and a Point feature
+    beside them matches as before."""
+    import json
+
+    from osm_merge_spark.sources.geojson import read_feature_collection
+
+    lon0, lat0 = -108.5, 43.5
+    geoms = [
+        {"type": "Point", "coordinates": [lon0, lat0]},
+        {"type": "MultiPoint", "coordinates": [[lon0, lat0 + 1e-5]]},
+        {"type": "GeometryCollection", "geometries": []},
+        {"type": "Curve", "coordinates": []},
+    ]
+    path = tmp_path / "layer.geojson"
+    path.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "geometry": g, "properties": {"name": "Bear Lake Trailhead"}}
+        for g in geoms
+    ]}))
+    layer = read_feature_collection(spark, str(path))
+    assert sorted(len(r.xs) for r in layer.collect()) == [0, 0, 0, 1]
+    layer = layer.select(
+        F.monotonically_increasing_id().alias("feature_id"), F.lit(1).alias("version"),
+        "geom_type", "xs", "ys", "tags", F.col("tags")["name"].alias("caption"),
+    )
+    images = spark.createDataFrame(
+        [("near-point", "Bear Lake Trailhead", lon0, lat0 + 2.0 / 110_574.0),
+         ("far", "Bear Lake Trailhead", lon0, lat0 + 0.01)],
+        "image_id string, caption string, lon double, lat double",
+    )
+    point_fid = layer.filter(F.size("xs") == 1).first().feature_id
+    out = conflation_pipeline(_ctx(spark, tmp_path, "empty"), images, layer, tile_m=5000.0)
+    assert [(r.image_id, r.feature_id) for r in out["matched"].collect()] == [
+        ("near-point", point_fid)]
+    assert [r.image_id for r in out["new"].collect()] == ["far"]
+
+
 def test_pipeline_with_aoi_clip(spark, tmp_path):
     """aoi_ring clips the image stream before conflation (boundary-clip
     stage, geosupport.py:139-173 semantics)."""

@@ -138,31 +138,12 @@ def cmd_buildings(args) -> int:
     from pyspark.sql import functions as F
 
     from .functions.cells import CellGrid
-    from .functions.kernels import polygon_intersection_area
-    from .operators import cell_join
+    from .operators.cell_join import overlap_pairs
 
     spark = _spark(args)
     a = spark.read.parquet(args.layer_a)
     b = spark.read.parquet(args.layer_b)
-    grid = CellGrid(res_deg=args.cell_deg)
-    pa = a.select(
-        F.col(args.id_col).alias("id_a"),
-        F.col("xs").alias("xs1"), F.col("ys").alias("ys1"),
-    )
-    pb = b.select(
-        F.col(args.id_col).alias("id_b"),
-        F.col("xs").alias("xs2"), F.col("ys").alias("ys2"),
-    )
-    pairs = (
-        cell_join.cell_pairs(
-            pa, pb, cell_join.covering_cells(F.col("xs1"), F.col("ys1"), grid),
-            cell_join.covering_cells(F.col("xs2"), F.col("ys2"), grid),
-        )
-        .withColumn("area", polygon_intersection_area(
-            F.col("xs1"), F.col("ys1"), F.col("xs2"), F.col("ys2")))
-        .filter(F.col("area") > F.lit(0.0))
-        .select("id_a", "id_b", "area")
-    )
+    pairs = overlap_pairs(a, b, args.id_col, CellGrid(res_deg=args.cell_deg))
     pairs.write.mode("overwrite").parquet(f"{args.out}/pairs")
     dups = spark.read.parquet(f"{args.out}/pairs").filter(
         F.col("area") > F.lit(args.min_dup_area)).select("id_b").distinct()

@@ -11,8 +11,8 @@ view to the in-memory array, and re-encodes with the same codec — one
 All views are exact pixel-index permutations/selections (no resampling, no
 float math), so round-trip identities hold bit-for-bit and are pinned by
 tests: hflip∘hflip = id, rot90⁴ = id, crop keeps the exact center block.
-Non-PNG/QNT formats yield no rows for that image (same honest env-limit
-policy as multimodal.decode_stats).
+Non-PNG/QNT formats yield no rows for that image (the payload reaches
+the reduction as None, see multimodal.map_decoded).
 """
 
 from __future__ import annotations
@@ -59,33 +59,25 @@ DEFAULT_VIEWS = ("identity", "hflip", "vflip", "rot90", "crop")
 def augment_images(images: DataFrame,
                    views: tuple[str, ...] = DEFAULT_VIEWS) -> DataFrame:
     """(image_id, bytes, fmt) → one row per (image, view): decode once,
-    emit every view re-encoded. Pure projection — no shuffle at any scale."""
-    import pandas as pd
+    emit every view re-encoded. Pure projection — no shuffle at any scale.
+    An undecodable image yields no row."""
+    from .multimodal import map_decoded
 
     views = tuple(views)
 
-    def run(batches):
+    def reduce(batch, pixels):
+        import pandas as pd
+
         from ..data import images as codec
 
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("image_id", "aug", "bytes", "w", "h", "fmt")}
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    px = codec.decode(bytes(buf), fmt)
-                except NotImplementedError:
-                    continue
-                for aug in views:
-                    view = np.ascontiguousarray(apply_view(px, aug))
-                    h, w, _ = view.shape
-                    out["image_id"].append(iid)
-                    out["aug"].append(aug)
-                    out["bytes"].append(codec.encode(view, fmt))
-                    out["w"].append(w)
-                    out["h"].append(h)
-                    out["fmt"].append(fmt)
-            yield pd.DataFrame(out)
+        rows = []
+        for iid, fmt, px in zip(batch["image_id"], batch["fmt"], pixels):
+            if px is None:
+                continue
+            for aug in views:
+                v = np.ascontiguousarray(apply_view(px, aug))
+                rows.append((iid, aug, codec.encode(v, fmt), v.shape[1],
+                             v.shape[0], fmt))
+        return pd.DataFrame(rows, columns=AUG_SCHEMA.names)
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=AUG_SCHEMA
-    )
+    return map_decoded(images, reduce, AUG_SCHEMA)

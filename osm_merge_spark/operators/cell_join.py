@@ -104,6 +104,28 @@ def cell_pairs(a: DataFrame, b: DataFrame, a_cells: Column, b_cells: Column) -> 
     )
 
 
+def overlap_pairs(a: DataFrame, b: DataFrame, id_col: str, grid: CellGrid) -> DataFrame:
+    """(id_a, id_b, area): the polygons of `a` and `b` (rings xs, ys, keyed
+    by id_col) whose exact intersection area is positive. The area Arrow
+    UDF runs once per candidate pair: without the eval_once barrier the
+    pushed-down `area > 0` filter would run it a second time."""
+    from ..functions.barrier import eval_once
+    from ..functions.kernels import polygon_intersection_area
+
+    pa = a.select(F.col(id_col).alias("id_a"), F.col("xs").alias("xs1"),
+                  F.col("ys").alias("ys1"))
+    pb = b.select(F.col(id_col).alias("id_b"), F.col("xs").alias("xs2"),
+                  F.col("ys").alias("ys2"))
+    pairs = cell_pairs(
+        pa, pb, covering_cells(F.col("xs1"), F.col("ys1"), grid),
+        covering_cells(F.col("xs2"), F.col("ys2"), grid),
+    ).withColumn("area", polygon_intersection_area(
+        F.col("xs1"), F.col("ys1"), F.col("xs2"), F.col("ys2")))
+    return eval_once(pairs, ["area"], keep=["id_a", "id_b"]).filter(
+        F.col("area") > F.lit(0.0)
+    )
+
+
 # perfbench-only: perfbench/workloads.py's `--trace 1` chain calls these
 # two forms. Both take the orientation conflate() uses (single probe cell,
 # ring-1 dilated layer); the salting keywords it passes are ignored.

@@ -7,22 +7,27 @@ Design rules for 10^12-image scale:
     operators here run on slim (image_id, bytes, w, h, fmt) projections
     and results re-attach by image_id equi-join (operators re-shuffle ids,
     not pixels);
-  - all decode work is batch-vectorized NumPy inside mapInPandas (one
-    Python entry per Arrow batch);
+  - every pixel operator is a reduction on `map_decoded`, the one
+    mapInPandas that decodes each payload once per Arrow batch and hands
+    the whole batch to NumPy;
   - codecs are the engine's own deterministic PNG/QNT (data/images.py);
-    formats needing external libs (JPEG, video frame-sampling) raise
-    NotImplementedError at the decode step — the Spark plumbing (schema,
-    batching, partitioning) is identical and tested.
+    formats needing external libs (JPEG) raise NotImplementedError in the
+    codec, and map_decoded hands such a payload to the reduction as None;
+    video frame-sampling is a stub that raises.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType, DoubleType, IntegerType, LongType, StringType, StructField,
+    BinaryType, BooleanType, DoubleType, IntegerType, StringType, StructField,
     StructType,
 )
+
+from ..data import images as codec
 
 DECODE_STATS_SCHEMA = StructType([
     StructField("image_id", StringType()),
@@ -39,8 +44,6 @@ VERIFY_SCHEMA = StructType([
     StructField("ok", BooleanType()),
 ])
 
-from pyspark.sql.types import BinaryType  # noqa: E402
-
 RESIZE_SCHEMA = StructType([
     StructField("image_id", StringType()),
     StructField("bytes", BinaryType()),
@@ -50,44 +53,79 @@ RESIZE_SCHEMA = StructType([
 ])
 
 
-def decode_stats(images: DataFrame) -> DataFrame:
-    """Per-image decode + channel means. Input: (image_id, bytes, fmt)."""
-    import numpy as np
-    import pandas as pd
+def map_decoded(images: DataFrame, reduce, schema, carry=()) -> DataFrame:
+    """The one executor-side image decode: a mapInPandas over
+    (image_id, *carry, bytes, fmt) that decodes each payload of an Arrow
+    batch once and hands the whole batch to `reduce(batch, pixels)`.
+
+    `batch` is the pandas frame of (image_id, *carry, fmt); `pixels` holds
+    one (h, w, 3) uint8 array per row, or None where the codec has no
+    decoder for the row's fmt (NotImplementedError). Any other decode
+    error fails the task. `reduce` returns a pandas frame of `schema`; its
+    docstring says what a None yields."""
 
     def run(batches):
-        from ..data import images as codec
-
-        for pdf in batches:
-            out = {"image_id": [], "mean_r": [], "mean_g": [], "mean_b": [],
-                   "decode_ok": []}
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                out["image_id"].append(iid)
+        for batch in batches:
+            pixels = []
+            for buf, fmt in zip(batch.pop("bytes"), batch["fmt"]):
                 try:
-                    px = codec.decode(bytes(buf), fmt)
-                    m = px.reshape(-1, 3).mean(axis=0)
-                    out["mean_r"].append(float(m[0]))
-                    out["mean_g"].append(float(m[1]))
-                    out["mean_b"].append(float(m[2]))
-                    out["decode_ok"].append(True)
+                    pixels.append(codec.decode(bytes(buf), fmt))
                 except NotImplementedError:
-                    out["mean_r"].append(float("nan"))
-                    out["mean_g"].append(float("nan"))
-                    out["mean_b"].append(float("nan"))
-                    out["decode_ok"].append(False)
-            yield pd.DataFrame(out)
+                    pixels.append(None)
+            yield reduce(batch, pixels)
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=DECODE_STATS_SCHEMA
+    return images.select("image_id", *carry, "bytes", "fmt").mapInPandas(
+        run, schema=schema
     )
+
+
+def per_image(fn, names):
+    """A map_decoded reduction from fn(px) → the integer values of `names`
+    for one image, emitted after the batch's carried columns. An
+    undecodable image (None) yields no row."""
+
+    def reduce(batch, pixels):
+        keep = [p is not None for p in pixels]
+        vals = pd.DataFrame([fn(p) for p in pixels if p is not None],
+                            columns=names, dtype="int64")
+        carried = batch.loc[keep].drop(columns="fmt").reset_index(drop=True)
+        return pd.concat([carried, vals], axis=1)
+
+    return reduce
+
+
+def _sums(px):
+    """Integer per-channel pixel sums of one image."""
+    return px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+
+
+# (sr, sg, sb) per decodable image, after the carried columns
+channel_sums = per_image(_sums, ["sr", "sg", "sb"])
+
+
+def _channel_means(batch, pixels):
+    """Per-channel means; an undecodable image yields NaN means (null in
+    Spark: Arrow reads a pandas NaN as null) and decode_ok false."""
+    nan = np.full(3, np.nan)
+    m = np.array([nan if p is None else p.reshape(-1, 3).mean(axis=0)
+                  for p in pixels]).reshape(-1, 3)
+    return pd.DataFrame({
+        "image_id": batch["image_id"], "mean_r": m[:, 0], "mean_g": m[:, 1],
+        "mean_b": m[:, 2], "decode_ok": [p is not None for p in pixels],
+    })
+
+
+def decode_stats(images: DataFrame) -> DataFrame:
+    """Per-image decode + channel means. Input: (image_id, bytes, fmt)."""
+    return map_decoded(images, _channel_means, DECODE_STATS_SCHEMA)
 
 
 def verify_payload(images: DataFrame, psnr_min: float = 40.0) -> DataFrame:
     """X15: the per-row invariant — decoded pixels vs the deterministic
     reference pixels (PSNR ≥ psnr_min; ∞ for lossless) + caption equality
     under re-synthesis. Input: synth table with (image_id, i, w, h, fmt,
-    bytes, caption)."""
-    import pandas as pd
+    bytes, caption). An undecodable image is not ok, with a NaN psnr_db
+    (null in Spark)."""
 
     def expected_caption(i: int) -> str:
         """Python mirror of synth._caption (md5-pick word chain) — an
@@ -102,60 +140,35 @@ def verify_payload(images: DataFrame, psnr_min: float = 40.0) -> DataFrame:
 
         return f"{pick(_W1, 'w1')} {pick(_W2, 'w2')} {pick(_SUF, 'w3')}"
 
-    def run(batches):
-        from ..data import images as codec
+    def reduce(batch, pixels):
+        rows = []
+        for iid, i, w, h, cap, got in zip(batch["image_id"], batch["i"],
+                                          batch["w"], batch["h"],
+                                          batch["caption"], pixels):
+            psnr = float("nan") if got is None else codec.psnr_db(
+                codec.pixels_for_seed(int(i), int(w), int(h)), got)
+            cap_ok = bool(cap == expected_caption(int(i)))
+            rows.append((iid, psnr, cap_ok, cap_ok and psnr >= psnr_min))
+        return pd.DataFrame(rows, columns=VERIFY_SCHEMA.names)
 
-        for pdf in batches:
-            out = {"image_id": [], "psnr_db": [], "caption_ok": [], "ok": []}
-            # zip over columns, not iterrows: iterrows materializes a
-            # Series per row (~5-10× per-row overhead vs tuple unpacking)
-            for iid, i, w, h, fmt, buf, cap in zip(
-                pdf["image_id"], pdf["i"], pdf["w"], pdf["h"],
-                pdf["fmt"], pdf["bytes"], pdf["caption"],
-            ):
-                ref = codec.pixels_for_seed(int(i), int(w), int(h))
-                got = codec.decode(bytes(buf), fmt)
-                psnr = codec.psnr_db(ref, got)
-                cap_ok = bool(cap == expected_caption(int(i)))
-                out["image_id"].append(iid)
-                out["psnr_db"].append(psnr)
-                out["caption_ok"].append(cap_ok)
-                out["ok"].append(cap_ok and psnr >= psnr_min)
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "i", "w", "h", "fmt", "bytes", "caption") \
-        .mapInPandas(run, schema=VERIFY_SCHEMA)
+    return map_decoded(images, reduce, VERIFY_SCHEMA,
+                       carry=("i", "w", "h", "caption"))
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize, re-encoded with the same fmt — pure NumPy
-    index arithmetic (no image library needed). Video frame-sampling and
-    JPEG re-encode raise NotImplementedError from the codec layer."""
-    import numpy as np
-    import pandas as pd
+    index arithmetic (no image library needed). An undecodable image
+    yields no row."""
+    from .phash import resize_nn
 
-    def run(batches):
-        from ..data import images as codec
+    def reduce(batch, pixels):
+        rows = [(iid, codec.encode(resize_nn(px, out_h, out_w), fmt), out_w,
+                 out_h, fmt)
+                for iid, fmt, px in zip(batch["image_id"], batch["fmt"], pixels)
+                if px is not None]
+        return pd.DataFrame(rows, columns=RESIZE_SCHEMA.names)
 
-        for pdf in batches:
-            out = {"image_id": [], "bytes": [], "w": [], "h": [], "fmt": []}
-            # zip, not iterrows — same per-row-overhead fix as decode_stats
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = codec.decode(bytes(buf), fmt)
-                h, w, _ = px.shape
-                yi = (np.arange(out_h) * h // out_h).astype(np.int64)
-                xi = (np.arange(out_w) * w // out_w).astype(np.int64)
-                small = px[yi][:, xi]
-                out["image_id"].append(iid)
-                out["bytes"].append(codec.encode(small, fmt))
-                out["w"].append(out_w)
-                out["h"].append(out_h)
-                out["fmt"].append(fmt)
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=RESIZE_SCHEMA
-    )
+    return map_decoded(images, reduce, RESIZE_SCHEMA)
 
 
 def frame_sample(videos: DataFrame, every_n: int = 30) -> DataFrame:
@@ -227,11 +240,8 @@ def audio_features(audio: DataFrame, window: int = 1024) -> DataFrame:
     100 TB shape: bytes → 5 longs inside one mapInPandas projection;
     payloads never shuffle, features join by id downstream like
     decode_stats' image moments."""
-    import pandas as pd
 
     def run(batches):
-        import numpy as np
-
         for pdf in batches:
             out = {"audio_id": [], "n_samples": [], "energy": [],
                    "peak": [], "n_clipped": [], "n_windows": []}

@@ -52,14 +52,13 @@ def luma(px: np.ndarray) -> np.ndarray:
     return 0.299 * p[..., 0] + 0.587 * p[..., 1] + 0.114 * p[..., 2]
 
 
-def resize_nn(gray: np.ndarray, n: int = _N) -> np.ndarray:
-    """Nearest-neighbor resample to (n, n) — same index arithmetic as
-    multimodal.resize_images, so hash(resize(img)) uses the engine's own
-    resampler."""
-    h, w = gray.shape
+def resize_nn(a: np.ndarray, n: int = _N, m: int | None = None) -> np.ndarray:
+    """Nearest-neighbor resample of an (h, w, ...) array to (n, m or n) —
+    the engine's one resampler (multimodal.resize_images uses it too)."""
+    h, w = a.shape[:2]
     yi = (np.arange(n) * h // n).astype(np.int64)
-    xi = (np.arange(n) * w // n).astype(np.int64)
-    return gray[yi][:, xi]
+    xi = (np.arange(m or n) * w // (m or n)).astype(np.int64)
+    return a[yi][:, xi]
 
 
 def phash_batch(grays: np.ndarray) -> np.ndarray:
@@ -80,6 +79,19 @@ def phash_single(px: np.ndarray) -> int:
     return int(phash_batch(resize_nn(luma(px))[None, :, :])[0])
 
 
+def _phash_reduce(batch, pixels):
+    """pHash of each image; an undecodable image yields a NULL hash."""
+    import pandas as pd
+
+    grays = [resize_nn(luma(p)) for p in pixels if p is not None]
+    hashes = iter(phash_batch(np.stack(grays)) if grays else ())
+    return pd.DataFrame({
+        "image_id": batch["image_id"],
+        "phash_px": pd.array([None if p is None else next(hashes)
+                              for p in pixels], dtype="Int64"),
+    })
+
+
 def compute_phash(images: DataFrame) -> DataFrame:
     """(image_id, bytes, fmt) → (image_id, phash_px:int64).
 
@@ -88,30 +100,6 @@ def compute_phash(images: DataFrame) -> DataFrame:
     Undecodable formats (no codec in env) yield NULL rather than failing
     the batch — the dedup join drops NULLs naturally.
     """
-    import pandas as pd
+    from .multimodal import map_decoded
 
-    def run(batches):
-        from ..data import images as codec
-
-        for pdf in batches:
-            ids, grays, null_ids = [], [], []
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    px = codec.decode(bytes(buf), fmt)
-                except NotImplementedError:
-                    null_ids.append(iid)
-                    continue
-                ids.append(iid)
-                grays.append(resize_nn(luma(px)))
-            out_ids = list(ids) + list(null_ids)
-            hashes: list = (
-                list(phash_batch(np.stack(grays))) if grays else []
-            ) + [None] * len(null_ids)
-            yield pd.DataFrame({
-                "image_id": out_ids,
-                "phash_px": pd.array(hashes, dtype="Int64"),
-            })
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=PHASH_SCHEMA
-    )
+    return map_decoded(images, _phash_reduce, PHASH_SCHEMA)

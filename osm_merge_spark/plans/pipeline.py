@@ -34,6 +34,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -66,13 +67,14 @@ class PipelineContext:
         with open(self.manifest_path) as f:
             return [json.loads(line) for line in f if line.strip()]
 
-    def committed(self, stage: str) -> bool:
+    def committed(self, stage: str) -> dict | None:
+        """The stage's committed manifest row while its output exists."""
         from ..sources.tables import table_exists
 
-        return any(
-            m["stage"] == stage and m["status"] == "committed"
-            for m in self.manifest()
-        ) and table_exists(self.spark, self.stage_path(stage))
+        rows = [m for m in self.manifest()
+                if m["stage"] == stage and m["status"] == "committed"]
+        exists = rows and table_exists(self.spark, self.stage_path(stage))
+        return rows[-1] if exists else None
 
     def _append_manifest(self, row: dict) -> None:
         with open(self.manifest_path, "a") as f:
@@ -119,9 +121,10 @@ def run_stage(
     from ..sources.tables import commit_table, committed_partition_rows, read_table
 
     out = ctx.stage_path(stage)
-    if ctx.committed(stage):
+    done = ctx.committed(stage)
+    if done is not None:
         ctx.skipped.append(stage)
-        return read_table(ctx.spark, out)
+        return read_table(ctx.spark, out, done.get("schema"))
 
     t0 = time.time()
     df = build(ctx.spark)
@@ -131,6 +134,15 @@ def run_stage(
 
         observation = Observation(f"stage:{stage}")
         df = df.observe(observation, *[c.alias(k) for k, c in observe_metrics.items()])
+
+    # the schema the stage reads back with: a partitioned write of zero
+    # rows commits no data file to infer it from; parquet lists
+    # partition columns last
+    parts = partition_by or []
+    schema = StructType(
+        [f for f in df.schema.fields if f.name not in parts]
+        + [df.schema[p] for p in parts]
+    ).jsonValue()
 
     # atomic commit THROUGH THE TABLE SEAM (an Iceberg snapshot commit
     # when a catalog is configured; tmp+rename on the parquet fallback —
@@ -165,6 +177,7 @@ def run_stage(
         "t_start": t0,
         "t_end": time.time(),
         "wall_s": round(time.time() - t0, 3),
+        "schema": schema,
     }
     if observation is not None:
         manifest_row["metrics"] = {
@@ -172,7 +185,7 @@ def run_stage(
         }
     ctx._append_manifest(manifest_row)
     ctx.executed.append(stage)
-    return read_table(ctx.spark, out)
+    return read_table(ctx.spark, out, schema)
 
 
 def conflation_pipeline(
@@ -180,7 +193,6 @@ def conflation_pipeline(
     images: DataFrame,
     layer: DataFrame,
     tile_m: float = 50_000.0,
-    aoi_ring: list[tuple[float, float]] | None = None,
 ) -> dict[str, DataFrame]:
     """The flagship end-to-end pipeline as checkpoint-resumable stages:
     ingest-normalize → conflate (matched / new) → tile-assign → outputs.
@@ -193,18 +205,6 @@ def conflation_pipeline(
     from ..functions.cells import TileGrid
     from ..operators.conflate import ConflateParams, conflate
     from ..operators.tiles import assign_tiles
-
-    if aoi_ring is not None:
-        # boundary clip first (geosupport.py:139-173 clips DB views before
-        # any conflation) — native ray-cast, eval_once barrier since the
-        # parity sum reads the coordinates many times
-        from ..functions.barrier import eval_once
-        from ..functions.geo import point_in_fixed_ring
-
-        clipped = eval_once(images, ["lon", "lat"]).filter(
-            point_in_fixed_ring(F.col("lon"), F.col("lat"), aoi_ring)
-        )
-        images = clipped
 
     img_n = run_stage(ctx, "images_normalized", lambda s: images)
     layer_n = run_stage(ctx, "layer_normalized", lambda s: layer)

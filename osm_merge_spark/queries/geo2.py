@@ -14,9 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import geo
-from ..functions.barrier import eval_once
 from ..functions.cells import CellGrid
-from ..functions.kernels import polygon_intersection_area
 from ..operators import cell_join, knn
 from . import base
 from .geo import _pairs_df, _sql_pairs
@@ -190,25 +188,9 @@ def _building_sql(shifted: bool, alias: str) -> str:
 
 
 def _building_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = _building_layer(spark, sf_dir, shifted=False)
-    b = _building_layer(spark, sf_dir, shifted=True)
-    pa = a.select(
-        F.col("bld_id").alias("id_a"), F.col("xs").alias("xs1"), F.col("ys").alias("ys1")
-    )
-    pb = b.select(
-        F.col("bld_id").alias("id_b"), F.col("xs").alias("xs2"), F.col("ys").alias("ys2")
-    )
-    pairs = cell_join.cell_pairs(
-        pa, pb, cell_join.covering_cells(F.col("xs1"), F.col("ys1"), BLD_GRID),
-        cell_join.covering_cells(F.col("xs2"), F.col("ys2"), BLD_GRID),
-    )
-    area = polygon_intersection_area(
-        F.col("xs1"), F.col("ys1"), F.col("xs2"), F.col("ys2")
-    )
-    # eval_once: pushed below the projection, the area filter would run
-    # the area UDF a second time over every pair
-    return eval_once(pairs.withColumn("area", area), ["area"]).filter(
-        F.col("area") > F.lit(0.0)
+    return cell_join.overlap_pairs(
+        _building_layer(spark, sf_dir, shifted=False),
+        _building_layer(spark, sf_dir, shifted=True), "bld_id", BLD_GRID,
     )
 
 

@@ -21,12 +21,14 @@ preparing fieldwork payloads (osm_merge/utilities tile prep).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import hashes
 from ..functions.cells import TileGrid
 from ..functions.geo import dlit
+from ..operators.multimodal import channel_sums, map_decoded, per_image
 
 QUERIES: dict = {}
 
@@ -96,30 +98,10 @@ def _splitmix_word_sql(x: str) -> tuple[str, str]:
 
 def _decode_channel_sums(images: DataFrame) -> DataFrame:
     """(image_id, bytes, fmt) → (image_id, sr, sg, sb): integer per-channel
-    pixel sums from the REAL decoded bytes. Arrow-batched; pixels reduce to
-    three longs executor-side, so bytes never shuffle."""
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        from ..data import images as codec
-
-        for pdf in batches:
-            out = {"image_id": [], "sr": [], "sg": [], "sb": []}
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                     pdf["fmt"]):
-                px = codec.decode(bytes(buf), fmt).astype(np.int64)
-                s = px.reshape(-1, 3).sum(axis=0)
-                out["image_id"].append(iid)
-                out["sr"].append(int(s[0]))
-                out["sg"].append(int(s[1]))
-                out["sb"].append(int(s[2]))
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, sr long, sg long, sb long"
-    )
+    pixel sums from the REAL decoded bytes; pixels reduce to three longs
+    executor-side, so bytes never shuffle. Undecodable images: no row."""
+    return map_decoded(images, channel_sums,
+                       "image_id string, sr long, sg long, sb long")
 
 
 def _decoded_bytes_cte() -> str:
@@ -241,32 +223,21 @@ QUERIES["tile_image_stats"] = (q_tile_image_stats, _sql_tile_image_stats())
 SHARP_MIN = 61_100  # ≈ E|ΔU8|·720 pairs; straddles the synth distribution
 
 
-def q_image_sharpness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+def _grad_energy(px):
+    return (np.abs(np.diff(px.astype(np.int64), axis=1)).sum(),)
 
+
+def _decode_grad_energy(images: DataFrame) -> DataFrame:
+    """(image_id, grad_e) per image; undecodable images: no row."""
+    return map_decoded(images, per_image(_grad_energy, ["grad_e"]),
+                       "image_id string, grad_e long")
+
+
+def q_image_sharpness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import synth
 
     img = synth.synth_images(spark, TIS_N, with_bytes=True)
-
-    def run(batches):
-        import numpy as np
-
-        from ..data import images as codec
-
-        for pdf in batches:
-            out = {"image_id": [], "grad_e": []}
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                     pdf["fmt"]):
-                px = codec.decode(bytes(buf), fmt).astype(np.int64)
-                g = int(np.abs(np.diff(px, axis=1)).sum())
-                out["image_id"].append(iid)
-                out["grad_e"].append(g)
-            yield pd.DataFrame(out)
-
-    scored = img.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, grad_e long"
-    )
-    return scored.select(
+    return _decode_grad_energy(img).select(
         "image_id", "grad_e",
         (F.col("grad_e") >= F.lit(SHARP_MIN)).alias("keep"),
     )
@@ -310,36 +281,27 @@ _AUG_W, _AUG_H = TIS_W, TIS_H
 _CROP = _AUG_W // 4  # crop offset for CROP_FRAC=2 on 16×16 → y0=x0=4
 
 
-def q_augment_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+def _checksum(px):
+    v = px.astype(np.int64).ravel()
+    return v.size, ((np.arange(v.size) + 1) * v).sum()
 
+
+def _decode_checksums(aug: DataFrame) -> DataFrame:
+    """(image_id, aug, n_bytes, checksum) per augmented image;
+    undecodable images: no row."""
+    return map_decoded(
+        aug, per_image(_checksum, ["n_bytes", "checksum"]),
+        "image_id string, aug string, n_bytes long, checksum long",
+        carry=("aug",),
+    )
+
+
+def q_augment_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import synth
     from ..operators.augment import augment_images
 
     img = synth.synth_images(spark, TIS_N, with_bytes=True)
-    aug = augment_images(img)
-
-    def run(batches):
-        import numpy as np
-
-        from ..data import images as codec
-
-        for pdf in batches:
-            out = {"image_id": [], "aug": [], "n_bytes": [], "checksum": []}
-            for iid, a, buf, fmt in zip(pdf["image_id"], pdf["aug"],
-                                        pdf["bytes"], pdf["fmt"]):
-                px = codec.decode(bytes(buf), fmt).astype(np.int64).ravel()
-                out["image_id"].append(iid)
-                out["aug"].append(a)
-                out["n_bytes"].append(len(px))
-                out["checksum"].append(
-                    int(((np.arange(len(px)) + 1) * px).sum())
-                )
-            yield pd.DataFrame(out)
-
-    return aug.mapInPandas(
-        run, schema="image_id string, aug string, n_bytes long, checksum long"
-    )
+    return _decode_checksums(augment_images(img))
 
 
 def _sql_augment_checksum() -> str:
@@ -1015,39 +977,31 @@ IP_P = 4  # patch edge: 16×16 fixture images → 4×4 grid of 4×4 patches
 
 def patchify_sums(images: DataFrame, patch: int = IP_P) -> DataFrame:
     """(image_id, bytes, fmt) → one row per P×P patch: integer channel
-    sums. Arrow-batched; the reshape is numpy view arithmetic, no copy."""
-    import pandas as pd
+    sums; the reshape is numpy view arithmetic, no copy. Undecodable
+    images: no row."""
 
-    def run(batches):
-        import numpy as np
+    def reduce(batch, pixels):
+        import pandas as pd
 
-        from ..data import images as codec
+        ids, rows = [], [np.zeros((0, 5), np.int64)]
+        for iid, im in zip(batch["image_id"], pixels):
+            if im is None:
+                continue
+            ny, nx = im.shape[0] // patch, im.shape[1] // patch
+            # (ny, P, nx, P, 3) → sum over the two P axes
+            sums = (im[: ny * patch, : nx * patch]
+                    .reshape(ny, patch, nx, patch, 3)
+                    .sum(axis=(1, 3), dtype=np.int64))
+            yx = np.indices((ny, nx)).reshape(2, -1).T
+            rows.append(np.hstack([yx, sums.reshape(-1, 3)]))
+            ids += [iid] * (ny * nx)
+        cols = np.vstack(rows).T
+        return pd.DataFrame({"image_id": ids, **dict(zip(
+            ["py", "px", "pr", "pg", "pb"], cols))})
 
-        for pdf in batches:
-            out = {"image_id": [], "py": [], "px": [],
-                   "pr": [], "pg": [], "pb": []}
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                     pdf["fmt"]):
-                im = codec.decode(bytes(buf), fmt).astype(np.int64)
-                h, w, _ = im.shape
-                ny, nx = h // patch, w // patch
-                # (ny, P, nx, P, 3) → sum over the two P axes
-                sums = (im[: ny * patch, : nx * patch]
-                        .reshape(ny, patch, nx, patch, 3)
-                        .sum(axis=(1, 3)))
-                for py in range(ny):
-                    for px in range(nx):
-                        out["image_id"].append(iid)
-                        out["py"].append(py)
-                        out["px"].append(px)
-                        out["pr"].append(int(sums[py, px, 0]))
-                        out["pg"].append(int(sums[py, px, 1]))
-                        out["pb"].append(int(sums[py, px, 2]))
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run,
-        schema="image_id string, py int, px int, pr long, pg long, pb long",
+    return map_decoded(
+        images, reduce,
+        "image_id string, py int, px int, pr long, pg long, pb long",
     )
 
 
@@ -1098,30 +1052,21 @@ QUERIES["image_patches"] = (q_image_patches, _sql_image_patches())
 # with map-side combine — same cost class as tile_image_stats.
 
 
+def _luma8(px):
+    """Integer Rec.601 luma (77 r + 150 g + 29 b) >> 8, shape (h, w)."""
+    p = px.astype(np.int64)
+    return (77 * p[..., 0] + 150 * p[..., 1] + 29 * p[..., 2]) >> 8
+
+
+def _luma_hist(px):
+    return np.bincount(_luma8(px).ravel() >> 6, minlength=4)
+
+
 def _decode_luma_hist(images: DataFrame) -> DataFrame:
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        from ..data import images as codec
-
-        for pdf in batches:
-            out = {"image_id": [], "h0": [], "h1": [], "h2": [], "h3": []}
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                     pdf["fmt"]):
-                px = codec.decode(bytes(buf), fmt).astype(np.int64)
-                flat = px.reshape(-1, 3)
-                luma = (77 * flat[:, 0] + 150 * flat[:, 1]
-                        + 29 * flat[:, 2]) >> 8
-                counts = np.bincount(luma >> 6, minlength=4)
-                out["image_id"].append(iid)
-                for b in range(4):
-                    out[f"h{b}"].append(int(counts[b]))
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema="image_id string, h0 long, h1 long, h2 long, h3 long"
+    """(image_id, h0..h3): luma quartile counts; undecodable: no row."""
+    return map_decoded(
+        images, per_image(_luma_hist, ["h0", "h1", "h2", "h3"]),
+        "image_id string, h0 long, h1 long, h2 long, h3 long",
     )
 
 
@@ -1198,41 +1143,23 @@ QUERIES["tile_luma_hist"] = (q_tile_luma_hist, _sql_tile_luma_hist())
 # the first oracle to replay a 2-D neighborhood op in pure SQL.
 
 
+def _hog(px):
+    luma = _luma8(px)
+    dx = luma[1:-1, 2:] - luma[1:-1, :-2]
+    dy = luma[2:, 1:-1] - luma[:-2, 1:-1]
+    flat_m = (dx == 0) & (dy == 0)
+    cls = ((dx > 0).astype(np.int64)
+           + 2 * (dy > 0).astype(np.int64)
+           + 4 * (np.abs(dx) >= np.abs(dy)).astype(np.int64))
+    return np.append(np.bincount(cls[~flat_m], minlength=8), flat_m.sum())
+
+
 def _decode_hog(images: DataFrame) -> DataFrame:
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        from ..data import images as codec
-
-        for pdf in batches:
-            out = {"image_id": []}
-            for b in range(8):
-                out[f"o{b}"] = []
-            out["n_flat"] = []
-            for iid, buf, fmt in zip(pdf["image_id"], pdf["bytes"],
-                                     pdf["fmt"]):
-                px = codec.decode(bytes(buf), fmt).astype(np.int64)
-                flat = px.reshape(-1, 3)
-                luma = ((77 * flat[:, 0] + 150 * flat[:, 1]
-                         + 29 * flat[:, 2]) >> 8).reshape(TIS_H, TIS_W)
-                dx = luma[1:-1, 2:] - luma[1:-1, :-2]
-                dy = luma[2:, 1:-1] - luma[:-2, 1:-1]
-                flat_m = (dx == 0) & (dy == 0)
-                cls = ((dx > 0).astype(np.int64)
-                       + 2 * (dy > 0).astype(np.int64)
-                       + 4 * (np.abs(dx) >= np.abs(dy)).astype(np.int64))
-                counts = np.bincount(cls[~flat_m], minlength=8)
-                out["image_id"].append(iid)
-                for b in range(8):
-                    out[f"o{b}"].append(int(counts[b]))
-                out["n_flat"].append(int(flat_m.sum()))
-            yield pd.DataFrame(out)
-
-    cols = ", ".join(f"o{b} long" for b in range(8))
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=f"image_id string, {cols}, n_flat long"
+    """(image_id, o0..o7, n_flat) per image; undecodable images: no row."""
+    names = [f"o{b}" for b in range(8)] + ["n_flat"]
+    return map_decoded(
+        images, per_image(_hog, names),
+        "image_id string, " + ", ".join(f"{n} long" for n in names),
     )
 
 

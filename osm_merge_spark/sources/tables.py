@@ -72,9 +72,18 @@ def write_bucketed(df: DataFrame, table_name: str, bucket_cols: list[str],
     writer.saveAsTable(table_name)
 
 
-def read_table(spark: SparkSession, target: str) -> DataFrame:
+def read_table(spark: SparkSession, target: str,
+               schema: dict | None = None) -> DataFrame:
+    """schema: the JSON form (StructType.jsonValue()) of what a commit
+    wrote. Parquet reads with it, so a table with no data file (a
+    partitioned write of zero rows) reads back empty with its columns
+    instead of failing schema inference; Iceberg keeps its own."""
     if iceberg_available(spark):
         return spark.read.format("iceberg").load(target)
+    if schema is not None:
+        from pyspark.sql.types import StructType
+
+        return spark.read.schema(StructType.fromJson(schema)).parquet(target)
     return spark.read.parquet(target)
 
 

@@ -312,8 +312,9 @@ def zonal_image_rollup(images_stream: DataFrame) -> DataFrame:
     decoded pixel channel sums, maintained incrementally at ingest (the
     live-dashboard shape: "coverage per operations zone so far today").
 
-    One stateless mapInPandas decodes each micro-batch's images to three
-    longs (bytes never enter state or shuffle), the zone membership is the
+    One stateless map_decoded pass reduces each micro-batch's images to
+    the batch query's three channel sums (bytes never enter state or
+    shuffle; an undecodable image adds nothing), the zone membership is the
     same joinless array_compact ray-cast fan-out as the batch query, and
     the per-zone aggregation is the streaming state — |zones| rows of four
     counters, the cheapest state Structured Streaming can hold (contrast
@@ -321,39 +322,15 @@ def zonal_image_rollup(images_stream: DataFrame) -> DataFrame:
     (run_available_now's default): every micro-batch emits the
     running totals.
     """
-    import pandas as pd
-
-    def run(batches):
-        import numpy as np
-
-        from ..data import images as codec
-
-        for pdf in batches:
-            out = {"image_id": [], "lon": [], "lat": [],
-                   "sr": [], "sg": [], "sb": []}
-            for iid, lon, lat, buf, fmt in zip(
-                    pdf["image_id"], pdf["lon"], pdf["lat"],
-                    pdf["bytes"], pdf["fmt"]):
-                px = codec.decode(bytes(buf), fmt).astype(np.int64)
-                s = px.reshape(-1, 3).sum(axis=0)
-                out["image_id"].append(iid)
-                out["lon"].append(float(lon))
-                out["lat"].append(float(lat))
-                out["sr"].append(int(s[0]))
-                out["sg"].append(int(s[1]))
-                out["sb"].append(int(s[2]))
-            yield pd.DataFrame(out)
-
-    dec = images_stream.select(
-        "image_id", "lon", "lat", "bytes", "fmt"
-    ).mapInPandas(
-        run,
-        schema="image_id string, lon double, lat double,"
-               " sr long, sg long, sb long",
-    )
-
     from ..functions import geo as geofn
+    from ..operators.multimodal import channel_sums, map_decoded
     from ..queries.geo5 import ZONES
+
+    dec = map_decoded(
+        images_stream, channel_sums,
+        "image_id string, lon double, lat double, sr long, sg long, sb long",
+        carry=("lon", "lat"),
+    )
 
     zhits = F.array_compact(F.array(*[
         F.when(

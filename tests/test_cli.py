@@ -67,11 +67,10 @@ def test_cli_poi_and_poidup(spark, tmp_path, capsys):
     assert r2["dups"] >= n_points  # every point dups its clone
 
 
-def test_cli_buildings(spark, tmp_path, capsys):
-    """Building dedupe (conflateBuildings.py): two square layers, the
-    second shifted by half a side — every pair overlaps, none identical."""
+def _square_layers(spark, base):
+    """Two square layers at base/a and base/b, the second shifted by half
+    a side — every pair overlaps, none identical."""
     from pyspark.sql import functions as F
-    base = str(tmp_path)
     h = 0.0004
     sq = spark.range(40).select(
         F.col("id").alias("feature_id"),
@@ -88,6 +87,12 @@ def test_cli_buildings(spark, tmp_path, capsys):
         "overwrite").parquet(f"{base}/a")
     sq.select("feature_id", xs_b.alias("xs"), ys_b.alias("ys")).write.mode(
         "overwrite").parquet(f"{base}/b")
+
+
+def test_cli_buildings(spark, tmp_path, capsys):
+    """Building dedupe (conflateBuildings.py) over _square_layers."""
+    base = str(tmp_path)
+    _square_layers(spark, base)
     r = _run(capsys, "buildings", "--layer-a", f"{base}/a",
              "--layer-b", f"{base}/b", "--out", f"{base}/bld")
     assert r["pairs"] == 40       # each shifted square overlaps its source
@@ -96,6 +101,28 @@ def test_cli_buildings(spark, tmp_path, capsys):
               "--layer-b", f"{base}/b", "--out", f"{base}/bld2",
               "--min-dup-area", "1.0")  # impossible overlap → all new
     assert r2["new"] == 40
+
+
+def test_cli_buildings_runs_the_area_udf_once_per_pair(spark, tmp_path, capsys,
+                                                      monkeypatch):
+    """The pairs write plans one ArrowEvalPython: the `area > 0` filter
+    pushed below the projection must not evaluate the area UDF again."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    base = str(tmp_path)
+    _square_layers(spark, base)
+    plans = {}
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans[path] = self._df._jdf.queryExecution().executedPlan().toString()
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    _run(capsys, "buildings", "--layer-a", f"{base}/a",
+         "--layer-b", f"{base}/b", "--out", f"{base}/bld")
+    plan = plans[f"{base}/bld/pairs"]
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_cli_grid_and_poly(tmp_path, capsys):

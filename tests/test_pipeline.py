@@ -240,15 +240,22 @@ def test_conflation_pipeline_skips_empty_geometry_rows(spark, tmp_path):
     assert [r.image_id for r in out["new"].collect()] == ["far"]
 
 
-def test_pipeline_with_aoi_clip(spark, tmp_path):
-    """aoi_ring clips the image stream before conflation (boundary-clip
-    stage, geosupport.py:139-173 semantics)."""
-    from osm_merge_spark.data import synth
-
-    ctx = _ctx(spark, tmp_path, "p4")
-    images = synth_images(spark, 300)
-    layer = synth_layer(spark, 300)
-    ring = list(zip(synth.AOI_RING_X[:-1], synth.AOI_RING_Y[:-1]))
-    out = conflation_pipeline(ctx, images, layer, tile_m=5000.0, aoi_ring=ring)
-    n_in = out["matched"].count() + out["new"].count()
-    assert 0 < n_in < 300  # NE-corner cut drops a slice of the images
+def test_conflation_pipeline_with_no_match_commits_and_resumes(spark, tmp_path):
+    """Images 5° north of the layer match nothing: tile_assignment's
+    partitioned write of zero rows commits no data file, yet the stage
+    reads back empty with matched's columns plus tile_id, and a rerun
+    skips all five stages."""
+    images = synth_images(spark, 50).withColumn("lat", F.col("lat") + 5.0)
+    layer = synth_layer(spark, 50)
+    ctx = _ctx(spark, tmp_path, "nomatch")
+    out = conflation_pipeline(ctx, images, layer, tile_m=5000.0)
+    stages = ["images_normalized", "layer_normalized", "matched",
+              "new_features", "tile_assignment"]
+    assert ctx.executed == stages
+    assert out["new"].count() == 50 and out["tiles"].count() == 0
+    assert out["tiles"].columns == out["matched"].columns + ["tile_id"]
+    ctx2 = PipelineContext(spark, ctx.base_dir)
+    out2 = conflation_pipeline(ctx2, images, layer, tile_m=5000.0)
+    assert ctx2.executed == [] and ctx2.skipped == stages
+    assert out2["tiles"].count() == 0
+    assert out2["tiles"].schema == out["tiles"].schema

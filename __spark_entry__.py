@@ -38,7 +38,18 @@ def _wrap(fn):
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full conflation (J1→J3→J7 ladder) over the image+caption
-    table derived from sf0.001, via the engine's conflate() operator.
+    table derived from sf0.001 (flagship_inputs), via the engine's
+    conflate() operator."""
+    from osm_merge_spark.operators.conflate import ConflateParams, conflate
+
+    matched, _new = conflate(*flagship_inputs(spark), ConflateParams())
+    return matched.select(
+        "image_id", "feature_id", "dist_m", "ratio", "hits", "version"
+    )
+
+
+def flagship_inputs(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
+    """(images, layer) of the flagship conflation.
 
     The layer is MIXED-geometry — the engine's hardest path: every part is
     a point feature, every 4th part additionally contributes a planted
@@ -51,7 +62,6 @@ def entry(spark: SparkSession) -> DataFrame:
     top-5 cap."""
     from pyspark.sql import functions as F
 
-    from osm_merge_spark.operators.conflate import ConflateParams, conflate
     from osm_merge_spark.queries import base
 
     _ship_package(spark)
@@ -98,11 +108,7 @@ def entry(spark: SparkSession) -> DataFrame:
         ).alias("tags"),
         F.col("s_caption").alias("caption"),
     )
-    lyr = pts.unionByName(lines)
-    matched, _new = conflate(img, lyr, ConflateParams())
-    return matched.select(
-        "image_id", "feature_id", "dist_m", "ratio", "hits", "version"
-    )
+    return img, pts.unionByName(lines)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

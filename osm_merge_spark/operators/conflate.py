@@ -14,12 +14,14 @@ Spark-first plan (one lazy DataFrame graph, no driver loops):
     cell, so no pair dedup; AQE picks broadcast or shuffle; lines join as
     one row per segment) → exact distance
     refine in codegen (haversine / point→segment, min over a feature's
-    segments and parts taken in the cap) →
-    then two outputs off the refined pairs:
+    segments and parts taken in the cap) = refined_pairs() →
+    one local checkpoint of the refined pairs, then two outputs off it:
       new:     images with no refined pair (one anti-join);
       matched: top-5 cap with the best-part min folded in (one hash
                aggregation per image) → fuzzy+ref gates → one winner per
                image.
+    The first output a caller runs computes the pairs; the second reads
+    them from executor storage instead of re-running the join and refine.
 
 Intentional, documented divergences from the reference implementation:
   - deterministic top-5 by distance instead of scan-order early exit
@@ -188,9 +190,11 @@ def new_features(p: DataFrame, matched_keys: DataFrame) -> DataFrame:
     """J7: primaries with no feature within the threshold become new
     features (informal=yes + fixme, version=1 — conflator.py:318-325).
     p must be prepare_images() output; matched_keys needs only image_id and
-    may repeat it. conflate() passes its in-threshold refined pairs (every
-    image with one gets a winner, so this equals anti-joining the winners
-    without computing them); the pipeline passes its matched checkpoint."""
+    may repeat it. conflate() passes the local checkpoint of its
+    refined_pairs() (every image with one gets a winner, so this equals
+    anti-joining the winners without computing them): its plan is a read
+    of the stored pairs and this anti-join, with no scan of the layer, cell
+    join or refine. The pipeline passes its matched checkpoint."""
     return (
         # shuffle_hash: both sides are corpus-scale (every unmatched image ×
         # every match) — SMJ would sort both for an equi-key with no
@@ -223,33 +227,19 @@ def suppress_identical(matched: DataFrame) -> DataFrame:
     return matched.filter(~subset_of_s)
 
 
-def conflate(images: DataFrame, layer: DataFrame,
-             params: ConflateParams = ConflateParams(), *,
-             # ignored: perfbench/workloads.py still passes it
-             explode_multipart: bool = True) -> tuple[DataFrame, DataFrame]:
-    """Run the full ladder. Returns (matched, new).
+def refined_pairs(images: DataFrame, layer: DataFrame,
+                  params: ConflateParams = ConflateParams()) -> DataFrame:
+    """The lazy plan of every in-threshold (image, layer part or segment)
+    pair: image_id, lon, lat, feature_id, dist_m, plus caption when the
+    images carry no tag map. A feature can appear once per part and per
+    segment; conflate()'s cap keeps its nearest.
 
-    images: (image_id, caption, lon, lat, [p_tags map], ...payload excluded
-            by caller — join on ids, re-attach bytes afterwards)
-    layer:  (feature_id, version, geom_type, xs, ys, tags, caption)
-
-    matched: image_id, feature_id, dist_m, ratio, hits, version (bumped),
-             tags (merged + debug counters like conflator.py:250-253)
-    new:     image_id, caption, lon, lat, version=1, tags with
-             informal=yes + fixme (conflator.py:318-325)
-
-    Multi-part layer rows (NaN- or null-separated xs/ys) are split into
-    parts first; each part is routed by its vertex count (1 → point
-    refine, more → segment refine) and the cap keeps each feature's
-    nearest part (min over sub-geometries, conflator.py:485-528).
+    images and layer are conflate()'s inputs. Multi-part layer rows
+    (NaN- or null-separated xs/ys) are split into parts first; each part is
+    routed by its vertex count (1 → point refine, more → segment refine).
     """
     grid = CellGrid.for_radius(params.threshold_m * 1.05,
                                max_abs_lat=70.0)
-    p = prepare_images(images)
-    s = (layer
-         .withColumnRenamed("tags", "s_tags")
-         .withColumnRenamed("caption", "s_caption")
-         .withColumn("s_ref", F.element_at("s_tags", "ref:usfs")))
 
     # SLIM join: only ids + coordinates flow through the cell join, the
     # refine, and the top-5 cap — captions/tag
@@ -268,15 +258,15 @@ def conflate(images: DataFrame, layer: DataFrame,
     # map (it replaces a whole p-side join).
     p_has_tags = "tags" in images.columns
     p_slim = (
-        p.select("image_id", "lon", "lat")
+        images.select("image_id", "lon", "lat")
         if p_has_tags
-        else p.select("image_id", "lon", "lat", "caption")
+        else images.select("image_id", "lon", "lat", "caption")
     )
     # a null feature_id would be a refined pair that no enrich join can
     # pick as a winner — dropping it here keeps "has a refined pair" and
     # "has a winner" the same image set, which `new` relies on
     s_slim = explode_parts(
-        s.select("feature_id", "xs", "ys").filter(F.col("feature_id").isNotNull())
+        layer.select("feature_id", "xs", "ys").filter(F.col("feature_id").isNotNull())
     )
     # Planar bbox prefilter bound — cheap compares per candidate BEFORE
     # the transcendental refine. A point within threshold_m of a geometry
@@ -327,8 +317,8 @@ def conflate(images: DataFrame, layer: DataFrame,
         # line's segments is the line's set). The per-pair bbox and
         # distance are then plain column math that codegen compiles; an
         # array_min(transform(...)) over the polyline per pair runs
-        # interpreted. The cap below keeps each feature's nearest segment,
-        # as it keeps its nearest part.
+        # interpreted. The cap in conflate() keeps each feature's nearest
+        # segment, as it keeps its nearest part.
         k = F.col("__k")
         seg = s_part.select(
             "feature_id", "xs", "ys",
@@ -373,11 +363,52 @@ def conflate(images: DataFrame, layer: DataFrame,
     # layers) take the scalar fast path; only line/ring parts pay the
     # segment explode + covering cells. On an all-point layer the lines
     # branch plans but carries no rows.
-    refined = points_refined(s_slim.filter(F.size("xs") == 1)).unionByName(
+    return points_refined(s_slim.filter(F.size("xs") == 1)).unionByName(
         lines_refined(s_slim.filter(F.size("xs") > 1))
     )
+
+
+def conflate(images: DataFrame, layer: DataFrame,
+             params: ConflateParams = ConflateParams(), *,
+             # ignored: perfbench/workloads.py still passes it
+             explode_multipart: bool = True) -> tuple[DataFrame, DataFrame]:
+    """Run the full ladder. Returns (matched, new).
+
+    images: (image_id, caption, lon, lat, [p_tags map], ...payload excluded
+            by caller — join on ids, re-attach bytes afterwards)
+    layer:  (feature_id, version, geom_type, xs, ys, tags, caption)
+
+    matched: image_id, feature_id, dist_m, ratio, hits, version (bumped),
+             tags (merged + debug counters like conflator.py:250-253)
+    new:     image_id, caption, lon, lat, version=1, tags with
+             informal=yes + fixme (conflator.py:318-325)
+
+    The cap keeps each feature's nearest part and segment (min over
+    sub-geometries, conflator.py:485-528).
+
+    Both outputs read one local checkpoint of refined_pairs(): whichever
+    the caller runs first computes the pairs and leaves them in executor
+    storage, and the other reads them back, so writing both runs the scan,
+    cell join and refine once. Trade-offs:
+      - under AQE the checkpoint runs the pairs plan's broadcast and
+        shuffle stages during this call, so the call itself takes time;
+      - the stored pairs have no lineage to recompute from: losing an
+        executor that holds them fails the job that reads them.
+    A local checkpoint adds no CacheManager entry (a later call over the
+    same paths cannot read stale pairs), and the ContextCleaner frees it
+    once both returned DataFrames are dropped (`persist()` would do
+    neither).
+    """
+    refined = refined_pairs(images, layer, params).localCheckpoint(eager=False)
+    p = prepare_images(images)
+    p_has_tags = "tags" in images.columns
+    s = (layer
+         .withColumnRenamed("tags", "s_tags")
+         .withColumnRenamed("caption", "s_caption")
+         .withColumn("s_ref", F.element_at("s_tags", "ref:usfs")))
+
     # J7: "new" means no feature within the threshold — an anti-join
-    # against the refined pairs, so its plan stops at the refine
+    # against the refined pairs
     new = new_features(p, refined)
 
     # top-5 cap in one hash aggregation per image (collect_list, no window

@@ -109,14 +109,15 @@ def knn_unbounded(primary: DataFrame, secondary: DataFrame, k: int,
 
     Lineage control (round-2 verdict fix): the naive loop rebuilt round i's
     plan ON TOP of rounds 1..i-1's joins — O(rounds²) rescans — and paid a
-    take(1) action per round. Now each round's pairs are persisted and
-    materialized ONCE (by the have_k count that the loop needs anyway), the
-    unsatisfied count is tracked arithmetically (n_rem -= satisfied; no
+    take(1) action per round. Now each round's pairs are local-checkpointed
+    and materialized ONCE (by the have_k count that the loop needs anyway),
+    the unsatisfied count is tracked arithmetically (n_rem -= satisfied; no
     extra action), remaining is persisted per round with the previous
     round's cache released once its successor is materialized, and the
-    final union reads the cached pairs (InMemoryTableScan — pinned by
-    test_round3_fixes). Round caches stay referenced by the returned plan;
-    the ContextCleaner frees them when the caller drops it.
+    final union reads the checkpointed pairs (Scan ExistingRDD — pinned by
+    test_round3_fixes). The returned plan references only the round
+    checkpoints, which hold no CacheManager entry; the ContextCleaner frees
+    them when the caller drops it.
     """
     from ..functions import geo
     from ..functions.cells import CellGrid
@@ -142,13 +143,13 @@ def knn_unbounded(primary: DataFrame, secondary: DataFrame, k: int,
                 F.element_at("xs", 1), F.element_at("ys", 1),
             ),
         ).filter(F.col("dist") <= F.lit(radius)).select(p_key, s_key, "dist")
-        pairs = pairs.persist()
+        pairs = pairs.localCheckpoint(eager=False)
         round_pairs.append(pairs)
         have_k = (
             pairs.groupBy(p_key).count().filter(F.col("count") >= k).select(p_key)
         )
         n_sat = have_k.count()  # the ONE action per round: materializes this
-        # round's pairs cache and (en route) this round's remaining cache
+        # round's pairs checkpoint and (en route) this round's remaining cache
         n_rem -= n_sat
         # remaining (round-i input) is now materialized, so the cache it was
         # derived from (round i-1's remaining) can be released — no future
@@ -160,8 +161,8 @@ def knn_unbounded(primary: DataFrame, secondary: DataFrame, k: int,
         remaining = remaining.join(have_k, p_key, "left_anti").persist()
         rem_handles.append(remaining)
         radius *= growth
-    # the returned plan references only the pairs caches; remaining caches
-    # served their purpose once the last round's pairs materialized
+    # the returned plan references only the pairs checkpoints; remaining
+    # caches served their purpose once the last round's pairs materialized
     for h in rem_handles:
         h.unpersist()
     if not round_pairs:

@@ -188,9 +188,14 @@ def _building_sql(shifted: bool, alias: str) -> str:
 
 
 def _building_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # part.parquet can be a single row group (it is at sf0.1, 20k rows and
+    # 2.3M candidate pairs), and the broadcast cell join streams the A side
+    # in its scan partitions: spread the A rows over the cores so the join
+    # and the per-pair area UDF do not run in one task
+    a = _building_layer(spark, sf_dir, shifted=False).repartition(
+        spark.sparkContext.defaultParallelism)
     return cell_join.overlap_pairs(
-        _building_layer(spark, sf_dir, shifted=False),
-        _building_layer(spark, sf_dir, shifted=True), "bld_id", BLD_GRID,
+        a, _building_layer(spark, sf_dir, shifted=True), "bld_id", BLD_GRID,
     )
 
 

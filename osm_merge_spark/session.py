@@ -45,6 +45,13 @@ _DEFAULT_CONF = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # No per-call call-site capture: with it on, every wrapped PySpark
+    # DataFrame/Column function walks the Python stack and sends it over
+    # py4j (about 4 extra round trips a call; conflate() makes ~5,300 round
+    # trips building its plan). The cost is that DataFrame error messages
+    # no longer name the Python line that built the failing expression.
+    # PySpark reads it once per process, so it must be set at session start.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -138,7 +138,7 @@ def main() -> int:
         i = args.index("--sf")
         sf = args[i + 1]
         del args[i : i + 2]
-    spark = get_spark("plan-audit", master="local[8]")
+    spark = get_spark("plan-audit")
     qs = contract.queries()
     names = args or sorted(qs)
     flagged = 0

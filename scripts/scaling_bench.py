@@ -108,7 +108,7 @@ def _synth_input(n: int, path: str) -> None:
     from osm_merge_spark.data.synth import synth_images, synth_layer
     from osm_merge_spark.session import get_spark
 
-    spark = get_spark("scaling-synth", master="local[32]")
+    spark = get_spark("scaling-synth")
     spark.sparkContext.setLogLevel("ERROR")
     synth_images(spark, n).write.mode("overwrite").parquet(f"{path}/images")
     synth_layer(spark, n).write.mode("overwrite").parquet(f"{path}/layer")

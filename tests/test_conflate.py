@@ -209,6 +209,48 @@ def test_match_and_version_semantics(spark):
     assert len(m) + len(n) == 100
 
 
+def test_outputs_share_one_pairs_checkpoint(spark):
+    """matched and new read one local checkpoint of the refined pairs:
+    once both ran, new's executed plan holds no cell join (its `__jcell`
+    key) and no broadcast of the layer side, and the call left nothing in
+    the CacheManager (a persist() would)."""
+    # earlier tests in the shared session leave their own caches behind
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    matched, new = conflate(synth.synth_images(spark, N_IMAGES),
+                            synth.synth_layer(spark, N_IMAGES), PARAMS)
+    n_matched, n_new = len(matched.collect()), len(new.collect())
+    assert n_matched + n_new == N_IMAGES and n_matched and n_new
+    plan = new._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "__jcell" not in plan and "BroadcastHashJoin" not in plan, plan
+    assert cache.isEmpty()
+
+
+def test_second_call_reads_rewritten_images(spark, tmp_path):
+    """A call over the same parquet path after another writer replaced its
+    files sees the new rows: nothing from the first call's pairs is reused.
+    (A Spark write to the path would refresh any cache over it; a write
+    from outside Spark does not, so a persisted plan would serve the old
+    pairs.)"""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "images"
+    path.mkdir()
+    images = synth.synth_images(spark, N_IMAGES).toArrow()
+    layer = synth.synth_layer(spark, N_IMAGES)
+    pq.write_table(images, path / "part-0.parquet")
+    matched, new = conflate(spark.read.parquet(str(path)), layer, PARAMS)
+    assert matched.count() > 0 and new.count() < N_IMAGES
+    # every image moves ~110 km north, away from every layer feature
+    lat = images.schema.get_field_index("lat")
+    pq.write_table(images.set_column(lat, "lat", pc.add(images["lat"], 1.0)),
+                   path / "part-0.parquet")
+    matched, new = conflate(spark.read.parquet(str(path)), layer, PARAMS)
+    assert matched.count() == 0 and new.count() == N_IMAGES
+
+
 def test_suppress_identical_props(spark):
     """U2: a match whose incoming tags are already a subset of the existing
     feature's tags is suppressed (nothing to edit)."""

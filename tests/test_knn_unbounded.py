@@ -21,8 +21,14 @@ def test_knn_unbounded_matches_bruteforce(spark):
         "feature_id", "xs", "ys"
     )
     k = 3
+    # earlier tests in the shared session leave their own caches behind
+    spark.catalog.clearCache()
     got = knn_unbounded(primary, layer, k=k, initial_radius_m=50.0)
     gm = {(r.image_id, r.rank): r.feature_id for r in got.collect()}
+    # rounds are local checkpoints and the remaining caches are released:
+    # the call leaves no CacheManager entry to leak or to serve a later
+    # call stale pairs
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     # brute force oracle
     prim = primary.collect()

@@ -23,20 +23,31 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_conflate_plan_has_no_window_or_smj(spark):
+def _synth_conflate(spark):
+    """(matched, new, refined-pairs plan) over one synthetic input.
+    conflate() checkpoints refined_pairs(), so the outputs' plans read the
+    pairs as a scan; the cell join and refine guards run on the pairs plan
+    built from the same inputs."""
     from osm_merge_spark.data.synth import synth_images, synth_layer
-    from osm_merge_spark.operators.conflate import ConflateParams, conflate
+    from osm_merge_spark.operators.conflate import (
+        ConflateParams, conflate, refined_pairs)
 
     images = synth_images(spark, 2000)
     layer = synth_layer(spark, 2000)
-    matched, _ = conflate(images, layer, ConflateParams())
+    matched, new = conflate(images, layer, ConflateParams())
+    return matched, new, _plan(refined_pairs(images, layer, ConflateParams()))
+
+
+def test_conflate_plan_has_no_window_or_smj(spark):
+    matched, _, refined_plan = _synth_conflate(spark)
     plan = _plan(matched)
 
     # the top-5 cap and best-candidate must be aggregations, not windows
     assert "Window" not in plan
     # shuffled-hash fallback engine-wide: SMJ would sort the ring-exploded
     # probe side (the n=8M regression)
-    assert "SortMergeJoin" not in plan
+    for pl in (plan, refined_plan):
+        assert "SortMergeJoin" not in pl
     # the cap must be the ObjectHashAggregate (collect_list) formulation
     assert "ObjectHashAggregate" in plan
     # scalar math (haversine/bbox) in a BHJ condition is fine — it runs
@@ -44,7 +55,8 @@ def test_conflate_plan_has_no_window_or_smj(spark):
     # INTERPRETED higher-order refine (transform/aggregate lambdas over
     # the geometry arrays) being dragged into a join condition, which
     # re-projects whole arrays per candidate (the n=8M incident).
-    for line in plan.splitlines():
+    assert "__jcell" in refined_plan  # the cell join is in this plan
+    for line in (plan + refined_plan).splitlines():
         if "Join" in line:
             assert "lambdafunction" not in line, line[:200]
 
@@ -52,21 +64,18 @@ def test_conflate_plan_has_no_window_or_smj(spark):
 def test_multipart_conflate_plan_shape(spark):
     """Layer rows split into parts; the best-part min rides inside the
     per-image top-5 cap, and every (image, part) pair leaves the cell join
-    once: no aggregate in matched or new is keyed on pair ids, and matched
+    once: no aggregate in matched, new or the refined pairs is keyed on pair
+    ids, and matched
     has at most 3 hash exchanges. `new` is the refined pairs' anti-join, so its
     plan carries no scoring UDF, cap or winner pick."""
-    from osm_merge_spark.data.synth import synth_images, synth_layer
-    from osm_merge_spark.operators.conflate import ConflateParams, conflate
-
-    images = synth_images(spark, 2000)
-    layer = synth_layer(spark, 2000)
-    matched, new = conflate(images, layer, ConflateParams())
+    matched, new, refined_plan = _synth_conflate(spark)
     plan = _plan(matched)
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3
     new_plan = _plan(new)
     agg_keys = [
         set(re.sub(r"#\d+L?", "", k).split(", "))
-        for k in re.findall(r"Aggregate\(keys?=\[([^\]]*)\]", plan + new_plan)
+        for k in re.findall(r"Aggregate\(keys?=\[([^\]]*)\]",
+                            plan + new_plan + refined_plan)
     ]
     assert {"image_id"} in agg_keys, agg_keys  # the cap and the winner pick
     assert not any({"image_id", "feature_id"} <= k for k in agg_keys), agg_keys
@@ -74,7 +83,8 @@ def test_multipart_conflate_plan_shape(spark):
         assert op not in new_plan, op
     # lines refine per exploded segment: no interpreted higher-order
     # function and no eval_once barrier (`__pt`) runs per candidate pair
-    for pl in (plan, new_plan):
+    assert "__jcell" in refined_plan  # the cell join is in this plan
+    for pl in (plan, new_plan, refined_plan):
         assert not pair_hof(pl)
         nodes = plan_nodes(pl)
         assert not any(n["name"] == "Generate" and "__pt" in n["text"]
@@ -127,20 +137,19 @@ def test_pair_dedup_finds_a_dedup_over_the_cell_join():
 
 
 def test_pair_hof_finds_a_polyline_refine_over_the_cell_join(spark):
-    """The plan audit's PAIR-HOF detector on conflate's `new`: it fires on
-    the per-polyline refine (refine_distance's transform/array_min over
-    each candidate pair's arrays) and not on conflate()'s per-segment
-    refine."""
+    """The plan audit's PAIR-HOF detector on the refined pairs conflate()
+    checkpoints: it fires on the per-polyline refine (refine_distance's
+    transform/array_min over each candidate pair's arrays) and not on
+    conflate()'s per-segment refine."""
     from osm_merge_spark.data.synth import synth_images, synth_layer
     from osm_merge_spark.functions.cells import CellGrid
     from osm_merge_spark.operators import cell_join
     from osm_merge_spark.operators.conflate import (
-        ConflateParams, conflate, new_features, prepare_images, refine_distance)
+        ConflateParams, new_features, prepare_images, refine_distance, refined_pairs)
 
     images, layer = synth_images(spark, 2000), synth_layer(spark, 2000)
     prm = ConflateParams()
-    _, new = conflate(images, layer, prm)
-    assert not pair_hof(_plan(new))
+    assert not pair_hof(_plan(refined_pairs(images, layer, prm)))
 
     grid = CellGrid.for_radius(prm.threshold_m * 1.05, max_abs_lat=70.0)
     p = prepare_images(images)

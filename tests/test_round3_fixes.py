@@ -2,7 +2,7 @@
 
   - phash_near_dup exact recall vs brute-force hamming (VERDICT #2),
     including NEGATIVE int64 phashes (real 64-bit hashes stored signed),
-  - knn_unbounded per-round persistence: results unchanged, no take(1)
+  - knn_unbounded per-round checkpoints: results unchanged, no take(1)
     action per round (VERDICT #5),
   - streaming dedup state TTL (VERDICT #6) — in test_streaming.py,
   - line-intersects AOI clip (VERDICT #4) — planted crossing ways with
@@ -62,8 +62,9 @@ def test_phash_near_dup_matches_brute_force(spark):
 
 
 # ---------------------------------------------------------------------------
-# knn_unbounded: per-round persistence — the final plan must read cached
-# rounds (InMemoryTableScan), not rebuild round i-1's join under round i
+# knn_unbounded: per-round checkpoints — the final plan must read the
+# materialized rounds (Scan ExistingRDD of each round's local checkpoint),
+# not rebuild round i-1's join under round i
 # ---------------------------------------------------------------------------
 def test_knn_unbounded_reads_cached_rounds(spark):
     from osm_merge_spark.data.synth import synth_images, synth_layer
@@ -76,12 +77,12 @@ def test_knn_unbounded_reads_cached_rounds(spark):
     )
     got = knn_unbounded(primary, layer, k=3, initial_radius_m=50.0)
     plan = got._jdf.queryExecution().executedPlan().toString()
-    # every expansion round is served from its materialized cache
-    assert "InMemoryTableScan" in plan
-    # the union of rounds contributes NO join re-execution: the only joins
-    # left in the final plan are inside stages ABOVE the caches (none —
-    # dedup + window are aggregations)
-    assert "Join" not in plan.split("InMemoryTableScan")[0]
+    # every expansion round is served from its materialized checkpoint
+    assert "Scan ExistingRDD" in plan
+    # the union of rounds contributes NO join re-execution: a checkpoint
+    # carries no plan below it, and above the checkpoints are only
+    # aggregations (dedup + window)
+    assert "Join" not in plan
 
 
 # ---------------------------------------------------------------------------
